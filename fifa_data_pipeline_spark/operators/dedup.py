@@ -58,31 +58,6 @@ def exact_dedup(df: DataFrame, on: list[str], id_col: str) -> DataFrame:
 # MinHash + banded LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(
-    text_col: str, n_hashes: int = 32, k: int = 3
-) -> Column:
-    """MinHash signature as an array<bigint> column: slot i is
-    ``min(xxhash64(shingle, seed=i))`` over the doc's distinct word
-    k-gram shingles. Pure per-row expression — no shuffle.
-
-    NOTE: as a single expression the shingle subtree gets inlined
-    once per slot (CollapseProject duplicates it), so for bulk
-    signature computation prefer ``minhash_signatures`` below — the
-    explode + 32-way min hash-aggregate form, which evaluates
-    shingles once per doc and lets the partial aggregate run
-    map-side. This Column form is kept for inline/one-off use."""
-    sh = shingles(text_col, k)
-
-    def hasher(seed: int):
-        # single-param lambda: a 2-param lambda would make Spark pass
-        # the array INDEX as the 2nd arg, silently overriding the seed
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, hasher(i))) for i in range(n_hashes)]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -276,44 +251,6 @@ def near_dedup_minhash(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_signature(text_col: str = "text") -> Column:
-    """Charikar-style 64-bit SimHash over whitespace tokens (with
-    multiplicity), again as a pure per-row expression: accumulate a
-    64-wide ±1 counter array with ``aggregate`` + ``zip_with``, then
-    fold the sign bits into one BIGINT. Tokens are hashed ONCE up
-    front (``transform`` to a long array) — HOF lambda bodies get no
-    CSE, so hashing inside the per-bit contribution would re-hash
-    every token 64 times (the same binding rule as
-    ``text.position_gram_hashes``)."""
-    toks = tokens(text_col)
-
-    def bit_contrib(h, j: int):
-        bit_set = F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1
-        return F.when(bit_set, F.lit(1)).otherwise(F.lit(-1)).cast("long")
-
-    counters = F.aggregate(
-        F.transform(toks, lambda t: F.xxhash64(t)),
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[bit_contrib(h, j) for j in range(64)]),
-            lambda a, b: a + b,
-        ),
-    )
-    sim = F.lit(0).cast("long")
-    for j in range(64):
-        sim = sim + F.when(
-            F.element_at(counters, j + 1) > 0, F.lit(_bit_value(j)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return sim
-
-
-def _bit_value(j: int) -> int:
-    # Bit 63 is the two's-complement sign bit: setting it means
-    # adding -2^63, not +2^63 (which would overflow a signed long).
-    return (1 << j) if j < 63 else -(1 << 63)
-
-
 def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -502,84 +439,35 @@ def fuzzy_name_pairs(
 # Connected components (dedup-group closure)
 # ---------------------------------------------------------------------------
 
+# Round cap of :func:`connected_components`. Star contraction needs
+# O(log n) rounds on any topology (a 1000-node chain takes 11, a
+# 5000-node one 14), so the cap sits far above what dedup graphs need.
+CC_MAX_ROUNDS = 30
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
-    """Connected components over an undirected pair set via min-label
-    propagation: every node converges to the smallest id reachable
-    from it. Returns (node, component).
+    """Connected components over an undirected pair set via
+    alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014).
+    Returns ``(node, label)``: every node that appears in a pair,
+    labelled with the smallest id in its component. Self-loop pairs
+    ``(x, x)`` are dropped, so a node seen only in one is absent from
+    the result (no caller produces them: every pair source emits
+    ``a < b``).
 
-    Each round is one distributed join + min-aggregate; rounds needed
-    = graph diameter (dedup-pair graphs are shallow — near-dup
-    clusters are cliques or short chains, so 2-4 rounds typical).
-    ``localCheckpoint`` truncates the lineage each round so the plan
-    doesn't grow exponentially across iterations; the convergence
-    probe is a LIMIT 1 count (stops at the first changed row). For
-    web-scale graphs with long chains, use
-    :func:`connected_components_star` (Kiveris et al.
-    large-star/small-star contraction — O(log n) rounds on any
-    topology, equivalence-tested against this form)."""
-    edges = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
-        # checkpointed: edges are read EVERY round, and the upstream
-        # pair pipeline (often a full LSH candidate generation) must
-        # not re-run per iteration
-        .transform(pin("dedup"))
-    )
-    labels = (
-        edges.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .transform(pin("dedup", eager=True))
-    )
-    for _ in range(max_iter):
-        prop = edges.join(
-            labels, edges["d"] == labels["node"]
-        ).select(F.col("s").alias("node"), F.col("label"))
-        new_labels = (
-            labels.union(prop).groupBy("node").agg(F.min("label").alias("label"))
-        ).transform(pin("dedup", eager=True))
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the web-scale alternative to
-    :func:`connected_components`' min-label propagation: label
-    propagation needs O(diameter) rounds and keeps the full edge set
-    alive every round, while star contraction converges in
-    O(log n) rounds on ANY topology and monotonically shrinks the
-    edge set toward one star per component. Same contract: returns
-    ``(node, component)`` with component = the minimum id reachable.
-
-    Each round is two grouped-min + join passes over the current
-    edge set (shuffle key = node id), with a per-round
-    ``localCheckpoint`` and an O(1)-row convergence probe (count +
-    order-free hash fold of the canonical edge set). Use this form
-    when dedup graphs stop being shallow — long chains (repeated
-    boilerplate linking thousands of docs pairwise) or
-    billion-node corpora."""
+    Star contraction converges in O(log n) rounds on any topology —
+    long chains included — and monotonically shrinks the edge set
+    toward one star per component. Each round is two grouped-min +
+    join passes over the current edge set (shuffle key = node id),
+    with a per-round ``localCheckpoint`` and an O(1)-row convergence
+    probe (count + order-free hash fold of the canonical edge set).
+    Raises ``RuntimeError`` if the edge set has not stopped changing
+    after ``CC_MAX_ROUNDS`` rounds, rather than return partial
+    labels."""
     # canonical undirected edges (lo, hi), self-loops dropped
     e = (
         pairs.select(
@@ -587,12 +475,6 @@ def connected_components_star(
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
         )
         .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .transform(pin("dedup"))
-    )
-    nodes = (
-        e.select(F.col("lo").alias("node"))
-        .union(e.select(F.col("hi").alias("node")))
         .distinct()
         .transform(pin("dedup"))
     )
@@ -611,7 +493,7 @@ def connected_components_star(
         ).filter(F.col("lo") != F.col("hi")).distinct()
 
     sig = _sig(e)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # large-star: for every node u (symmetric view), attach each
         # STRICTLY LARGER neighbor to m(u) = min(neighborhood ∪ u)
         sym = e.select(
@@ -640,15 +522,19 @@ def connected_components_star(
         if new_sig == sig:
             break
         sig = new_sig
-    # converged: every edge links a node to its component minimum
-    labels = e.select(
-        F.col("hi").alias("node"), F.col("lo").alias("label")
-    ).groupBy("node").agg(F.min("label").alias("label"))
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            "node", F.coalesce("label", F.col("node")).alias("label")
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"CC_MAX_ROUNDS={CC_MAX_ROUNDS} rounds"
         )
+    # converged: one star per component, centered at its minimum. Both
+    # star steps keep every node on some edge, so the edges cover all
+    # nodes of the input pairs.
+    return (
+        e.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
+        .union(e.select(F.col("lo").alias("node"), F.col("lo").alias("label")))
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
     )
 
 

@@ -130,34 +130,14 @@ def q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id < 200, the q_ngram_jaccard pair set): every doc labeled
     with the smallest doc_id in its near-dup component — proper
     transitive closure (a-b-c chains collapse to a), vs the greedy
-    per-pair drop. Pairs are engine-reproducible, so the min-label
-    propagation loop is oracle-checked against a DuckDB recursive
-    CTE."""
+    per-pair drop. Pairs are engine-reproducible, so the star-
+    contraction loop (``dedup.connected_components``) is
+    oracle-checked against a DuckDB recursive CTE."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     pairs = D.all_pairs_jaccard(
         docs, "doc_id", "text", k=3, threshold=0.5
     ).select("id_a", "id_b")
     cc = D.connected_components(pairs)
-    return docs.select("doc_id").join(
-        cc, docs["doc_id"] == cc["node"], "left"
-    ).select(
-        "doc_id", F.coalesce("label", "doc_id").alias("component")
-    )
-
-
-def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same transitive-closure labeling as q_dedup_cc, computed
-    by the Kiveris large-star/small-star contraction
-    (``dedup.connected_components_star``) instead of min-label
-    propagation — O(log n) rounds on any topology vs O(diameter),
-    the form a billion-node dedup graph needs. Shares q_dedup_cc's
-    DuckDB recursive-CTE oracle: both must produce the identical
-    component minima."""
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    pairs = D.all_pairs_jaccard(
-        docs, "doc_id", "text", k=3, threshold=0.5
-    ).select("id_a", "id_b")
-    cc = D.connected_components_star(pairs)
     return docs.select("doc_id").join(
         cc, docs["doc_id"] == cc["node"], "left"
     ).select(
@@ -400,7 +380,6 @@ QUERIES = {
     "q_simhash_pairs": q_simhash_pairs,
     "q_near_dedup": q_near_dedup,
     "q_dedup_cc": q_dedup_cc,
-    "q_dedup_cc_star": q_dedup_cc_star,
     "q_zscore": q_zscore,
     "q_knn_pandas": q_knn_pandas,
     "q_embed_near_dup": q_embed_near_dup,
@@ -823,6 +802,3 @@ ORACLES["q_frame_sample"] = f"""
                CAST({_BYTESUM.format(c='chunk')} % 997 AS BIGINT) AS frame_checksum
         FROM c
 """
-
-# Star contraction must land on the identical component minima.
-ORACLES["q_dedup_cc_star"] = ORACLES["q_dedup_cc"]

@@ -926,10 +926,10 @@ def stream_near_dedup(
             )
             .distinct()
         )
-        # min-label propagation: each node's label converges to the
-        # min reachable id, so component winners are node == label;
-        # isolated docs never appear in the edge set and win by
-        # default (anti-join against the losers)
+        # each node is labelled with the min id of its component, so
+        # component winners are node == label; isolated docs never
+        # appear in the edge set and win by default (anti-join
+        # against the losers)
         comp = connected_components(pairs, "src", "dst")
         losers = comp.filter(F.col("node") != F.col("label")).select(
             F.col("node").alias("doc_id")

@@ -4,6 +4,7 @@ algorithmic behavior — recall on planted near-dups, determinism)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators import dedup as D
@@ -59,7 +60,7 @@ def test_minhash_finds_planted_near_dup(spark):
 
 def test_minhash_deterministic(spark):
     df = _docs(spark, [(1, NEAR_DUP_A), (2, NEAR_DUP_B), (3, DISTINCT_C)])
-    sig = df.select(D.minhash_signature("text").alias("s"))
+    sig = D.minhash_signatures(df)
     a = sig.collect()
     b = sig.collect()
     assert a == b
@@ -432,11 +433,27 @@ def test_trim_repeated_spans_overlapping_spans_merge(spark):
     assert rows[2].cleaned_text == "pre1 pre2"
 
 
+def _propagated_labels(pairs):
+    """Reference closure: min-label propagation run to a fixed point,
+    node -> smallest id in its component."""
+    label = {x: x for edge in pairs for x in edge}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in pairs:
+            low = min(label[a], label[b])
+            if label[a] != low or label[b] != low:
+                label[a] = label[b] = low
+                changed = True
+    return set(label.items())
+
+
 def test_star_components_match_label_propagation(spark):
-    """connected_components_star (Kiveris alternating star rounds)
-    produces the identical (node, component-min) mapping as min-label
-    propagation on random graphs, chains (worst case for
-    propagation), cliques, and singleton edges."""
+    """connected_components (Kiveris alternating star rounds) produces
+    the identical (node, component-min) mapping as min-label
+    propagation run to a fixed point, on random graphs, chains (the
+    long one is what a diameter-bound loop gets wrong), and bridged
+    cliques."""
     import random
 
     rng = random.Random(7)
@@ -448,8 +465,9 @@ def test_star_components_match_label_propagation(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(70)
         ]
         cases.append([(a, b) for a, b in edges if a != b])
-    # a long chain: diameter = n (propagation needs many rounds)
-    cases.append([(i, i + 1) for i in range(50)])
+    # long chains: diameter = n - 1
+    cases.append([(i, i + 1) for i in range(49)])
+    cases.append([(i, i + 1) for i in range(999)])
     # two cliques bridged by one edge
     k = list(range(5)), list(range(10, 15))
     cases.append(
@@ -458,21 +476,26 @@ def test_star_components_match_label_propagation(spark):
         + [(4, 10)]
     )
     for pairs in cases:
-        df = spark.createDataFrame(pairs, ["id_a", "id_b"])
-        prop = {
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = {
             (r.node, r.label)
-            for r in D.connected_components(df, max_iter=60).collect()
+            for r in D.connected_components(df).collect()
         }
-        star = {
-            (r.node, r.label)
-            for r in D.connected_components_star(df).collect()
-        }
-        assert star == prop and star
+        assert got == _propagated_labels(pairs) and got
 
 
 def test_star_components_empty_input(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
-    assert D.connected_components_star(df).count() == 0
+    assert D.connected_components(df).count() == 0
+
+
+def test_connected_components_raises_at_round_cap(spark, monkeypatch):
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="CC_MAX_ROUNDS=1"):
+        D.connected_components(df)
 
 
 def test_token_counts_size_adaptive_branches_equal(spark):

@@ -38,6 +38,11 @@ def run_subset(tree: str, sf: str, names: list[str], env: dict) -> dict:
         cmd, cwd=tree, capture_output=True, text=True,
         env={**os.environ, **env},
     )
+    if proc.returncode != 0:
+        raise RuntimeError(
+            f"bench_subset exited {proc.returncode} in {tree}; "
+            f"stderr tail:\n{proc.stderr[-2000:]}"
+        )
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     if not line:
         print(proc.stdout[-2000:], file=sys.stderr)
