@@ -104,23 +104,10 @@ def _reject_float_keys(
         )
 
 
-#: Size switch for :func:`field_u_probabilities` — below this many
-#: UNCOMPRESSED input bytes the per-field form's many tiny concurrent
-#: scans beat the fused explode (measured at sf0.1: 2.55 vs 2.78 s
-#: min interleaved); at/above it — and whenever the size is unknown
-#: (``None`` = assume scale) — the fused ONE-pass-per-side form wins
-#: (sf1: 3.32 vs 3.42 s, and the gap grows with data since it is a
-#: 2K+2 → 1 scans-per-side reduction). Same convention as
-#: ``text.ARROW_TOKENIZE_MIN_BYTES``.
-FUSED_U_MIN_BYTES = 8 * 1024 * 1024
-
-
 def field_u_probabilities(
     a: DataFrame,
     b: DataFrame,
     cols: list[str],
-    *,
-    input_bytes: int | None = None,
 ) -> DataFrame:
     """All K fields' exact u-probabilities in ONE pass per side —
     one row ``(__u_<col>, ...)`` with the identical arithmetic of
@@ -135,14 +122,8 @@ def field_u_probabilities(
     sentinel arm per record carrying the side's row count, so ONE
     hash aggregate per side yields every field's value counts AND
     the side total; one join + one K-row aggregate then folds every
-    numerator.
-
-    Size-adaptive (``input_bytes`` = uncompressed bytes of the
-    larger side, footer-probed by callers; ``None`` = assume scale):
-    below :data:`FUSED_U_MIN_BYTES` the per-field scans all run
-    concurrently inside one job and beat the explode's bigger
-    stages, so tiny inputs keep that plan — both branches are
-    value-identical (pinned by a unit test).
+    numerator. One plan at every input size; it is value-identical
+    to the per-field form (pinned by a unit test).
     :func:`fs_pattern_report` no longer calls this at all (r12): it
     derives every u from its own masked aggregates, zero extra
     scans; this fused form remains the scan-minimal u-pass for
@@ -154,18 +135,9 @@ def field_u_probabilities(
     counts per native value). Totals NA/NB come from the sentinel
     rows and multiply in DOUBLE, exactly like the per-field form
     (no NA·NB BIGINT overflow at 10⁹-row sides)."""
-    if input_bytes is not None and input_bytes < FUSED_U_MIN_BYTES:
-        ua = None
-        for c in cols:
-            u1 = field_u_probability(a, b, c).select(
-                F.col("u").alias(f"__u_{c}")
-            )
-            ua = u1 if ua is None else ua.crossJoin(u1)
-        return ua
-
-    # The fused form joins on CAST(value AS STRING); the per-field
-    # branch above joins native values — enforce the injectivity
-    # contract before the two can diverge (r11 ADVICE).
+    # The fused form joins on CAST(value AS STRING), while
+    # field_u_probability joins native values — enforce the
+    # injectivity contract before the two can diverge (r11 ADVICE).
     _reject_float_keys(a, b, cols, "field_u_probabilities")
 
     def ex(df: DataFrame) -> DataFrame:
@@ -231,25 +203,21 @@ def fs_link(
     fields: list[tuple[str, float]],
     lower: float = 0.0,
     upper: float = 4.0,
-    input_bytes: int | None = None,
 ) -> DataFrame:
     """Fellegi–Sunter linkage of ``a`` × ``b``.
 
     ``fields`` is ``[(column, m), ...]`` — columns present in BOTH
     frames (caller normalizes beforehand), compared for equality,
     with the caller's m-probability. u-probabilities are estimated
-    exactly per field (:func:`field_u_probability`) and ride along
+    exactly per field (:func:`field_u_probabilities`) and ride along
     as a one-row broadcast. Returns one row per blocked candidate
     pair: both ids, each field's agreement flag, the total ln-weight
     (6 dp), and the three-way ``decision``
     (match / possible / non_match).
     """
-    # All u-probabilities in one pass per side at scale (r11) — the
-    # per-field loop re-scanned each side 2K+2 times; see
-    # :func:`field_u_probabilities` for the size switch.
-    ua = field_u_probabilities(
-        a, b, [c for c, _ in fields], input_bytes=input_bytes
-    )
+    # All u-probabilities in one pass per side (r11) — a per-field
+    # loop re-scans each side 2K+2 times.
+    ua = field_u_probabilities(a, b, [c for c, _ in fields])
     pa = a.select(
         F.col(id_a).alias("__ida"),
         F.col(block_col).alias("__blk"),
@@ -302,7 +270,6 @@ def fs_pattern_report(
     fields: list[tuple[str, float]],
     lower: float = 0.0,
     upper: float = 4.0,
-    input_bytes: int | None = None,
 ) -> DataFrame:
     """Fellegi–Sunter linkage QUALITY REPORT — the decision ×
     agreement-pattern grain of :func:`fs_link`, computed WITHOUT ever
@@ -355,17 +322,13 @@ def fs_pattern_report(
     not contain control chars — true for every table here).
     ``fields`` values must be NUL-free strings/numerics; k ≤ ~20
     (the lattice is 2^k).
-
-    ``input_bytes`` is accepted for API compatibility and ignored
-    since r12 — there is no separate u-pass left to size-switch.
     """
-    del input_bytes  # no separate u-pass since r12; see docstring
     cols = [c for c, _ in fields]
     k = len(cols)
     spark = a.sparkSession
-    # Singleton-mask keys are CAST(value AS STRING) — same contract
-    # as the fused u-pass (r11 ADVICE): refuse float fields.
-    _reject_float_keys(a, b, cols, "fs_pattern_report")
+    # Singleton-mask keys and blocks are CAST(value AS STRING) — same
+    # contract as the fused u-pass (r11 ADVICE): refuse float fields.
+    _reject_float_keys(a, b, cols + [block_col], "fs_pattern_report")
 
     # Mask-id layout of the ONE exploded grain per side:
     #   m in [0, 2^k)      — lattice arms: per-(block, value-tuple)

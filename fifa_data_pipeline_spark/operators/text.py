@@ -294,10 +294,9 @@ def token_counts(
     (:func:`token_counts_arrow`) at scale — the default — or the
     bit-identical JVM column expressions below
     ``ARROW_TOKENIZE_MIN_BYTES`` (tiny inputs shouldn't pay Python
-    interop; same switch pattern as ``dedup.all_pairs_jaccard``).
-    Both branches drop ``text_col`` and append the same BIGINT
-    columns; equality is pinned by a unit test that runs both on the
-    same frame."""
+    interop). Both branches drop ``text_col`` and append the same
+    BIGINT columns; equality is pinned by a unit test that runs both
+    on the same frame."""
     if _use_arrow(input_bytes):
         return token_counts_arrow(
             df,

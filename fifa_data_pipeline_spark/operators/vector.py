@@ -739,16 +739,6 @@ def knn_bruteforce_pandas(
     )
 
 
-def l2_normalize(vec_col: Column | str) -> Column:
-    """Unit-normalize an embedding column (double precision). The
-    standard pre-step before cosine retrieval / clustering: once
-    normalized, cosine is a plain dot product and downstream ops can
-    skip per-pair norms entirely."""
-    v = _as_double(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
-    n = F.sqrt(dot(v, v))
-    return F.transform(v, lambda x: x / n)
-
-
 def label_centroids(
     df: DataFrame,
     label_col: str = "label",

@@ -205,9 +205,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     not its first). One window over the component key computes both
     the winner and the member count."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # size-adaptive pair generation (dedup.all_pairs_jaccard):
-    # brute-force n² below ~1K docs (measured faster there), lossless
-    # prefix-filter AllPairs above — identical pair set either way
+    # bounded input → brute-force all_pairs_jaccard (measured faster
+    # here than the prefix join, which unbounded corpora use)
     pairs = D.all_pairs_jaccard(
         docs, "doc_id", "text", k=3, threshold=0.5
     ).select("id_a", "id_b")

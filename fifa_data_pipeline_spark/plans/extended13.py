@@ -166,7 +166,11 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     row totals folded in via a window-free share division)."""
     from fifa_data_pipeline_spark.operators.text import lang_id
 
-    docs = read_table(spark, sf_dir, "documents")
+    # NULL lang rows are dropped, as the DuckDB twin's inner join on
+    # lang drops them (NULL never equals NULL).
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("lang").isNotNull()
+    )
     guessed = lang_id(docs)
     cells = guessed.groupBy("lang", "lang_guess").agg(
         F.count(F.lit(1)).alias("n")
@@ -178,8 +182,8 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse: the branches prune different columns and never
     # canonicalize equal). A window SUM over the |lang|×|guess|-sized
     # cells computes the identical LONG total with one cells-sized
-    # exchange and ONE corpus pass. Same rows (the inner join on
-    # lang always matched), same values.
+    # exchange and ONE corpus pass. Same rows (the inner join on a
+    # non-NULL lang always matched), same values.
     from pyspark.sql import Window
 
     w = Window.partitionBy("lang")

@@ -78,9 +78,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs 3-gram Jaccard ≥ 0.5 over a bounded id range —
     the oracle-checkable exact counterpart of the LSH pipeline."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # size-adaptive: brute force at this bounded scale, lossless
-    # prefix-filter AllPairs above the crossover — the scale-safe
-    # path is the code, not a comment (VERDICT r3)
+    # bounded input → brute-force all_pairs_jaccard; unbounded
+    # corpora use the lossless prefix join (q_jaccard_prefix)
     return D.all_pairs_jaccard(docs, "doc_id", "text", k=3, threshold=0.5)
 
 

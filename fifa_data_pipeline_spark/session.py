@@ -118,6 +118,11 @@ def get_spark(
     # Caller-passed extra_conf still wins (applied last).
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if kv.strip():
+            if "=" not in kv:
+                raise ValueError(
+                    f"SPARK_GRAFT_EXTRA_CONF: segment {kv.strip()!r} is"
+                    " not a key=value pair"
+                )
             k, v = kv.split("=", 1)
             builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():

@@ -237,12 +237,6 @@ def footer_minmax_int(path: str, col: str) -> tuple | None:
     return out
 
 
-def footer_max_int(path: str, col: str) -> int | None:
-    """MAX-only view of :func:`footer_minmax_int`."""
-    mm = footer_minmax_int(path, col)
-    return None if mm is None else mm[1]
-
-
 def footer_minmax_micros(path: str, col: str) -> tuple | None:
     """(MIN, MAX) of a timestamp column as EPOCH MICROSECONDS, from
     parquet footer statistics only (r11) — the zero-job bounds probe

@@ -351,3 +351,26 @@ def test_textrank_scores_are_centrality(spark, sf_dir):
     }
     overlap = sum(1 for r in out if r["token"] in top_freq)
     assert overlap >= 15  # centrality tracks (but isn't identical to) frequency
+
+
+def test_lang_confusion_drops_null_lang(spark, tmp_path):
+    """A NULL declared lang has no row in the DuckDB twin (its inner
+    join on lang drops it); the Spark plan must drop it too."""
+    from fifa_data_pipeline_spark.plans.extended13 import q_lang_confusion
+
+    spark.createDataFrame(
+        [
+            (1, "the cat and the dog", "en"),
+            (2, "zzz qqq", "en"),
+            (3, "the end of it", None),
+            (4, "lorem ipsum", "de"),
+        ],
+        "doc_id long, text string, lang string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    rows = q_lang_confusion(spark, str(tmp_path)).collect()
+    assert {r["lang"] for r in rows} == {"en", "de"}
+    assert sorted((r["lang"], r["lang_guess"], r["n"]) for r in rows) == [
+        ("de", "unk", 1),
+        ("en", "en", 1),
+        ("en", "unk", 1),
+    ]

@@ -260,3 +260,18 @@ def test_linkage_rejects_float_fields(spark):
         field_u_probabilities(a, b, ["val"])
     with pytest.raises(TypeError, match="float-typed"):
         fs_pattern_report(a, b, "blk", [("val", 0.9)])
+
+
+def test_fs_pattern_report_rejects_float_block_key(spark):
+    """Blocks join on their string cast, so a DOUBLE block key is
+    refused like a DOUBLE field (-0.0 and 0.0 would be two blocks)."""
+    import pytest
+
+    from fifa_data_pipeline_spark.operators.linkage import (
+        fs_pattern_report,
+    )
+
+    a = spark.createDataFrame([("x", 0.0)], ["name", "blk"])
+    b = spark.createDataFrame([("x", -0.0)], ["name", "blk"])
+    with pytest.raises(TypeError, match=r"float-typed.*'blk'"):
+        fs_pattern_report(a, b, "blk", [("name", 0.9)])

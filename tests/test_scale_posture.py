@@ -285,6 +285,16 @@ def test_suggest_shuffle_partitions_sizing_rule():
     ) == 49152
 
 
+def test_extra_conf_segment_without_equals_names_the_knob(monkeypatch):
+    from fifa_data_pipeline_spark.session import get_spark
+
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF", "spark.sql.shuffle.partitions=4;oops"
+    )
+    with pytest.raises(ValueError, match="SPARK_GRAFT_EXTRA_CONF.*'oops'"):
+        get_spark("bad-conf")
+
+
 def test_nested_struct_column_pruning_reaches_scan(spark, sf_dir, tmp_path):
     """Nested-schema pruning: selecting one leaf of a struct column
     must narrow the parquet ReadSchema to that leaf — at 100 TB with

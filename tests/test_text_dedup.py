@@ -176,10 +176,13 @@ def test_minhash_pairs_cross_validated_against_pyspark_ml(spark, sf_dir):
 
 
 def test_all_pairs_jaccard_paths_agree(spark, sf_dir):
-    """The size-adaptive all-pairs join must yield the IDENTICAL pair
-    set on both physical paths: brute-force n² (below crossover) and
-    prefix-filter AllPairs (above crossover)."""
-    from fifa_data_pipeline_spark.operators.dedup import all_pairs_jaccard
+    """The brute-force all-pairs join (bounded input) and the
+    prefix-filter AllPairs join (unbounded input) must yield the
+    IDENTICAL pair set."""
+    from fifa_data_pipeline_spark.operators.dedup import (
+        all_pairs_jaccard,
+        jaccard_prefix_join,
+    )
     from fifa_data_pipeline_spark.sources.io import read_table
 
     docs = (
@@ -187,8 +190,8 @@ def test_all_pairs_jaccard_paths_agree(spark, sf_dir):
         .filter(F.col("doc_id") < 200)
         .select("doc_id", "text")
     )
-    brute = all_pairs_jaccard(docs, crossover=10**9)
-    prefix = all_pairs_jaccard(docs, crossover=0)
+    brute = all_pairs_jaccard(docs)
+    prefix = jaccard_prefix_join(docs)
     rows_b = sorted(map(tuple, brute.collect()))
     rows_p = sorted(map(tuple, prefix.collect()))
     assert rows_b == rows_p
