@@ -16,7 +16,7 @@ Design principles (SURVEY.md §7):
   Pandas UDFs only where built-ins genuinely can't express the
   semantics (multimodal decode); row-at-a-time Python UDFs nowhere.
 - Scale posture: AQE on, broadcast hints for genuinely-small dims,
-  explicit partition/cluster layout at write time, salting helpers
+  explicit partition/cluster layout at write time, a salted join
   for skew.
 """
 

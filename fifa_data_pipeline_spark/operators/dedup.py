@@ -538,21 +538,6 @@ def connected_components(
     )
 
 
-def near_dedup_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop all but the smallest-id member of each near-dup component
-    (proper transitive closure: in a chain a-b-c only a survives,
-    unlike the greedy pair-drop in ``near_dedup_minhash``)."""
-    cc = connected_components(pairs)
-    losers = cc.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 def incremental_dedup(
     corpus: DataFrame,
     batch: DataFrame,

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,134 +54,3 @@ def k_anonymity_report(
         )
         .withColumn("at_risk", F.col("n") < F.lit(k))
     )
-
-
-def write_user_bucketed(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_buckets: int = 64,
-) -> None:
-    """Lay a table out for O(1/N) subject deletion: hive-partition by
-    ``pmod(xxhash64(key), n_buckets)`` so every subject's rows live
-    in exactly ONE partition directory. The bucket count trades
-    deletion cost (rewrite 1/N of the table per distinct bucket
-    touched) against small-file pressure — at 100 TB use enough
-    buckets that one bucket fits a rewrite job, not so many that
-    steady-state files go sub-row-group."""
-    (
-        df.withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)),
-        )
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-
-
-def delete_subjects(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    keys: list,
-    n_buckets: int = 64,
-) -> int:
-    """Right-to-be-forgotten delete over a :func:`write_user_bucketed`
-    table: compute the hash buckets of the requested keys, rewrite
-    ONLY those partition directories with the keys anti-joined out
-    (dynamic partition overwrite), and leave every other partition's
-    files physically untouched — the property the test pins via file
-    listing. Returns the number of partitions rewritten.
-
-    Scale: deleting any number of subjects costs
-    O(touched_buckets / n_buckets) of the table, not a full rewrite;
-    the keys ride along as a broadcast anti-join side."""
-    if not keys:
-        return 0
-    table = spark.read.parquet(path)
-    # build the key frame with the TABLE's key type (hardcoding long
-    # would hash-mismatch string/decimal subject keys — same class of
-    # bug as ADVICE r1 on grouped_zscore)
-    key_type = table.schema[key_col].dataType
-    from pyspark.sql import types as _T
-
-    key_schema = _T.StructType([_T.StructField(key_col, key_type)])
-    key_frame = spark.createDataFrame([(k,) for k in keys], key_schema)
-    buckets = sorted(
-        {
-            r["__bucket"]
-            for r in key_frame.select(
-                F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).alias(
-                    "__bucket"
-                )
-            )
-            .distinct()
-            .collect()
-        }
-    )
-    key_df = F.broadcast(
-        key_frame.withColumnRenamed(key_col, "__del_key")
-    )
-    touched = table.filter(F.col("__bucket").isin(buckets))
-    kept = touched.join(
-        key_df, F.col(key_col) == F.col("__del_key"), "left_anti"
-    )
-    # Dynamic partition overwrite only replaces partitions PRESENT in
-    # the written output.  A bucket whose every row belongs to the
-    # victim keys yields zero output rows, so its directory would
-    # never be rewritten and the subjects' data would silently remain
-    # on disk (ADVICE r3, high).  Detect those buckets up front and
-    # remove their partition directories explicitly via the Hadoop
-    # FileSystem API (works on local FS and object stores alike).
-    surviving = {
-        r["__bucket"]
-        for r in kept.select("__bucket").distinct().collect()
-    }
-    emptied = [b for b in buckets if b not in surviving]
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        conf = jsc.hadoopConfiguration()
-        for b in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/__bucket={b}")
-            fs = p.getFileSystem(conf)
-            # fs.delete returns False on failure without raising —
-            # unchecked, a silently surviving directory is exactly
-            # what the post-verify below must catch (ADVICE r5).
-            if fs.exists(p) and not fs.delete(p, True):
-                raise RuntimeError(
-                    f"delete_subjects: failed to remove emptied "
-                    f"partition directory {path}/__bucket={b}"
-                )
-    # Post-verify: the operator's contract is "the data is gone";
-    # fail loudly rather than return success over surviving rows.
-    # The verify runs even when every TOUCHED bucket emptied —
-    # untouched buckets can still hold data files that keep the path
-    # readable (ADVICE r5). Only a whole-dataset-empty read (schema
-    # inference fails: no parquet files left anywhere) is success by
-    # construction — total deletion.
-    try:
-        remaining_df = spark.read.parquet(path)
-    except Exception as exc:  # noqa: BLE001 — AnalysisException variants
-        if "infer schema" in str(exc) or "PATH_NOT_FOUND" in str(exc):
-            return len(buckets)
-        raise
-    remaining = (
-        remaining_df
-        .join(key_df, F.col(key_col) == F.col("__del_key"), "left_semi")
-        .limit(1)
-        .count()
-    )
-    if remaining:
-        raise RuntimeError(
-            f"delete_subjects: victim rows remain in {path} after "
-            "rewrite — partition overwrite did not take effect"
-        )
-    return len(buckets)

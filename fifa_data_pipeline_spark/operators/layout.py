@@ -1,25 +1,22 @@
-"""Physical-layout operators: Z-order (Morton) multi-column
-clustering.
+"""Z-order (Morton) multi-column clustering key.
 
 The reference clusters its materialized tables on up to four columns
 (`etl_kaggle_to_big_query.py:90,139` — BigQuery ``CLUSTER BY``). A
 single-column sort (our ``sortWithinPartitions`` stand-in) gives
 perfect min/max pruning on the leading column and none on the rest;
-a Morton/Z-order interleaved sort spreads pruning power across BOTH
-columns — the same trick Delta's OPTIMIZE ZORDER uses, built here
-from plain integer bit-arithmetic so it runs inside whole-stage
-codegen with no library.
+sorting on a Morton/Z-order interleaved key spreads pruning power
+across BOTH columns — the same trick Delta's OPTIMIZE ZORDER uses,
+built here from plain integer bit-arithmetic so it runs inside
+whole-stage codegen with no library.
 
-Scale: the code is a per-row scalar expression (no shuffle of its
-own); the layout write is one ``repartitionByRange(zvalue)`` — a
-single range shuffle — after which every output file covers a small
-rectangle of (x, y) space and parquet row-group min/max stats prune
-range filters on either axis.
+Scale: the key is a per-row scalar expression with no shuffle of its
+own; ``q_zorder`` computes it, and no writer in the engine sorts on
+it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -48,43 +45,3 @@ def morton_code_sql(x_col: str, y_col: str, bits: int = 16) -> str:
         terms.append(f"((({x_col} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y_col} >> {i}) & 1) << {2 * i + 1})")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def zorder_file_stats(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    n_files: int = 16,
-    bits: int = 10,
-) -> DataFrame:
-    """Simulated Z-order layout report: range-bucket rows by Z-value
-    into ``n_files`` "files" and report each file's (x, y) bounding
-    box. The per-file bbox area is what parquet min/max pruning sees —
-    the locality test asserts Z-ordering shrinks it vs a linear sort.
-
-    ``ntile`` over the Z-order stands in for ``repartitionByRange``
-    so the report is deterministic and single-stage in tests; a real
-    write uses ``repartitionByRange(n_files, zvalue)`` +
-    ``sortWithinPartitions(zvalue)``.
-    """
-    from pyspark.sql import Window
-
-    z = morton_code(x_col, y_col, bits)
-    w = Window.orderBy("__z", x_col, y_col)
-    return (
-        df.withColumn("__z", z)
-        .withColumn("file_id", F.ntile(n_files).over(w))
-        .groupBy("file_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min(x_col).alias("x_min"),
-            F.max(x_col).alias("x_max"),
-            F.min(y_col).alias("y_min"),
-            F.max(y_col).alias("y_max"),
-        )
-        .withColumn(
-            "bbox_area",
-            (F.col("x_max") - F.col("x_min") + 1)
-            * (F.col("y_max") - F.col("y_min") + 1),
-        )
-    )

@@ -41,16 +41,6 @@ def tree_to_column(node: TreeSpec) -> Column:
     ).otherwise(tree_to_column(node["hi"]))
 
 
-def forest_to_column(trees: list[TreeSpec]) -> Column:
-    """Additive ensemble (GBT-style): the sum of the member trees'
-    CASE expressions — still one projection."""
-    out = None
-    for t in trees:
-        c = tree_to_column(t)
-        out = c if out is None else out + c
-    return out
-
-
 def logistic_to_column(
     weights: dict[str, float], intercept: float
 ) -> Column:

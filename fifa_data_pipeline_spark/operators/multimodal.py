@@ -26,16 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Typed metadata carried alongside every binary payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("media_format", T.StringType()),
-    ]
-)
-
 
 def attach_payload(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -128,20 +118,6 @@ def sample_frames(
             )
 
     return df.mapInPandas(run, FRAMES_SCHEMA)
-
-
-def decode_image_real(df: DataFrame) -> DataFrame:
-    """General image decode (JPEG/WebP/...) — requires PIL/opencv,
-    which this container does not ship. The Spark plumbing above is
-    identical; only the kernel differs. For the one format a PNG
-    codec can be written from the stdlib alone, see
-    ``encode_png``/``decode_png`` below — that path is REAL (zlib
-    deflate, CRC-validated chunks), not a fake."""
-    raise NotImplementedError(
-        "JPEG/WebP codecs not available in this environment; "
-        "swap _fake_decode_batch for a PIL kernel under the same "
-        "mapInPandas contract (PNG has a real stdlib path: decode_png)"
-    )
 
 
 # ---------------------------------------------------------------------------

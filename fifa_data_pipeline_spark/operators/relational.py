@@ -333,32 +333,6 @@ def cube_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> Data
 # Skew helper (scale posture, SURVEY.md §7.3 M3)
 # ---------------------------------------------------------------------------
 
-def salted_group_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    sum_cols: dict[str, str],
-    count_alias: str | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation for heavily-skewed group keys.
-
-    Phase 1 groups on (keys + random salt) so a hot key spreads over
-    ``salt_buckets`` reducers; phase 2 re-aggregates the partials.
-    Only algebraic aggregates (SUM/COUNT here; MIN/MAX trivially) can
-    be salted this way. For most workloads AQE skew handling is
-    enough — this is the explicit form for the pathological tail.
-    """
-    salted = df.withColumn("__salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    phase1 = salted.groupBy(*keys, "__salt").agg(
-        *[F.sum(c).alias(f"__s_{a}") for c, a in sum_cols.items()],
-        F.count(F.lit(1)).alias("__cnt"),
-    )
-    aggs = [F.sum(f"__s_{a}").alias(a) for a in sum_cols.values()]
-    if count_alias:
-        aggs.append(F.sum("__cnt").alias(count_alias))
-    return phase1.groupBy(*keys).agg(*aggs)
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,
@@ -458,8 +432,8 @@ def merge_upsert(
 
     Scale: both sides shuffle once on the key — the same cost profile
     as a Delta/Iceberg MERGE rewrite without a transaction log. For
-    repeated merges at 100 TB, bucket both tables on the key so the
-    join is shuffle-free (see sources/io.write_bucketed)."""
+    repeated merges at 100 TB, bucket both tables on the key
+    (``bucketBy``) so the join is shuffle-free."""
     cols = base.columns
     assert updates.columns == cols, "merge requires identical schemas"
     u = updates.select([F.col(c).alias(f"__u_{c}") for c in cols])
@@ -718,10 +692,9 @@ def skew_report(
     """Shuffle-skew diagnostic for a prospective join/aggregate key:
     the ``top_n`` heaviest key groups with their share of all rows
     and their ratio to the mean group size — the numbers that decide
-    whether a key needs salting (:func:`salted_group_agg` /
-    :func:`salted_join`) or AQE skew-join before a 100 TB run, read
-    from a cheap aggregate instead of discovered as a straggler task
-    at hour three.
+    whether a key needs salting (:func:`salted_join`) or AQE
+    skew-join before a 100 TB run, read from a cheap aggregate
+    instead of discovered as a straggler task at hour three.
 
     Plan: one hash aggregate on the key (map-side combined) plus a
     one-row global aggregate broadcast back; top-n via
@@ -1101,79 +1074,6 @@ def grouped_running_sums(
     )
 
 
-def grouped_running_max(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str | list[str],
-    max_cols: list[str],
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
-    order, partition-parallel — :func:`grouped_running_sums` with the
-    monoid swapped from (+, 0) to (max, −∞): per-physical-partition
-    local prefix maxes, per-(partition, group) totals, and an
-    EXCLUSIVE running max over the metadata-sized totals frame as the
-    offset, combined with ``greatest`` (which skips the NULL offset a
-    group's first partition has — max's identity needs no sentinel).
-    Same contracts: one row per (group, order), range shuffle pinned
-    by a lazy localCheckpoint, parallelism scales with
-    ``num_partitions`` not group count. Appends ``{col}_rmax``.
-
-    This is the high-water-mark primitive: replaces
-    ``max(x) OVER (PARTITION BY <few-value key> ORDER BY … ROWS
-    UNBOUNDED PRECEDING)`` — whose one-task-per-group sort is the
-    100 TB ceiling — for watermark/lateness audits and monotone
-    envelope computations."""
-    if num_partitions is None:
-        num_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
-    order_cols = (
-        [order_col] if isinstance(order_col, str) else list(order_col)
-    )
-    keys = [*group_cols, *order_cols]
-    part = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in keys]
-    )
-    pinned = materialize_once(
-        part.withColumn("__pid", F.spark_partition_id().cast("long")),
-        name="rmax_pin",
-    )
-    wloc = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = pinned.select(
-        "*", *[F.max(c).over(wloc).alias(f"__loc_{c}") for c in max_cols]
-    )
-    totals = pinned.groupBy("__pid", *group_cols).agg(
-        *[F.max(c).alias(f"__t_{c}") for c in max_cols]
-    )
-    woff = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__pid",
-        *group_cols,
-        *[
-            F.max(f"__t_{c}").over(woff).alias(f"__off_{c}")
-            for c in max_cols
-        ],
-    )
-    out = local.join(F.broadcast(offsets), ["__pid", *group_cols])
-    for c in max_cols:
-        out = out.withColumn(
-            f"{c}_rmax",
-            F.greatest(F.col(f"__loc_{c}"), F.col(f"__off_{c}")),
-        )
-    return out.drop(
-        "__pid",
-        *[f"__loc_{c}" for c in max_cols],
-        *[f"__off_{c}" for c in max_cols],
-    )
-
-
 def grouped_running_sums_bucketed(
     df: DataFrame,
     group_cols: list[str],
@@ -1362,21 +1262,23 @@ def grouped_running_max_dense(
     share_input: bool = False,
     bounds: tuple | None = None,
 ) -> DataFrame:
-    """:func:`grouped_running_max` specialized to a DENSE-ish integer
-    ``order_col`` (an arrival sequence / row id): the parallel split
-    is a DATA-DERIVED range bucket ``order_col div width`` instead of
-    ``spark_partition_id`` over a sampled range shuffle. Because the
-    bucket is a pure function of the row, the two consumers (local
-    prefix maxes, per-bucket totals) agree by construction — no
-    localCheckpoint pin, no range-sampling job, and the bucket+group
-    hash exchange the window inserts is the ONLY fact shuffle (the
-    generic operator pays a range shuffle, a checkpoint
-    materialization, AND a second full hash shuffle because the
-    checkpointed lineage forgets its layout). Appends
-    ``{col}_rmax``. ``share_input`` (default False — this machinery
-    runs at ROW grain, so the input is usually a bare pruned scan
-    and the spine IS the fact) follows the semantics documented at
-    :func:`grouped_running_sums_bucketed`.
+    """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
+    order for a DENSE-ish integer ``order_col`` (an arrival sequence /
+    row id), parallel across buckets — the high-water-mark primitive
+    that replaces ``max(x) OVER (PARTITION BY <few-value key> ORDER BY
+    … ROWS UNBOUNDED PRECEDING)``, whose one-task-per-group sort is the
+    100 TB ceiling. The parallel split is a DATA-DERIVED range bucket
+    ``order_col div width``: per-bucket local prefix maxes, per-(bucket,
+    group) totals, and an EXCLUSIVE running max over the
+    metadata-sized totals frame as the offset, combined with
+    ``greatest``. Because the bucket is a pure function of the row,
+    the two consumers (local prefix maxes, per-bucket totals) agree by
+    construction — no localCheckpoint pin, no range-sampling job, and
+    the bucket+group hash exchange the window inserts is the ONLY fact
+    shuffle. Appends ``{col}_rmax``. ``share_input`` (default False —
+    this machinery runs at ROW grain, so the input is usually a bare
+    pruned scan and the spine IS the fact) follows the semantics
+    documented at :func:`grouped_running_sums_bucketed`.
 
     Exactness does not depend on density — any integer key works
     because bucket order aligns with key order; density only keeps

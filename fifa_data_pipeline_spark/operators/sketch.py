@@ -1,126 +1,19 @@
-"""Streaming-summary sketch operators (Misra–Gries heavy hitters).
+"""Sketch operators: count-min point-frequency estimates and KMV
+distinct counts.
 
 The reference has no sketch surface at all (SURVEY.md §2.5); this
-module adds the frequent-items family next to the HLL cardinality
-sketches in plans/extended5.py. The design point is the two-pass
-sketch-then-verify shape that stays EXACT:
-
-1. **Sketch pass** — each partition runs a Misra–Gries summary with
-   ``k`` counters over its rows (``mapInPandas``, Arrow-batched; O(k)
-   memory per task regardless of partition size). MG's guarantee:
-   every item with partition frequency > n_p/(k+1) survives the
-   partition's summary, so every item with GLOBAL frequency >
-   N/(k+1) survives in at least one partition (if it fell below the
-   local bar everywhere, summing the bars bounds it below the global
-   bar). The union of per-partition candidates is therefore a
-   guaranteed superset of the true heavy hitters — at most
-   k × partitions rows, i.e. KBs at any input scale.
-2. **Verify pass** — one fused recount: candidates keep their item
-   as the aggregate key, everything else collapses onto a NULL
-   sentinel, so a single hash aggregate yields both the exact
-   candidate counts AND the exact total N; a strict
-   ``count > N/(k+1)`` filter finishes. The output is bit-identical
-   to the brute-force ``GROUP BY … HAVING`` answer, which is what
-   the DuckDB oracle runs.
-
-At 100 TB the brute-force form shuffles one row per distinct item
-(billions for web-scale token vocabularies); the sketch form
-shuffles ≤ k rows per partition plus a counted broadcast — the
-classic heavy-hitters win, with zero accuracy loss after the verify
-recount.
+module adds the frequency/cardinality family next to the HLL
+sketches in plans/extended5.py. Every sketch hashes through the same
+deterministic md5→BIGINT fold, so the DuckDB twins reproduce each
+sketch — and therefore each estimate — exactly. Sketch state is
+bounded by the sketch size (depth × width cells; k hashes per group),
+not by the input, and merges across shards.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fifa_data_pipeline_spark.operators.util import pin
-
-
-def misra_gries_candidates(
-    items: DataFrame, item_col: str, k: int
-) -> DataFrame:
-    """Per-partition Misra–Gries summaries, unioned and deduped.
-
-    Returns a DataFrame with the single column ``item_col`` holding
-    every item that survived at least one partition's k-counter
-    summary — a superset of all items with global frequency >
-    N/(k+1). NULL items are ignored (SQL COUNT semantics)."""
-
-    def mg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Batch-merge variant of Misra-Gries (Agarwal et al. 2012,
-        # "Mergeable Summaries"): each Arrow batch's EXACT counts
-        # (``value_counts`` — C speed, no per-row Python) merge into
-        # the running summary; pruning back to k counters subtracts
-        # the (k+1)-th largest count from every counter and drops the
-        # non-positive ones. The merged summary keeps MG's bound
-        # (total undercount <= n/(k+1)), so the superset guarantee is
-        # unchanged, while memory stays O(k + batch-distinct) — the
-        # batch size bounds it, not the partition size.
-        counters: dict = {}
-        for pdf in batches:
-            for item, c in pdf[item_col].value_counts(dropna=True).items():
-                counters[item] = counters.get(item, 0) + int(c)
-            if len(counters) > k:
-                bar = sorted(counters.values(), reverse=True)[k]
-                counters = {
-                    i: c - bar for i, c in counters.items() if c > bar
-                }
-        yield pd.DataFrame({item_col: list(counters.keys())})
-
-    schema = items.select(item_col).schema
-    return (
-        items.select(item_col)
-        .mapInPandas(mg, schema)
-        .distinct()
-    )
-
-
-def heavy_hitters_exact(
-    items: DataFrame, item_col: str, k: int
-) -> DataFrame:
-    """Exact frequent-items query, sketch-accelerated: all items with
-    frequency strictly greater than N/(k+1), with their EXACT counts
-    — identical output to the brute-force GROUP BY/HAVING, but the
-    wide shuffle carries only Misra–Gries survivors instead of the
-    full distinct-item set.
-
-    The whole query is TWO scans of the input — the sketch pass and
-    one fused recount pass: non-candidate rows collapse onto a NULL
-    sentinel key in the same hash aggregate that counts candidates
-    (map-side partials keep the sentinel group one row per task, so
-    it cannot skew), which yields the exact total N for free instead
-    of a third counting scan. The tiny intermediates (candidate set,
-    per-key counts) are ``localCheckpoint``-ed so their downstream
-    double-use cannot re-trigger the big scans."""
-    cands = misra_gries_candidates(items, item_col, k).transform(pin("sketch"))
-    marked = (
-        items.filter(F.col(item_col).isNotNull())
-        .join(
-            F.broadcast(cands.withColumn("__is_cand", F.lit(True))),
-            item_col,
-            "left",
-        )
-        .select(
-            F.when(F.col("__is_cand"), F.col(item_col)).alias("__key")
-        )
-    )
-    counts = (
-        marked.groupBy("__key")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .transform(pin("sketch"))
-    )
-    total = counts.agg(F.sum("cnt").alias("__total"))
-    return (
-        counts.filter(F.col("__key").isNotNull())
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") * (k + 1) > F.col("__total"))
-        .select(F.col("__key").alias(item_col), "cnt")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -30,19 +30,10 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def bpe_ish_tokens(text: Column | str) -> Column:
-    """A BPE-ish regex tokenization: word pieces, digit runs, and
-    single non-space symbols — the pre-tokenizer split rule most BPE
-    vocabularies (GPT-2 style) apply before merges."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(
-        text, F.lit(BPE_SPLIT_PATTERN), F.lit(0)
-    )
-
-
 def bpe_ish_token_count_expr(text: Column | str) -> Column:
-    """BPE-ish token COUNT: ``regexp_count`` over the alternation
-    :func:`bpe_ish_tokens` matches. NOTE (r7, measured at sf1):
+    """BPE-ish token COUNT: ``regexp_count`` over the
+    ``BPE_SPLIT_PATTERN`` alternation (letter runs, digit runs,
+    single punctuation marks). NOTE (r7, measured at sf1):
     unlike the whitespace case, this is NOT an allocation win —
     Spark's ``regexp_count`` is RuntimeReplaceable to
     ``size(regexp_extract_all(...))`` (the physical plan is
@@ -844,29 +835,6 @@ def rolling_hash(
     return df.withColumn(alias, fp)
 
 
-def ngrams_of_tokens(toks: Column, n: int) -> Column:
-    """All word n-grams of a TOKEN ARRAY column (space-joined, in
-    order, duplicates kept); shorter than ``n`` tokens yields an
-    empty array — NOT a whole-text fallback like :func:`shingles`,
-    because decontamination must not match short docs on partial
-    grams.
-
-    Built on :func:`position_ngrams` (let-bound), so the token-array
-    expression is evaluated once regardless of gram count — the
-    previous slice-in-lambda form re-evaluated it per gram."""
-    return F.when(F.size(toks) >= n, position_ngrams(toks, n)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_ngrams(text_col: str, n: int) -> Column:
-    """:func:`ngrams_of_tokens` over whitespace tokens of a text
-    column. Convenience/inline form — for bulk pipelines pre-project
-    the token array to a named column and use
-    :func:`ngrams_of_tokens` directly (see its note)."""
-    return ngrams_of_tokens(tokens(text_col), n)
-
-
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1166,7 +1134,7 @@ def canonicalize_text(
     over stdlib ``unicodedata`` — vectorized at the batch level,
     never row-at-a-time UDF. Cross-engine agreement with DuckDB's
     ``nfc_normalize``/``strip_accents``/``lower`` is pinned on real
-    Unicode inputs in test_corpus_etl."""
+    Unicode inputs in test_text_dedup."""
     import unicodedata
 
     from collections.abc import Iterator as _Iter

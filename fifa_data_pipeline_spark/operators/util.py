@@ -2,10 +2,24 @@
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh local directory for a query's intermediate files
+    (landed inputs, streaming checkpoints, sinks), removed when the
+    process exits. A query's result is often a lazy scan of files in
+    it, so it must outlive the query call; every package call site
+    that needs a scratch directory goes through here."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def exploded(

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fifa_data_pipeline_spark.operators.util import scratch_dir
 from fifa_data_pipeline_spark.plans.flagship import flagship_from
 from fifa_data_pipeline_spark.sources.io import (
     read_csv_inferred,
@@ -142,140 +143,6 @@ def etl_flow(
 
 
 # ---------------------------------------------------------------------------
-# Scheduling surface: the reference deploys this flow on a monthly
-# cron — `prefect deployment build … --cron "0 0 1 * *"` (reference
-# README.md:112) — with Prefect supplying the trigger, catch-up
-# decision, and retry loop. An in-process engine owns that contract
-# itself: a pure cron evaluator plus a durable-watermark runner with
-# bounded retries. Both are driver-side only (no cluster cost).
-# ---------------------------------------------------------------------------
-
-import datetime as _dt
-import json as _json
-
-
-def next_run_after(
-    last: "_dt.datetime", cron: str = "0 0 1 * *"
-) -> "_dt.datetime":
-    """First instant STRICTLY after ``last`` matching a 5-field cron
-    expression (minute hour day-of-month month day-of-week; ``*``,
-    lists ``a,b``, ranges ``a-b``, steps ``*/n`` supported — the
-    subset the reference's schedule and common variants use).
-
-    Standard cron day semantics: when BOTH day-of-month and
-    day-of-week are restricted, a day matches if EITHER does.
-    Deterministic pure function — the testable core that a cron
-    trigger wraps; search is bounded at 366 days."""
-
-    def parse(field: str, lo: int, hi: int) -> set[int]:
-        out: set[int] = set()
-        for part in field.split(","):
-            step = 1
-            if "/" in part:
-                part, s = part.split("/")
-                step = int(s)
-            if part == "*":
-                rng = range(lo, hi + 1)
-            elif "-" in part:
-                a, b = part.split("-")
-                rng = range(int(a), int(b) + 1)
-            else:
-                rng = range(int(part), int(part) + 1)
-            out |= set(range(rng.start, rng.stop, step) if step > 1
-                       else rng)
-        return out
-
-    f = cron.split()
-    if len(f) != 5:
-        raise ValueError(f"cron needs 5 fields, got {cron!r}")
-    mins, hrs = parse(f[0], 0, 59), parse(f[1], 0, 23)
-    doms, mons = parse(f[2], 1, 31), parse(f[3], 1, 12)
-    dows = {d % 7 for d in parse(f[4], 0, 7)}  # 0 and 7 = Sunday
-    dom_any, dow_any = f[2] == "*", f[4] == "*"
-
-    t = (last + _dt.timedelta(minutes=1)).replace(second=0, microsecond=0)
-    for _ in range(366 * 24 * 60):
-        dow = (t.weekday() + 1) % 7  # cron: 0=Sunday
-        day_ok = (
-            (t.day in doms and dow in dows)
-            if (dom_any or dow_any)
-            else (t.day in doms or dow in dows)
-        )
-        if t.month in mons and day_ok and t.hour in hrs and t.minute in mins:
-            return t
-        t += _dt.timedelta(minutes=1)
-    raise ValueError(f"no match within a year for {cron!r}")
-
-
-def run_scheduled(
-    flow,
-    state_path: str,
-    now: "_dt.datetime",
-    cron: str = "0 0 1 * *",
-    max_retries: int = 3,
-    backoff_seconds: float = 0.0,
-    sleep=None,
-) -> dict:
-    """Durable-watermark scheduled execution of an idempotent flow:
-    the analogue of the reference's Prefect deployment (monthly cron,
-    platform-side retries) for an engine that owns its own trigger.
-
-    Reads the last-success watermark from ``state_path``, decides
-    due-ness via :func:`next_run_after`, and when due runs ``flow()``
-    with up to ``max_retries`` retries (constant ``backoff_seconds``
-    between attempts, injectable ``sleep`` for tests). On success the
-    watermark advances ATOMICALLY (write-temp + rename) to the
-    scheduled fire time — not the wall-clock — so a late catch-up run
-    satisfies exactly one fire and the next due-ness is computed from
-    the schedule grid. The flow must be idempotent (every stage here
-    is CREATE-OR-REPLACE), which makes crash-then-rerun safe: an
-    un-advanced watermark just re-fires the same slot.
-
-    Returns ``{"ran": bool, "fire_time": iso|None, "attempts": int}``.
-    """
-    import os
-    import time as _time
-
-    sleep = sleep or _time.sleep
-    state = None
-    if os.path.exists(state_path):
-        with open(state_path) as fh:
-            state = _json.load(fh)
-    last = (
-        _dt.datetime.fromisoformat(state["last_fire"])
-        if state
-        else now - _dt.timedelta(days=366)
-    )
-    fire = next_run_after(last, cron)
-    if fire > now:
-        return {"ran": False, "fire_time": None, "attempts": 0}
-    # collapse missed fires onto the LATEST due slot (catchup=False):
-    # the flow is an idempotent full-refresh batch, so N missed
-    # months need one run, not N — and the watermark then sits on the
-    # schedule grid point that run satisfied
-    while True:
-        nxt = next_run_after(fire, cron)
-        if nxt > now:
-            break
-        fire = nxt
-    attempts = 0
-    while True:
-        attempts += 1
-        try:
-            flow()
-            break
-        except Exception:
-            if attempts > max_retries:
-                raise
-            sleep(backoff_seconds)
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"last_fire": fire.isoformat()}, fh)
-    os.replace(tmp, state_path)
-    return {"ran": True, "fire_time": fire.isoformat(), "attempts": attempts}
-
-
-# ---------------------------------------------------------------------------
 # Registry surface (VERDICT r3 #7): the lifecycle twin as a driver-
 # checked query. The flow's CSV-landing → typed materialize →
 # flagship chain must reproduce the flagship result EXACTLY — the
@@ -290,9 +157,7 @@ def q_etl_flow(spark: SparkSession, sf_dir: str):
     """Run the full reference-shaped ETL flow (land → materialize →
     flagship → sink) into a temp workspace and return the sunk
     result."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="spark_graft_etl_")
+    base = scratch_dir("spark_graft_etl_")
     return etl_flow(
         spark,
         sf_dir,

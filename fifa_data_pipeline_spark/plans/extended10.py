@@ -1,6 +1,6 @@
 """Analytics & experimentation queries (round 4): grouped linear
 regression, distribution entropy, market concentration (HHI),
-point-in-time SCD-2 lookup, sketch-accelerated exact heavy hitters,
+point-in-time SCD-2 lookup, single-scan exact heavy hitters,
 discrete percentiles, correlation matrix, A/B Welch test,
 conversion latency, and event path trigrams.
 
@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators import relational as R
-from fifa_data_pipeline_spark.operators import sketch as K
 from fifa_data_pipeline_spark.operators import text as X
 from fifa_data_pipeline_spark.operators.util import exploded
 from fifa_data_pipeline_spark.sources.io import (
@@ -142,22 +141,16 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials (the shuffle carries one row per per-partition
     distinct token) plus a 1-row total broadcast for the HAVING bar.
 
-    r6 plan surgery (the r5 verdict's 2.8×): the Misra–Gries
-    sketch-then-recount form (:func:`operators.sketch.
-    heavy_hitters_exact`) was measured at sf1 against this brute
+    r6 plan surgery (the r5 verdict's 2.8×): a Misra–Gries
+    sketch-then-recount form was measured at sf1 against this brute
     form — sketch 2.98 s, sketch with vectorized value_counts merge
     2.75 s, hashed-key sketch 2.44 s, JVM heavy-bucket (CMS-style)
     candidates 2.88 s, single-scan brute 1.05 s. The tokenize +
     explode pass itself costs ~1.5 s at sf1, and EVERY sketch-verify
     scheme is two passes over it — the sketch can never beat 2×
-    tokenize here. The sketch form's domain is the unbounded-vocab
-    regime (web-scale token streams where the distinct-token shuffle
-    itself is the bottleneck and the input arrives pre-tokenized);
-    for a corpus whose tokenization dominates, one scan wins, and
-    Zipf's law keeps the per-partition-distinct shuffle rows far
-    below the token count (map-side partials collapse repeats). The
-    sketch operator stays available and tested for the streaming/
-    unbounded path."""
+    tokenize here, so the sketch form was deleted. Zipf's law keeps
+    the per-partition-distinct shuffle rows far below the token
+    count (map-side partials collapse repeats)."""
     docs = read_table(spark, sf_dir, "documents")
     ex = exploded(docs, X.tokens("text"), "token").filter(
         F.col("token").isNotNull()

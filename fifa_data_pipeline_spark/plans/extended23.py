@@ -59,6 +59,7 @@ from fifa_data_pipeline_spark.operators.relational import (
     keyset_page,
     table_checksum,
 )
+from fifa_data_pipeline_spark.operators.util import scratch_dir
 from fifa_data_pipeline_spark.sources.io import (
     footer_minmax_int as _footer_minmax_int,
 )
@@ -196,7 +197,7 @@ def q_canon_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus is ASCII, so the oracle's lower + whitespace-collapse
     is provably identical to NFKC casefold + accent strip there —
     the Unicode-divergent cases are pinned separately in
-    test_corpus_etl on literal inputs."""
+    test_text_dedup on literal inputs."""
     from fifa_data_pipeline_spark.operators.text import canonicalize_text
 
     docs = read_table(spark, sf_dir, "documents")
@@ -263,15 +264,13 @@ def q_wds_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     via binaryFile + untar, DECODE the extracted members, and emit
     the same stats as q_png_decode — sharing its closed-form oracle,
     so a hash match proves the tar container preserved every byte."""
-    import tempfile as _tf
-
     from fifa_data_pipeline_spark.sources.webdataset import (
         read_webdataset,
         write_webdataset,
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    out = _tf.mkdtemp(prefix="spark_graft_wds_") + "/shards"
+    out = scratch_dir("spark_graft_wds_") + "/shards"
     write_webdataset(encode_png(docs), out, ["png"], samples_per_shard=128)
     back = read_webdataset(spark, out, ["png"]).select(
         F.col("key").alias("doc_id"), "png"

@@ -54,7 +54,7 @@ QUERIES = {
     "q_pii_scrub": q_pii_scrub,
 }
 
-_CHUNK, _OVER, _STRIDE = 64, 16, 48
+_CHUNK, _STRIDE = 64, 48  # chunk_tokens=64, overlap=16
 
 _GRAMS3 = (
     "[toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] "

@@ -18,18 +18,18 @@ so the driver exercises the real streaming engine end-to-end."""
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fifa_data_pipeline_spark.operators.util import scratch_dir
 from fifa_data_pipeline_spark.sources.io import read_table
 from fifa_data_pipeline_spark.streaming import stream_events as S
 
 
 def _land_events(spark: SparkSession, sf_dir: str) -> str:
-    d = tempfile.mkdtemp(prefix="spark_graft_stream_") + "/events"
+    d = scratch_dir("spark_graft_stream_") + "/events"
     read_table(spark, sf_dir, "events").write.mode("overwrite").parquet(d)
     return d
 
@@ -65,19 +65,6 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = S.read_event_stream(spark, src, schema)
     name = f"q_stream_sesswin_{uuid.uuid4().hex[:8]}"
     S.run_to_memory(S.stream_session_window(stream), name, "append")
-    return spark.table(name)
-
-
-def q_stream_sessions_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time-TIMER sessions (transformWithStateInPandas,
-    timeMode='EventTime', handleExpiredTimer): append-final sessions
-    closed either by the next event or by the inactivity timer firing
-    at session_end + gap once the watermark passes it."""
-    src = _land_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = S.read_event_stream(spark, src, schema)
-    name = f"q_stream_sesstimer_{uuid.uuid4().hex[:8]}"
-    S.run_to_memory(S.stream_sessionize_timers(stream), name, "append")
     return spark.table(name)
 
 
@@ -229,10 +216,8 @@ def q_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode output, so the oracle is the same closure condition
     negated — emitted ∪ retained = the full batch aggregate, both
     halves hash-checked."""
-    import tempfile as _tf
-
     src = _land_events(spark, sf_dir)
-    base = _tf.mkdtemp(prefix="spark_graft_state_")
+    base = scratch_dir("spark_graft_state_")
     ckpt = f"{base}/ckpt"
     schema = spark.read.parquet(src).schema
     stream = S.read_event_stream(spark, src, schema)
@@ -367,11 +352,9 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered) is returned — converges exactly to the oracle-checked
     batch twin q_cdc_apply
     (test_streaming.py::test_stream_cdc_apply_converges_to_batch)."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
-    base = _tf.mkdtemp(prefix="spark_graft_cdc_")
+    base = scratch_dir("spark_graft_cdc_")
     feed_dir, target, ckpt = f"{base}/feed", f"{base}/target", f"{base}/ckpt"
     ev = read_table(spark, sf_dir, "events")
     op = (
@@ -410,11 +393,9 @@ def q_stream_neardedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays incrementally is hash-pinned by ``q_near_dedup`` /
     ``q_minhash_pairs`` (driver-green r2-r3) plus the replay-
     idempotence restart test."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
-    base = _tf.mkdtemp(prefix="spark_graft_nd_")
+    base = scratch_dir("spark_graft_nd_")
     src, bands_p, acc, ckpt = (
         f"{base}/src", f"{base}/bands", f"{base}/accepted", f"{base}/ckpt"
     )
@@ -433,18 +414,6 @@ def q_stream_neardedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: stream_events.stream_running_totals_tws and
-# stream_sessionize_timers (the Spark-4 transformWithStateInPandas
-# forms — the latter exercises EVENT-TIME TIMERS via
-# handleExpiredTimer) are implemented and unit-tested, but NOT
-# registered: the TWS state-server protocol requires the `protobuf`
-# package, absent from this container. The tests skip with the same
-# guard; on a cluster with protobuf both operators are
-# registry-ready (q_stream_sessions_timers below is the drain, and
-# its timer-closure oracle is kept next to the other streaming
-# oracles as _TIMER_SESSIONS_ORACLE).
-
-
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KMV distinct maintenance end-to-end: events arrive in
     micro-batches, each merges into the persisted per-group min-k
@@ -453,9 +422,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so batch boundaries cannot change the state, and a
     streaming operator gets a full value-hash oracle (not the weaker
     rows-only check)."""
-    import tempfile as _tf
-
-    base = _tf.mkdtemp(prefix="spark_graft_kmv_")
+    base = scratch_dir("spark_graft_kmv_")
     src, state, out, ckpt = (
         f"{base}/src", f"{base}/state", f"{base}/out", f"{base}/ckpt"
     )
@@ -490,9 +457,7 @@ def q_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the BATCH checksum over the whole table (XOR
     mergeability), so this streaming operator also gets a full
     value-hash oracle — extended23's q_table_checksum SQL verbatim."""
-    import tempfile as _tf
-
-    base = _tf.mkdtemp(prefix="spark_graft_ck_")
+    base = scratch_dir("spark_graft_ck_")
     src, state, ckpt = f"{base}/src", f"{base}/state", f"{base}/ckpt"
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag"
@@ -841,41 +806,6 @@ ORACLES: dict[str, str] = {
         FROM sess GROUP BY user_id, sid
     """,
 }
-
-# Timer-closed sessions: every non-final session of a user is
-# closed by that user's next event (emitted in handleInputRows);
-# the FINAL session is emitted only if its inactivity timer at
-# (session_end + gap) fired, i.e. the final watermark passed it.
-# Same strict-gap (> 1800 s) sessionization as q_stream_sessionize.
-# Registry-ready oracle for q_stream_sessions_timers (protobuf gate).
-_TIMER_SESSIONS_ORACLE = """
-        WITH wm AS (SELECT epoch_ms(MAX(ts)) - 3600000 AS w FROM events),
-        e AS (
-          SELECT user_id, CAST(FLOOR(extract(epoch FROM ts)) AS BIGINT) AS ep
-          FROM events
-        ), flagged AS (
-          SELECT user_id, ep,
-                 CASE WHEN ep - LAG(ep) OVER w IS NULL
-                        OR ep - LAG(ep) OVER w > 1800
-                      THEN 1 ELSE 0 END AS is_new
-          FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep)
-        ), sess AS (
-          SELECT user_id, ep,
-                 SUM(is_new) OVER (PARTITION BY user_id ORDER BY ep
-                   ROWS UNBOUNDED PRECEDING) AS sid
-          FROM flagged
-        ), agg AS (
-          SELECT user_id, sid,
-                 MIN(ep) AS session_start, MAX(ep) AS session_end,
-                 CAST(COUNT(*) AS BIGINT) AS n_events,
-                 MAX(sid) OVER (PARTITION BY user_id) AS max_sid
-          FROM sess GROUP BY user_id, sid
-        )
-        SELECT user_id, session_start, session_end, n_events
-        FROM agg
-        WHERE sid < max_sid
-           OR (session_end + 1800) * 1000 <= (SELECT w FROM wm)
-    """
 
 ORACLES.update({
     # Stateful EWMA: the drain applies the recurrence prev = 0.3·v +

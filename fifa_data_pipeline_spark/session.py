@@ -128,31 +128,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def suggest_shuffle_partitions(
-    input_bytes: int,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-    expansion: float = 3.0,
-    min_partitions: int | None = None,
-) -> int:
-    """Size ``spark.sql.shuffle.partitions`` for a job's input: aim
-    for ~``target_partition_bytes`` of UNCOMPRESSED shuffle data per
-    partition (``expansion`` ≈ parquet→row-format blowup, default 3×)
-    so a partition's build side fits executor memory without spill,
-    floored at the core count so small jobs still use the machine.
-
-    Worked example — 100 TB parquet input, 128 MB targets, 3×
-    expansion → ~2.4 M partitions: far beyond the 200 default, which
-    at that scale would put 1.5 TB in each reducer. Pair with AQE
-    coalescing: overshoot here is cheap (AQE merges tiny partitions
-    at runtime), undershoot is an OOM. Skewed keys need salting
-    regardless — sizing fixes the average, not the maximum.
-    """
-    import math
-
-    floor = min_partitions or default_parallelism()
-    return max(
-        floor,
-        math.ceil(input_bytes * expansion / target_partition_bytes),
-    )

@@ -249,52 +249,6 @@ def stream_dedup(
     )
 
 
-def stream_upsert_partitioned(
-    stream_agg: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """``foreachBatch`` upsert sink: each micro-batch's (update-mode)
-    aggregate rows overwrite ONLY the target partitions they touch
-    (dynamic partition overwrite) — the standard idempotent-upsert
-    pattern on plain parquet, no ACID table format needed. A replayed
-    batch rewrites the same partitions with the same content, so
-    restarts converge instead of duplicating (pair with the
-    checkpoint for exactly-once end-to-end).
-
-    ``partition_cols`` MUST cover every grouping key of the upstream
-    aggregate (default: the tumbling-count keys ``(ws, event_type)``).
-    ADVICE r1: partitioning by ``ws`` alone loses data — an update-mode
-    batch that touches only SOME event_types of a window emits only
-    those rows, and dynamic overwrite then replaces the whole ``ws``
-    partition, deleting the other event_types' previously-written
-    rows. With the full key in the partitioning, a partition is a
-    single aggregate row's home and every overwrite is a true upsert.
-
-    Scale: each batch writes O(touched partitions), not the whole
-    target; lead with the window/date column so steady-state batches
-    touch only the open windows."""
-    partition_cols = partition_cols or ["ws", "event_type"]
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(target_path)
-        )
-
-    q = (
-        stream_agg.writeStream.foreachBatch(apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_to_memory(
     stream_df: DataFrame, query_name: str, output_mode: str = "update"
 ) -> None:
@@ -309,20 +263,6 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_static_enrich(
-    stream: DataFrame, static_dim: DataFrame, on: str
-) -> DataFrame:
-    """Stream-static join: enrich each streaming event with a static
-    (batch) dimension. The static side is planned as a broadcast per
-    micro-batch — no streaming state at all (unlike stream-stream
-    joins), which makes this the cheapest enrichment shape and the
-    default way to attach dimension attributes to an event stream.
-    The static plan is re-evaluated each micro-batch, so a dimension
-    REWRITTEN between batches is picked up (eventual-consistency
-    enrichment; pin a snapshot path if that is not wanted)."""
-    return stream.join(F.broadcast(static_dim), on, "left")
 
 
 EWMA_OUTPUT_SCHEMA = T.StructType(
@@ -568,270 +508,6 @@ def stream_cdc_apply(
     q.awaitTermination()
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 stateful processor API)
-# ---------------------------------------------------------------------------
-
-def stream_running_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) via the Spark-4
-    ``transformWithStateInPandas`` StatefulProcessor API — the
-    successor to ``applyInPandasWithState`` with typed composite
-    state (ValueState/ListState/MapState), timers, and an explicit
-    init/close lifecycle.
-
-    Each micro-batch emits one row per touched user carrying the
-    lifetime totals so far (update semantics; a keyed sink upserts).
-    State is a single ValueState<(count, sum)> per user — O(active
-    users), the minimal stateful-streaming footprint. The batch twin
-    (a plain groupBy count/sum) pins correctness in
-    test_streaming.py.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, s DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = 0, 0.0
-            if self._state.exists():
-                n, s = self._state.get()
-            for pdf in rows:
-                n += int(len(pdf))
-                s += float(pdf["value"].fillna(0.0).sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 6)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType="user_id bigint, n_events bigint, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def fold_session_epochs(
-    state: tuple[int, int, int] | None,
-    epochs: list[int],
-    gap: int,
-) -> tuple[list[tuple[int, int, int]], tuple[int, int, int] | None]:
-    """Pure gap-split fold shared by the timer sessionizer: feed the
-    SORTED epochs of one key's whole micro-batch into the open
-    session ``state`` ``(start, last, n)`` (or None), returning the
-    sessions closed by an observed gap plus the new open state.
-
-    Extracted so the multi-Arrow-chunk contract is unit-testable
-    without the TWS protobuf runtime: the caller MUST concatenate
-    and sort ALL chunks before calling — folding chunk-by-chunk with
-    per-chunk sorting mis-sessionizes any key whose micro-batch
-    spans chunks with out-of-order event times (ADVICE r4)."""
-    closed: list[tuple[int, int, int]] = []
-    start = last = n = None
-    if state is not None:
-        start, last, n = state
-    for ep in epochs:
-        if last is not None and ep - last > gap:
-            closed.append((start, last, n))
-            start, last, n = ep, ep, 0
-        elif last is None:
-            start, last, n = ep, ep, 0
-        n += 1
-        last = max(last, ep)
-    return closed, (None if start is None else (start, last, n))
-
-
-def stream_sessionize_timers(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Inactivity-closed sessions via EVENT-TIME TIMERS
-    (``transformWithStateInPandas`` with ``timeMode='EventTime'`` and
-    ``handleExpiredTimer``) — the piece of the Spark-4 stateful API
-    the other session operators don't exercise: sessions are emitted
-    with APPEND (final-only) semantics, closed either by the next
-    event proving the gap elapsed, or by a registered timer firing
-    once the watermark passes session_end + gap (no event can extend
-    it anymore — watermark-correct without seeing a closing event).
-
-    Contrast: :func:`stream_sessionize` (applyInPandasWithState) must
-    emit UPDATE rows and needs an upserting sink;
-    :func:`stream_session_window` gets append semantics from the
-    built-in session_window aggregate but can't carry custom state.
-    This form gives append finality AND arbitrary per-session state.
-
-    State per user: one open session struct + one registered timer —
-    O(active users), both evicted on close. Emitted columns:
-    (user_id, session_start, session_end, n_events), epoch seconds.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    gap = int(gap_seconds)
-
-    class TimerSessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState(
-                "open_session", "start BIGINT, last BIGINT, n BIGINT"
-            )
-
-        def _emit(self, user_id, start, last, n):
-            return pd.DataFrame(
-                {
-                    "user_id": [int(user_id)],
-                    "session_start": [int(start)],
-                    "session_end": [int(last)],
-                    "n_events": [int(n)],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            (user_id,) = key
-            start = last = n = None
-            if self._open.exists():
-                start, last, n = self._open.get()
-            # Drain EVERY Arrow chunk before sorting: a micro-batch
-            # larger than maxRecordsPerBatch arrives as multiple
-            # chunks, and sorting per-chunk would let an out-of-order
-            # epoch in a later chunk land after a gap-split decision
-            # was already made — prematurely closing a session and
-            # mis-assigning the late-chunk events (ADVICE r4; the
-            # sibling _holt_winters_group concats before sorting for
-            # the same reason).
-            parts = [pdf for pdf in rows]
-            epochs = sorted(
-                int(e) for pdf in parts for e in pdf["epoch"]
-            )
-            st = None if last is None else (start, last, n)
-            closed, st = fold_session_epochs(st, epochs, gap)
-            for c_start, c_last, c_n in closed:
-                yield self._emit(user_id, c_start, c_last, c_n)
-            if st is None:  # keyed call with zero rows, no open state
-                return
-            start, last, n = st
-            # one timer per key: re-arm at the new inactivity deadline
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._open.update((start, last, n))
-            self._handle.registerTimer((last + gap) * 1000)
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            (user_id,) = key
-            if self._open.exists():
-                start, last, n = self._open.get()
-                # the timer that fired is the one armed at last+gap;
-                # watermark >= it, so no on-time event can extend
-                if expiredTimerInfo.getExpiryTimeInMs() >= (last + gap) * 1000:
-                    yield self._emit(user_id, start, last, n)
-                    self._open.clear()
-
-        def close(self) -> None:
-            pass
-
-    with_epoch = events.withWatermark("ts", watermark).select(
-        "user_id",
-        F.col("ts"),
-        F.unix_timestamp("ts").cast("bigint").alias("epoch"),
-    )
-    return with_epoch.groupBy("user_id").transformWithStateInPandas(
-        TimerSessions(),
-        outputStructType=(
-            "user_id bigint, session_start bigint, "
-            "session_end bigint, n_events bigint"
-        ),
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
-def stream_quarantine_late(
-    stream_df: DataFrame,
-    main_path: str,
-    quarantine_path: str,
-    hwm_path: str,
-    checkpoint_path: str,
-    delay_s: int = 1800,
-) -> None:
-    """Dead-letter channel for late events: each micro-batch is split
-    against the persisted event-time high-water mark — rows more than
-    ``delay_s`` behind it are appended to the quarantine sink instead
-    of the main sink, then the mark advances to the batch max. This
-    is the operational complement to ``withWatermark``: the watermark
-    silently DROPS late rows inside stateful operators, while a
-    pipeline that must account for every input routes them to a
-    quarantine for replay/audit (sizing data: q_late_events).
-
-    Lateness is judged against the mark as of the PREVIOUS batch
-    (batch-granular, exactly like watermark advancement); the mark is
-    a one-row parquet so restarts resume with the same split rule.
-    Scale: the split is two predicate scans of the batch and the mark
-    update is O(1) — nothing here grows with stream history."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            rows = spark.read.parquet(hwm_path).collect()
-            hwm = rows[0]["hwm"] if rows else None
-        except Exception:
-            hwm = None  # first batch: no mark yet
-        ep = F.unix_timestamp("ts").cast("bigint")
-        # raw localCheckpoint BY DESIGN (not materialize_once): inside
-        # foreachBatch, micro-batch replay already gives fault
-        # tolerance, so a durable scratch write per batch would be
-        # pure overhead.
-        marked = batch_df.withColumn("__ep", ep).localCheckpoint()
-        if hwm is not None:
-            is_late = F.col("__ep") < F.lit(hwm - delay_s)
-        else:
-            is_late = F.lit(False)
-        marked.filter(~is_late).drop("__ep").write.mode("append").parquet(
-            main_path
-        )
-        late = marked.filter(is_late).drop("__ep")
-        if late.limit(1).count() > 0:
-            late.write.mode("append").parquet(quarantine_path)
-        bmax = marked.agg(F.max("__ep").alias("m")).collect()[0]["m"]
-        new_hwm = max(x for x in (hwm, bmax) if x is not None)
-        spark.createDataFrame([(int(new_hwm),)], "hwm bigint").write.mode(
-            "overwrite"
-        ).parquet(hwm_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_near_dedup(
     docs_stream: DataFrame,
     bands_path: str,
@@ -852,9 +528,10 @@ def stream_near_dedup(
     because it differs from offline global dedup): only
     REPRESENTATIVES anchor future rejections — a doc that near-dups
     a previously-rejected doc but not its representative is accepted.
-    Offline global dedup (``near_dedup_components``) would merge
-    those into one component; run it periodically as compaction if
-    transitive-closure semantics are required.
+    Offline global dedup (``dedup.connected_components`` over the
+    pair graph) would merge those into one component; run it
+    periodically as compaction if transitive-closure semantics are
+    required.
 
     Scale: per batch, the history contributes ONLY its (band_id,
     band_hash) pairs — a narrow semi-join probe, never the corpus

@@ -26,7 +26,6 @@ def test_relational_ops_on_empty(spark):
     assert R.latest_per_group_window(df, "k", "upd", "v").count() == 0
     assert R.group_max(df, "k", "upd", "m").count() == 0
     assert R.topk(df, [F.desc("v")], 5).count() == 0
-    assert R.salted_group_agg(df, ["k"], {"v": "s"}).count() == 0
 
 
 def test_text_dedup_on_empty(spark):
@@ -97,12 +96,6 @@ def test_new_batch_ops_on_empty(spark):
 
 
 def test_round4_ops_on_empty(spark):
-    from fifa_data_pipeline_spark.operators import sketch as K
-
-    items = _empty(spark, "tok string")
-    assert K.misra_gries_candidates(items, "tok", 5).count() == 0
-    assert K.heavy_hitters_exact(items, "tok", 5).count() == 0
-
     facts = _empty(spark, "k int, ts int")
     dims = _empty(spark, "k int, valid_from int, valid_to int, tag string")
     assert R.point_in_time_join(facts, dims, "k", "ts").count() == 0

@@ -34,79 +34,3 @@ def test_etl_flow_end_to_end_matches_direct_flagship(spark, tmp_path):
     # Idempotent re-run (CREATE OR REPLACE): same result, no dup rows.
     again = etl_flow(spark, SF, landing, warehouse, result)
     assert sorted(map(_key, again.collect())) == sorted(map(_key, want.collect()))
-
-
-def test_next_run_after_monthly_cron():
-    """The reference's schedule: start of every month (README.md:112,
-    cron "0 0 1 * *")."""
-    import datetime as dt
-
-    from fifa_data_pipeline_spark.plans.etl_flow import next_run_after
-
-    assert next_run_after(
-        dt.datetime(2026, 3, 15, 12, 30)
-    ) == dt.datetime(2026, 4, 1, 0, 0)
-    # firing exactly at a grid point advances to the NEXT one
-    assert next_run_after(
-        dt.datetime(2026, 4, 1, 0, 0)
-    ) == dt.datetime(2026, 5, 1, 0, 0)
-    # ranges/steps/lists + standard dom-OR-dow semantics
-    assert next_run_after(
-        dt.datetime(2026, 1, 1, 0, 0), "*/15 9-10 * * *"
-    ) == dt.datetime(2026, 1, 1, 9, 0)
-    # dom=13 OR friday (both restricted -> either matches)
-    assert next_run_after(
-        dt.datetime(2026, 2, 10, 0, 0), "0 0 13 * 5"
-    ) == dt.datetime(2026, 2, 13, 0, 0)  # friday the 13th: both
-    assert next_run_after(
-        dt.datetime(2026, 2, 13, 0, 0), "0 0 13 * 5"
-    ) == dt.datetime(2026, 2, 20, 0, 0)  # next friday, dom unmatched
-
-
-def test_run_scheduled_watermark_retry_and_catchup(tmp_path):
-    import datetime as dt
-
-    from fifa_data_pipeline_spark.plans.etl_flow import run_scheduled
-
-    state = str(tmp_path / "sched.json")
-    calls = {"n": 0, "slept": []}
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("transient")
-
-    # due (no watermark): runs with 2 retries, watermark = fire time
-    out = run_scheduled(
-        flaky, state, now=dt.datetime(2026, 6, 2, 8, 0),
-        max_retries=3, backoff_seconds=1.5, sleep=calls["slept"].append,
-    )
-    assert out["ran"] and out["attempts"] == 3
-    assert out["fire_time"] == "2026-06-01T00:00:00"
-    assert calls["slept"] == [1.5, 1.5]
-    # same month again: NOT due (watermark on the schedule grid)
-    out2 = run_scheduled(
-        flaky, state, now=dt.datetime(2026, 6, 20, 0, 0)
-    )
-    assert not out2["ran"]
-    # next month: due again; flow now healthy -> 1 attempt
-    out3 = run_scheduled(
-        flaky, state, now=dt.datetime(2026, 7, 1, 0, 30)
-    )
-    assert out3["ran"] and out3["attempts"] == 1
-    assert out3["fire_time"] == "2026-07-01T00:00:00"
-    # retries exhausted -> raises, watermark NOT advanced
-    def always_bad():
-        raise RuntimeError("hard down")
-
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="hard down"):
-        run_scheduled(
-            always_bad, state, now=dt.datetime(2026, 8, 1, 1, 0),
-            max_retries=1, sleep=lambda s: None,
-        )
-    out4 = run_scheduled(
-        lambda: None, state, now=dt.datetime(2026, 8, 1, 2, 0)
-    )
-    assert out4["ran"] and out4["fire_time"] == "2026-08-01T00:00:00"

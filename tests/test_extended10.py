@@ -1,5 +1,5 @@
 """Unit tests for the round-4 analytics operators (extended10):
-Misra–Gries exactness, PIT-join tiling, Welch closed form, discrete
+PIT-join tiling, Welch closed form, discrete
 percentile membership."""
 
 from __future__ import annotations
@@ -9,54 +9,6 @@ import math
 from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.relational import point_in_time_join
-from fifa_data_pipeline_spark.operators.sketch import (
-    heavy_hitters_exact,
-    misra_gries_candidates,
-)
-
-
-def test_heavy_hitters_exact_equals_bruteforce(spark):
-    # skewed synthetic stream spread over many partitions: the
-    # sketch path must reproduce GROUP BY/HAVING bit-exactly
-    rows = (
-        [("a",)] * 500 + [("b",)] * 200 + [("c",)] * 90
-        + [(f"t{i}",) for i in range(300)]
-    )
-    df = spark.createDataFrame(rows, ["tok"]).repartition(16)
-    k = 10
-    got = {
-        (r["tok"], r["cnt"])
-        for r in heavy_hitters_exact(df, "tok", k).collect()
-    }
-    n = len(rows)
-    brute = {
-        (r["tok"], r["cnt"])
-        for r in df.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") * (k + 1) > n)
-        .collect()
-    }
-    assert got == brute
-    assert ("a", 500) in got and ("b", 200) in got
-
-
-def test_misra_gries_candidates_superset_guarantee(spark):
-    rows = [("x",)] * 40 + [(f"n{i}",) for i in range(60)]
-    df = spark.createDataFrame(rows, ["tok"]).repartition(4)
-    cands = {
-        r["tok"] for r in misra_gries_candidates(df, "tok", 5).collect()
-    }
-    # freq(x)=40 > 100/6 → x MUST be a candidate regardless of layout
-    assert "x" in cands
-
-
-def test_misra_gries_ignores_nulls(spark):
-    df = spark.createDataFrame(
-        [("a",), (None,), ("a",), (None,), (None,)], ["tok"]
-    )
-    out = heavy_hitters_exact(df, "tok", 1).collect()
-    # N counts only non-null rows (2); a appears 2 > 2/2 → kept
-    assert [(r["tok"], r["cnt"]) for r in out] == [("a", 2)]
 
 
 def test_point_in_time_join_picks_containing_interval(spark):

@@ -40,31 +40,6 @@ def test_morton_code_matches_python_model(spark, sf_dir):
         assert r["zvalue"] == morton(r["zx"], r["zy"])
 
 
-def test_zorder_layout_beats_linear_sort_on_worst_axis_span(spark):
-    """Z-order's whole point: per-file bounding boxes are compact in
-    BOTH axes, so min/max pruning works for filters on either column.
-    A linear sort on x gives perfect x-locality but full-range y
-    spans — equal bbox AREA, much worse worst-axis span (2×32 vs 8×8
-    on a 32×32 grid / 16 files). The worst-axis span is what bounds
-    how many files a single-axis range filter must read."""
-    from fifa_data_pipeline_spark.operators.layout import zorder_file_stats
-
-    n = 32
-    pts = spark.range(n * n).select(
-        (F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y")
-    )
-    zstats = zorder_file_stats(pts, "x", "y", n_files=16, bits=6).collect()
-    z_worst = max(
-        max(r["x_max"] - r["x_min"], r["y_max"] - r["y_min"]) for r in zstats
-    )
-    # linear-sort baseline: files = contiguous x ranges, y spans full range
-    linear_worst = n - 1
-    assert z_worst <= linear_worst / 2
-    assert sum(r["n_rows"] for r in zstats) == n * n
-    # perfect power-of-two grid → every Z file is an exact 8×8 tile
-    assert z_worst == 7
-
-
 def test_inverted_index_postings_roundtrip(spark, sf_dir):
     from fifa_data_pipeline_spark.plans.extended15 import q_postings
 

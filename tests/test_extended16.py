@@ -1,10 +1,8 @@
 """Unit tests for the round-5 batch-2 operators (extended16):
-count-min sketch, bloom-pruned semi-join, and the Spark-4
-transformWithStateInPandas stateful processor (protobuf-gated)."""
+count-min sketch and bloom-pruned semi-join."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -115,33 +113,3 @@ def test_bloom_prune_actually_prunes(spark, sf_dir):
     )
     assert n_true <= n_pruned  # no false negatives
     assert n_pruned < n_all  # the filter does real work
-
-
-def test_stream_tws_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas running totals across micro-batches
-    equal the batch groupBy. Skips where the TWS state protocol's
-    protobuf dependency is absent (this container)."""
-    pytest.importorskip("google.protobuf")
-    from fifa_data_pipeline_spark.streaming import stream_events as S
-
-    src = str(tmp_path / "events")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(src)
-    )
-    S.run_to_memory(
-        S.stream_running_totals_tws(stream), "tws_test", "update"
-    )
-    out = spark.table("tws_test")
-    w_last = (
-        out.groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
-    )
-    batch = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    got = {r["user_id"]: r["n_events"] for r in w_last.collect()}
-    expect = {r["user_id"]: r["n"] for r in batch.collect()}
-    assert got == expect

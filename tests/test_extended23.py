@@ -14,7 +14,7 @@ from fifa_data_pipeline_spark.plans.extended23 import (
     KEYSET_N,
     q_keyset_page,
 )
-from fifa_data_pipeline_spark.sources.io import read_table, write_sharded
+from fifa_data_pipeline_spark.sources.io import read_table
 
 
 def _ts(s: str) -> dt.datetime:
@@ -91,21 +91,6 @@ def test_keyset_cursor_tuple_semantics(spark, sf_dir):
     cd, ck = KEYSET_CURSOR
     for r in rows:
         assert (r.o_orderdate, r.o_orderkey) > (cd, ck)
-
-
-def test_write_sharded_bounds_file_sizes(spark, sf_dir, tmp_path):
-    df = read_table(spark, sf_dir, "orders").limit(1000)
-    path = str(tmp_path / "shards")
-    write_sharded(df, path, records_per_file=100, shuffle_col="o_orderkey")
-    back = spark.read.parquet(path)
-    per_file = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .count()
-        .collect()
-    )
-    assert sum(r["count"] for r in per_file) == 1000
-    assert max(r["count"] for r in per_file) <= 100
-    assert len(per_file) >= 10
 
 
 def test_dense_ids_are_gapfree_and_windowless(spark, sf_dir):
@@ -186,131 +171,6 @@ def test_mv_rewrite_refuses_unknown_keys(spark, sf_dir):
         rollup_from_mv(mv, ["user_id"])
 
 
-def test_publish_atomic_versions_and_survives_failed_publish(
-    spark, sf_dir, tmp_path
-):
-    from fifa_data_pipeline_spark.sources.io import (
-        publish_atomic,
-        read_published,
-    )
-
-    root = str(tmp_path / "pub")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region")
-    v1 = publish_atomic({"nation": nation, "region": region}, root)
-    assert v1 == 1
-    assert read_published(spark, root, "nation").count() == nation.count()
-
-    # v2 publish dies midway (second table explodes) -> pointer stays v1
-    class Boom:
-        @property
-        def write(self):
-            raise RuntimeError("disk full")
-
-    try:
-        publish_atomic({"nation": nation.limit(3), "bad": Boom()}, root)
-    except RuntimeError:
-        pass
-    assert read_published(spark, root, "nation").count() == nation.count()
-
-    v2 = publish_atomic({"nation": nation.limit(3), "region": region}, root)
-    assert v2 > v1
-    assert read_published(spark, root, "nation").count() == 3
-    # time travel: the superseded version stays readable by number
-    # (immutable version directories = the VERSION AS OF analogue)
-    assert (
-        read_published(spark, root, "nation", version=v1).count()
-        == nation.count()
-    )
-
-    # vacuum: publish a third version, then GC to the last 2 —
-    # v1 is deleted, v2/v3 remain, _CURRENT still resolves
-    from fifa_data_pipeline_spark.sources.io import vacuum_published
-
-    v3 = publish_atomic({"nation": nation.limit(5), "region": region}, root)
-    deleted = vacuum_published(root, keep_last=2)
-    assert deleted == [v1]
-    assert read_published(spark, root, "nation").count() == 5
-    assert (
-        read_published(spark, root, "nation", version=v2).count() == 3
-    )
-    import pytest as _pt
-
-    with _pt.raises(Exception):
-        read_published(spark, root, "nation", version=v1).count()
-
-
-def test_delete_subjects_rewrites_only_touched_buckets(
-    spark, sf_dir, tmp_path
-):
-    import os
-
-    from fifa_data_pipeline_spark.operators.governance import (
-        delete_subjects,
-        write_user_bucketed,
-    )
-
-    path = str(tmp_path / "users")
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value"
-    )
-    write_user_bucketed(ev, path, "user_id", n_buckets=8)
-
-    def file_map():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("__bucket="):
-                full = os.path.join(path, d)
-                out[d] = sorted(
-                    (f, os.path.getmtime(os.path.join(full, f)))
-                    for f in os.listdir(full)
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before = file_map()
-    victims = [r.user_id for r in ev.select("user_id").distinct().limit(2).collect()]
-    n_rewritten = delete_subjects(spark, path, "user_id", victims, n_buckets=8)
-    assert 1 <= n_rewritten <= 2
-    after = file_map()
-
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("user_id").isin(victims)).count() == 0
-    kept_expected = ev.filter(~F.col("user_id").isin(victims)).count()
-    assert back.count() == kept_expected
-    # untouched buckets: identical files, untouched mtimes
-    untouched = [d for d in before if before[d] == after.get(d)]
-    assert len(untouched) == len(before) - n_rewritten
-
-
-def test_cached_result_hits_on_semantically_equal_plan(
-    spark, sf_dir, tmp_path
-):
-    from fifa_data_pipeline_spark.sources.io import cached_result
-
-    root = str(tmp_path / "qcache")
-    q1 = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    r1, hit1 = cached_result(spark, q1, root)
-    assert not hit1
-    # same semantics, rebuilt from scratch -> must HIT
-    q2 = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    r2, hit2 = cached_result(spark, q2, root)
-    assert hit2
-    assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-    # a different query must MISS
-    q3 = q1.filter(F.col("n") > 0)
-    _, hit3 = cached_result(spark, q3, root)
-    assert not hit3
-
-
 def test_sql_inference_stays_in_codegen(spark, sf_dir):
     from fifa_data_pipeline_spark.plans.extended23 import q_sql_inference
 
@@ -323,84 +183,6 @@ def test_sql_inference_stays_in_codegen(spark, sf_dir):
     # "*(n)" prefixes are the WholeStageCodegen span markers in the
     # compact plan string
     assert "*(1)" in plan and "*(2)" in plan
-
-
-def test_forest_to_column_adds_members(spark):
-    from fifa_data_pipeline_spark.operators.mlsql import forest_to_column
-
-    stump = lambda thr, lo, hi: {
-        "feat": "x", "thr": thr, "lo": {"leaf": lo}, "hi": {"leaf": hi}
-    }
-    df = spark.createDataFrame([(1.0,), (5.0,)], ["x"])
-    out = df.select(
-        forest_to_column([stump(2, 1, 10), stump(4, 100, 1000)]).alias("s")
-    ).collect()
-    assert [r.s for r in out] == [101.0, 1010.0]
-
-
-def test_delete_subjects_with_string_keys(spark, tmp_path):
-    """The key frame must adopt the TABLE's key type — string subject
-    ids (emails, UUIDs) are the common real-world case."""
-    from fifa_data_pipeline_spark.operators.governance import (
-        delete_subjects,
-        write_user_bucketed,
-    )
-
-    df = spark.createDataFrame(
-        [(f"user-{i}@x.io", i * 1.5) for i in range(40)],
-        "email string, v double",
-    )
-    path = str(tmp_path / "str_users")
-    write_user_bucketed(df, path, "email", n_buckets=4)
-    n = delete_subjects(
-        spark, path, "email", ["user-3@x.io", "user-17@x.io"], n_buckets=4
-    )
-    assert n >= 1
-    back = spark.read.parquet(path)
-    assert back.count() == 38
-    assert (
-        back.filter(
-            F.col("email").isin("user-3@x.io", "user-17@x.io")
-        ).count()
-        == 0
-    )
-
-
-def test_delete_subjects_fully_emptied_bucket_is_removed(spark, tmp_path):
-    """ADVICE r3 (high): when every row of a bucket belongs to the
-    victim keys, dynamic partition overwrite writes no rows for that
-    bucket and would leave its files on disk. The fix must remove the
-    emptied partition directory so the subjects' data is physically
-    gone."""
-    import os
-
-    from fifa_data_pipeline_spark.operators.governance import (
-        delete_subjects,
-        write_user_bucketed,
-    )
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(1, 41)], "user_id long, v double"
-    )
-    path = str(tmp_path / "empty_bucket")
-    write_user_bucketed(df, path, "user_id", n_buckets=4)
-    # victims = EVERY subject in one bucket -> that bucket must vanish
-    bucketed = df.select(
-        "user_id",
-        F.pmod(F.xxhash64("user_id"), F.lit(4)).alias("b"),
-    )
-    target = bucketed.groupBy("b").count().orderBy("count").first()["b"]
-    victims = [
-        r.user_id for r in bucketed.filter(F.col("b") == target).collect()
-    ]
-    assert victims
-    n = delete_subjects(spark, path, "user_id", victims, n_buckets=4)
-    assert n == 1
-    # the partition directory itself is gone, not just unread
-    assert not os.path.exists(os.path.join(path, f"__bucket={target}"))
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("user_id").isin(victims)).count() == 0
-    assert back.count() == 40 - len(victims)
 
 
 def test_column_checksums_locate_the_divergent_column(spark):
@@ -510,46 +292,3 @@ def test_fk_discovery_finds_the_real_keys(spark, sf_dir):
     assert fake.n_shared <= fake.n_child_distinct
     r = rows["l_orderkey->o_orderkey"]
     assert r.n_parent_distinct >= r.n_child_distinct
-
-
-def test_delete_subjects_all_rows_deleted_is_success(spark, tmp_path):
-    """ADVICE r4: when EVERY row belongs to victim keys, every bucket
-    empties and the post-verify read has no data files to infer a
-    schema from — total deletion must return success, not crash."""
-    from fifa_data_pipeline_spark.operators.governance import (
-        delete_subjects,
-        write_user_bucketed,
-    )
-
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(1, 9)], "user_id long, v double"
-    )
-    path = str(tmp_path / "total_delete")
-    write_user_bucketed(df, path, "user_id", n_buckets=2)
-    n = delete_subjects(
-        spark, path, "user_id", list(range(1, 9)), n_buckets=2
-    )
-    assert n == 2  # both buckets were touched
-
-
-def test_vacuum_keep_last_zero_keeps_only_current(tmp_path):
-    """ADVICE r4: keep_last=0 must mean "only the current version" —
-    the naive [-0:] slice silently kept everything."""
-    import json
-    import os
-
-    from fifa_data_pipeline_spark.sources.io import vacuum_published
-
-    root = str(tmp_path / "pub")
-    os.makedirs(root)
-    for v in (1, 2, 3):
-        os.makedirs(os.path.join(root, f"v{v}"))
-    with open(os.path.join(root, "_CURRENT"), "w") as fh:
-        json.dump({"version": 3}, fh)
-    deleted = vacuum_published(root, keep_last=0)
-    assert sorted(deleted) == [1, 2]
-    assert os.path.isdir(os.path.join(root, "v3"))
-    import pytest
-
-    with pytest.raises(ValueError):
-        vacuum_published(root, keep_last=-1)

@@ -167,23 +167,6 @@ def test_snapshot_diff_classification(spark):
     assert got == {2: "changed", 3: "changed", 4: "removed", 5: "added"}
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources.io import compact_parquet, read_table
-
-    path = str(tmp_path / "fragmented")
-    src = read_table(spark, "/root/testdata/sf0.001", "orders")
-    src.repartition(64).write.parquet(path)  # simulate streaming small files
-    import pathlib
-
-    before = len(list(pathlib.Path(path).rglob("*.parquet")))
-    assert before >= 32
-    want = sorted(map(tuple, spark.read.parquet(path).collect()))
-    n_files = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
-    after = len(list(pathlib.Path(path).rglob("*.parquet")))
-    assert after == n_files < before
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-
-
 def test_ltv_deciles_partition_and_monotonic(spark, sf_dir):
     rows = sorted(
         X6.q_ltv_deciles(spark, sf_dir).collect(), key=lambda r: r.decile

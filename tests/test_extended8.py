@@ -14,7 +14,6 @@ from fifa_data_pipeline_spark.operators.text import (
     decontaminate,
     pack_sequences,
     vocab_coverage,
-    word_ngrams,
 )
 
 
@@ -38,16 +37,6 @@ def test_hash_split_rejects_bad_weights(spark):
     df = spark.createDataFrame([(1,)], ["doc_id"])
     with pytest.raises(ValueError):
         hash_split(df, "doc_id", weights=(("a", 50), ("b", 40)))
-
-
-def test_word_ngrams_short_doc_empty(spark):
-    df = spark.createDataFrame([(1, "a b c"), (2, "a b c d")], ["doc_id", "text"])
-    rows = {
-        r.doc_id: r.g
-        for r in df.select("doc_id", word_ngrams("text", 4).alias("g")).collect()
-    }
-    assert rows[1] == []  # shorter than n: no partial-gram fallback
-    assert rows[2] == ["a b c d"]
 
 
 def test_decontaminate_flags_only_overlapping_docs(spark):

@@ -62,33 +62,6 @@ def test_write_table_roundtrip(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == 25
 
 
-def test_json_roundtrip_with_pinned_schema(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources import io
-
-    df = io.read_table(spark, "/root/testdata/sf0.001", "nation")
-    path = str(tmp_path / "nation_json")
-    io.write_json(df, path)
-    back = io.read_json(
-        spark, path, "n_nationkey INT, n_name STRING, n_regionkey INT"
-    )
-    assert back.count() == df.count()
-    assert {tuple(r) for r in back.select(*df.columns).collect()} == {
-        tuple(r) for r in df.collect()
-    }
-
-
-def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
-    orders = io.read_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_orc")
-    io.write_orc(orders, path)
-    back = io.read_orc(spark, path)
-    assert back.count() == orders.count()
-    assert back.schema == orders.schema
-    # predicate reaches the ORC scan (pushed filters in the plan)
-    plan = back.filter("o_totalprice > 300000")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "o_totalprice" in plan
-
-
 def test_csv_export_roundtrip(spark, sf_dir, tmp_path):
     nation = io.read_table(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_csv")
@@ -96,107 +69,6 @@ def test_csv_export_roundtrip(spark, sf_dir, tmp_path):
     back = io.read_csv_inferred(spark, path)
     assert back.count() == 25
     assert {r.n_name for r in back.collect()} == {r.n_name for r in nation.collect()}
-
-
-def test_morton_key_matches_python_model(spark):
-    from fifa_data_pipeline_spark.sources.io import morton_key
-
-    def model(a, b, bits=16):
-        out = 0
-        for i in range(bits):
-            out |= ((a >> i) & 1) << (2 * i)
-            out |= ((b >> i) & 1) << (2 * i + 1)
-        return out
-
-    import random
-
-    random.seed(7)
-    rows = [(0, 0), (1, 0), (0, 1), (3, 3), (65535, 65535)] + [
-        (random.randrange(65536), random.randrange(65536)) for _ in range(20)
-    ]
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = df.select("a", "b", morton_key("a", "b").alias("m")).collect()
-    for r in got:
-        assert r.m == model(r.a, r.b), (r.a, r.b)
-    # Z-order locality: sorting by the key co-locates both dimensions —
-    # the first few rows of a morton-sorted grid stay in the low corner.
-    grid = spark.createDataFrame(
-        [(x, y) for x in range(16) for y in range(16)], "a long, b long"
-    )
-    first = (
-        grid.select("a", "b", morton_key("a", "b").alias("m"))
-        .orderBy("m")
-        .limit(16)
-        .collect()
-    )
-    assert all(r.a < 4 and r.b < 4 for r in first)
-
-
-def test_binary_file_scan_with_glob(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources.io import read_binary_files
-
-    (tmp_path / "a.png").write_bytes(b"\x89PNGfake")
-    (tmp_path / "b.txt").write_bytes(b"not a png")
-    df = read_binary_files(spark, str(tmp_path), glob="*.png")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 1
-    assert rows[0].path.endswith("a.png")
-    assert bytes(rows[0].content) == b"\x89PNGfake"
-
-
-def test_xml_roundtrip(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources.io import read_xml, write_xml
-
-    df = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], ["id", "name"]
-    )
-    path = str(tmp_path / "xml_out")
-    write_xml(df, path, row_tag="rec")
-    back = read_xml(spark, path, row_tag="rec")
-    assert {(r.id, r.name) for r in back.collect()} == {(1, "alpha"), (2, "beta")}
-
-
-def test_write_with_audit_collects_metrics_in_one_pass(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources.io import read_table, write_with_audit
-
-    li = read_table(spark, "/root/testdata/sf0.001", "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    got = write_with_audit(
-        li,
-        str(tmp_path / "audited"),
-        {
-            "n_rows": F.count(F.lit(1)),
-            "sum_qty": F.sum("l_quantity"),
-            "null_prices": F.count_if(F.col("l_extendedprice").isNull()),
-        },
-    )
-    expect = li.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("l_quantity").alias("sum_qty"),
-        F.count_if(F.col("l_extendedprice").isNull()).alias("null_prices"),
-    ).collect()[0]
-    assert got["n_rows"] == expect.n_rows
-    assert got["sum_qty"] == expect.sum_qty
-    assert got["null_prices"] == 0
-    # and the write really happened
-    assert spark.read.parquet(str(tmp_path / "audited")).count() == got["n_rows"]
-
-
-def test_overwrite_partitions_replaces_only_touched(spark, tmp_path):
-    from fifa_data_pipeline_spark.sources.io import overwrite_partitions
-
-    path = str(tmp_path / "parts")
-    base = spark.createDataFrame(
-        [("2026-01-01", 1), ("2026-01-01", 2), ("2026-01-02", 3)], ["d", "v"]
-    )
-    overwrite_partitions(base, path, ["d"])
-    # backfill day 1 only, with corrected values
-    fix = spark.createDataFrame([("2026-01-01", 99)], ["d", "v"])
-    overwrite_partitions(fix, path, ["d"])
-    # partition dirs read back with inferred DATE type — compare as str
-    got = {(str(r.d), r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {("2026-01-01", 99), ("2026-01-02", 3)}
 
 
 def test_analyze_table_collects_cbo_stats(spark, sf_dir, tmp_path):
@@ -303,67 +175,6 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "x", "y"}
     rows = {r.id: r for r in merged.collect()}
     assert rows[0].y is None and rows[4].y == 1.5
-
-
-def test_write_tuned_codec_and_rowgroups(spark, sf_dir, tmp_path):
-    """zstd beats snappy on bytes for the same rows, and a small
-    parquet.block.size yields more (finer-prunable) row groups."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    li = io.read_table(spark, sf_dir, "lineitem").repartition(1)
-    p_snappy = str(tmp_path / "snappy")
-    p_zstd = str(tmp_path / "zstd")
-    p_small = str(tmp_path / "small_rg")
-    io.write_tuned(li, p_snappy, codec="snappy")
-    io.write_tuned(li, p_zstd, codec="zstd")
-    io.write_tuned(li, p_small, codec="zstd", rowgroup_bytes=64 * 1024)
-
-    def size(d):
-        return sum(
-            os.path.getsize(f) for f in glob.glob(f"{d}/*.parquet")
-        )
-
-    assert size(p_zstd) < size(p_snappy)
-    f_big = glob.glob(f"{p_zstd}/*.parquet")[0]
-    f_small = glob.glob(f"{p_small}/*.parquet")[0]
-    assert (
-        pq.ParquetFile(f_small).num_row_groups
-        > pq.ParquetFile(f_big).num_row_groups
-    )
-    # content identical either way
-    assert spark.read.parquet(p_zstd).count() == li.count()
-
-
-def test_file_provenance_identifies_source_files(spark, sf_dir, tmp_path):
-    """_metadata provenance: every row carries its source file, the
-    per-file row counts sum to the table count, and row_index is a
-    dense 0..n-1 sequence within each file (written as two separate
-    files to make the grouping non-trivial)."""
-    from pyspark.sql import functions as F
-
-    from fifa_data_pipeline_spark.sources.io import (
-        read_table,
-        with_file_provenance,
-    )
-
-    nation = read_table(spark, sf_dir, "nation")
-    d = str(tmp_path / "nation2")
-    nation.repartition(2).write.parquet(d)
-    df = with_file_provenance(spark.read.parquet(d))
-    assert df.count() == nation.count()
-    per_file = df.groupBy("source_file").count().collect()
-    assert len(per_file) == 2
-    assert sum(r["count"] for r in per_file) == nation.count()
-    idx = df.groupBy("source_file").agg(
-        F.min("source_row_index").alias("lo"),
-        F.max("source_row_index").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    for r in idx.collect():
-        assert r.lo == 0 and r.hi == r.n - 1
 
 
 def test_footer_probes_detect_in_place_rewrite(spark, tmp_path):

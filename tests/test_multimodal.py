@@ -46,11 +46,6 @@ def test_sample_frames_one_to_many(spark):
     assert len(by_doc[1]) == 1 and by_doc[1][0].frame_len == 11
 
 
-def test_real_decode_is_stubbed(spark):
-    with pytest.raises(NotImplementedError):
-        M.decode_image_real(_docs(spark))
-
-
 def test_pool_bytes_windows_and_short_payloads(spark):
     from fifa_data_pipeline_spark.operators.multimodal import pool_bytes
 

@@ -217,38 +217,6 @@ def test_hash_split_partitions_completely(spark, rows):
     assert splits == again
 
 
-tokens_strategy = st.lists(
-    st.sampled_from(["a", "b", "c", "d", "e", "f", "g", "h"]),
-    min_size=0,
-    max_size=120,
-)
-
-
-@given(toks=tokens_strategy, k=st.integers(min_value=2, max_value=6))
-@settings(**SETTINGS)
-def test_heavy_hitters_equals_bruteforce_model(spark, toks, k):
-    # the sketch+recount path must equal the plain-Python frequency
-    # model for ANY multiset and ANY k, at any partitioning
-    from collections import Counter
-
-    from fifa_data_pipeline_spark.operators.sketch import (
-        heavy_hitters_exact,
-    )
-
-    df = spark.createDataFrame(
-        [(t,) for t in toks], "tok string"
-    ).repartition(4)
-    got = {
-        (r["tok"], r["cnt"])
-        for r in heavy_hitters_exact(df, "tok", k).collect()
-    }
-    n = len(toks)
-    model = {
-        (t, c) for t, c in Counter(toks).items() if c * (k + 1) > n
-    }
-    assert got == model
-
-
 # ---- round-6 operators ------------------------------------------
 
 keys_strategy = st.lists(
@@ -311,31 +279,6 @@ def test_table_checksum_is_permutation_invariant(spark, rows):
     a = table_checksum(df, ["k", "v"]).collect()[0]
     b = table_checksum(df.repartition(3), ["k", "v"]).collect()[0]
     assert (a.checksum, a.n_rows) == (b.checksum, b.n_rows)
-
-
-@given(
-    minute=st.integers(0, 59),
-    hour=st.integers(0, 23),
-    start=st.datetimes(
-        min_value=dt.datetime(2024, 1, 1),
-        max_value=dt.datetime(2027, 1, 1),
-    ),
-)
-@settings(max_examples=40, deadline=None)
-def test_cron_next_run_is_strictly_after_and_matches(minute, hour, start):
-    """next_run_after must return a time strictly after the input
-    whose fields match the cron spec, and it must be the FIRST such
-    time (nothing between input and result matches)."""
-    from fifa_data_pipeline_spark.plans.etl_flow import next_run_after
-
-    cron = f"{minute} {hour} * * *"
-    t = next_run_after(start, cron)
-    assert t > start
-    assert (t.minute, t.hour) == (minute, hour)
-    assert t.second == 0 and t.microsecond == 0
-    # firstness: the previous day's same wall-time is not in (start, t)
-    prev = t - dt.timedelta(days=1)
-    assert prev <= start
 
 
 grp_rows = st.lists(

@@ -99,19 +99,6 @@ def test_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_salted_group_agg_matches_plain(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    salted = R.salted_group_agg(
-        li, ["l_returnflag"], {"l_quantity": "sum_qty"}, count_alias="cnt"
-    )
-    plain = li.groupBy("l_returnflag").agg(
-        F.sum("l_quantity").alias("sum_qty"), F.count(F.lit(1)).alias("cnt")
-    )
-    s = {(r.l_returnflag, round(r.sum_qty, 6), r.cnt) for r in salted.collect()}
-    p = {(r.l_returnflag, round(r.sum_qty, 6), r.cnt) for r in plain.collect()}
-    assert s == p
-
-
 def test_equi_join_broadcast_hint(spark, sf_dir):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
@@ -409,40 +396,6 @@ def test_woe_iv_known_values(spark):
     )
     z = {r.f: r for r in R.woe_iv(zero, "f", F.col("y") == 1).collect()}
     assert all(abs(r.woe) < 100 for r in z.values())  # finite, smoothed
-
-
-def test_grouped_running_max_matches_window_form(spark):
-    """Partition-parallel prefix max must equal the single-window
-    running max, including the cross-partition handoff (NULL offset
-    for a group's first partition)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from fifa_data_pipeline_spark.operators.relational import (
-        grouped_running_max,
-    )
-
-    rows = [
-        (i, f"g{i % 3}", float((i * 193) % 500) - 250.0)
-        for i in range(2000)
-    ]
-    df = spark.createDataFrame(rows, ["i", "g", "v"])
-    got = {
-        (r["g"], r["i"]): r["v_rmax"]
-        for r in grouped_running_max(
-            df, ["g"], ["i"], ["v"], num_partitions=7
-        ).collect()
-    }
-    w = (
-        Window.partitionBy("g")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {
-        (r["g"], r["i"]): r["rm"]
-        for r in df.withColumn("rm", F.max("v").over(w)).collect()
-    }
-    assert got == want
 
 
 def test_grouped_running_sums_bucketed_matches_window_form(spark):

@@ -72,21 +72,6 @@ def test_bloom_filter_not_injected_when_dim_broadcasts(spark, sf_dir):
     assert "might_contain" not in plan
 
 
-def test_avro_helpers_gate_on_missing_module(spark):
-    """The container has no spark-avro; the helpers must fail with an
-    actionable message (and would pass through transparently where
-    the module is deployed)."""
-    from fifa_data_pipeline_spark.sources import io as sio
-
-    if sio._avro_available(spark):
-        df = spark.range(3)
-        sio.write_avro(df, "/tmp/avro_roundtrip")
-        assert sio.read_avro(spark, "/tmp/avro_roundtrip").count() == 3
-    else:
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            sio.read_avro(spark, "/tmp/nope")
-
-
 def test_python_datasource_partitioned_deterministic(spark):
     """Custom Python Data Source (Spark >=4.0): partition planning is
     honored by the scheduler, rows are deterministic across reads."""
@@ -266,23 +251,6 @@ def test_cbo_stats_reorder_joins_filtered_dim_first(spark, sf_dir):
     finally:
         for t in ["customer", "orders", "nation"]:
             spark.sql(f"DROP TABLE IF EXISTS cbo_{t}")
-
-
-def test_suggest_shuffle_partitions_sizing_rule():
-    from fifa_data_pipeline_spark.session import (
-        default_parallelism,
-        suggest_shuffle_partitions,
-    )
-
-    # tiny input floors at the core count
-    assert suggest_shuffle_partitions(10 * 1024) == default_parallelism()
-    # 1 TB parquet at 3x expansion / 128 MB targets -> ~24576 parts
-    one_tb = 1024 ** 4
-    assert suggest_shuffle_partitions(one_tb) == 24576
-    # halving the target doubles the count (monotone in both knobs)
-    assert suggest_shuffle_partitions(
-        one_tb, target_partition_bytes=64 * 1024 * 1024
-    ) == 49152
 
 
 def test_extra_conf_segment_without_equals_names_the_knob(monkeypatch):

@@ -176,36 +176,6 @@ def test_sessionize_state_carries_across_batches(spark, tmp_path):
     assert final == {(1, 1): 3, (1, 2): 1}
 
 
-def test_stream_static_enrich_matches_batch(spark, events_dir):
-    """Stream-static broadcast join produces exactly the batch join's
-    rows, with no streaming state."""
-    from fifa_data_pipeline_spark.streaming.stream_events import (
-        read_event_stream,
-        run_to_memory,
-        stream_static_enrich,
-    )
-
-    batch_events = read_table(spark, SF, "events")
-    dim = (
-        batch_events.select("user_id").distinct()
-        .withColumn("tier", (F.col("user_id") % 3).cast("int"))
-    )
-    schema = spark.read.parquet(events_dir).schema
-    stream = read_event_stream(spark, events_dir, schema)
-    enriched = stream_static_enrich(stream, dim, "user_id").select(
-        "event_id", "user_id", "tier"
-    )
-    run_to_memory(enriched, "enrich_sink", output_mode="append")
-    got = {tuple(r) for r in spark.table("enrich_sink").collect()}
-    want = {
-        tuple(r)
-        for r in batch_events.join(dim, "user_id", "left")
-        .select("event_id", "user_id", "tier")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_stream_hopping_matches_batch(spark, events_dir):
     batch = read_table(spark, SF, "events")
     expected = {
@@ -297,82 +267,6 @@ def test_stream_restart_recovers_from_checkpoint(spark, tmp_path):
     for r in combined:
         assert expected[(r.ws, r.event_type)] == (r.n_events, r.sum_value)
     shutil.rmtree(src, ignore_errors=True)
-
-
-def test_foreachbatch_partition_upsert_converges_to_batch(spark, events_dir, tmp_path):
-    """Dynamic-partition-overwrite upsert via foreachBatch: after
-    draining the stream (two runs over growing source data), the
-    parquet target must equal the batch aggregate — updated windows
-    overwrite in place, nothing duplicates."""
-    target = str(tmp_path / "upsert_target")
-    ckpt = str(tmp_path / "upsert_ckpt")
-    schema = spark.read.parquet(events_dir).schema
-    for _ in range(2):  # second drain replays nothing, rewrites nothing
-        stream = S.read_event_stream(spark, events_dir, schema)
-        agg = tumbling_window_agg(stream.withWatermark("ts", "1 hour"))
-        S.stream_upsert_partitioned(agg, target, ckpt)
-    got = {
-        (r.ws, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    want = {
-        (r.ws, r.event_type): (r.n_events, r.sum_value)
-        for r in tumbling_window_agg(read_table(spark, SF, "events")).collect()
-    }
-    assert got == want
-
-
-def test_foreachbatch_upsert_partial_window_update_keeps_siblings(
-    spark, tmp_path
-):
-    """ADVICE r1 regression: a later micro-batch that updates only
-    SOME event_types of a window must not delete the window's other
-    event_type rows already in the target. Lands events in two
-    installments split mid-window so the second drain touches the cut
-    window with a strict subset of its event_types; the target must
-    still converge to the full batch aggregate (requires partitioning
-    by ALL grouping keys, not just ws)."""
-    src = str(tmp_path / "inc_src")
-    target = str(tmp_path / "inc_target")
-    ckpt = str(tmp_path / "inc_ckpt")
-    batch = read_table(spark, SF, "events").withColumn(
-        "ep", F.unix_timestamp("ts").cast("bigint")
-    )
-    # Cut strictly inside some window: windows are 1h; pick min epoch
-    # + 90 min so the second installment lands mid-window-2.
-    mn = batch.agg(F.min("ep")).collect()[0][0]
-    cut = mn + 5400
-    first_half = batch.filter(F.col("ep") <= cut).drop("ep")
-    # Second installment: ONLY rows of one event_type past the cut —
-    # guarantees the updated windows carry a subset of their types.
-    one_type = batch.select("event_type").orderBy("event_type").limit(1).collect()[0][0]
-    second_half = batch.filter(
-        (F.col("ep") > cut) & (F.col("event_type") == one_type)
-    ).drop("ep")
-    assert second_half.count() > 0
-
-    first_half.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def drain():
-        stream = S.read_event_stream(spark, src, schema)
-        agg = tumbling_window_agg(stream.withWatermark("ts", "1 hour"))
-        S.stream_upsert_partitioned(agg, target, ckpt)
-
-    drain()
-    second_half.write.mode("append").parquet(src)
-    drain()
-
-    landed = first_half.unionByName(second_half)
-    want = {
-        (r.ws, r.event_type): (r.n_events, r.sum_value)
-        for r in tumbling_window_agg(landed).collect()
-    }
-    got = {
-        (r.ws, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == want
 
 
 def test_stream_ewma_matches_batch(spark, events_dir):
@@ -559,53 +453,6 @@ def test_stream_interval_join_left_outer(spark, events_dir):
     # matched pairs are a subset of the inner join's batch answer
     for u, le, re_ in inner:
         assert le not in nulls  # a left row is matched XOR null-padded
-
-
-def test_stream_quarantine_late_routes_dead_letters(spark, tmp_path):
-    import datetime as dt
-    import time as _time
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    src = str(tmp_path / "q_src")
-    cols = ["event_id", "ts", "value"]
-    batch1 = [(1, t0, 1.0), (2, t0 + dt.timedelta(minutes=30), 2.0),
-              (3, t0 + dt.timedelta(hours=1), 3.0)]
-    spark.createDataFrame(batch1, cols).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    _time.sleep(1.1)  # file-source orders by mtime
-    batch2 = [(4, t0 - dt.timedelta(hours=2), 4.0),  # late vs hwm
-              (5, t0 + dt.timedelta(hours=2), 5.0)]
-    spark.createDataFrame(batch2, cols).repartition(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    main = str(tmp_path / "q_main")
-    quar = str(tmp_path / "q_quar")
-    hwm = str(tmp_path / "q_hwm")
-    ckpt = str(tmp_path / "q_ckpt")
-    S.stream_quarantine_late(stream, main, quar, hwm, ckpt, delay_s=1800)
-
-    main_ids = {r.event_id for r in spark.read.parquet(main).collect()}
-    quar_ids = {r.event_id for r in spark.read.parquet(quar).collect()}
-    # id 4 is 2h behind the batch-1 high-water mark (t0+1h) minus the
-    # 30-min delay -> quarantined; everything else lands in main
-    assert quar_ids == {4}
-    assert main_ids == {1, 2, 3, 5}
-    # the mark advanced to the global max event time
-    got_hwm = spark.read.parquet(hwm).collect()[0]["hwm"]
-    import calendar
-    assert got_hwm == int(
-        (t0 + dt.timedelta(hours=2)).replace(
-            tzinfo=dt.timezone.utc
-        ).timestamp()
-    )
 
 
 def test_stream_near_dedup_invariants_and_batch_split_stability(
@@ -933,51 +780,6 @@ def test_stream_holt_winters_tracks_linear_trend(spark, tmp_path):
     assert out[0].level == 10.0 and out[0].trend == 0.0
 
 
-def test_stream_sessionize_timers_matches_closure(spark, sf_dir, tmp_path):
-    """Event-time-TIMER sessions (transformWithStateInPandas +
-    handleExpiredTimer) equal batch sessionization restricted to the
-    timer-closure condition: every non-final session, plus final
-    sessions whose (end + gap) the final watermark passed. Skips where
-    the TWS state protocol's protobuf dependency is absent (this
-    container); _TIMER_SESSIONS_ORACLE is the DuckDB twin kept
-    registry-ready next to the streaming oracles."""
-    pytest.importorskip("google.protobuf")
-    from fifa_data_pipeline_spark.streaming import stream_events as S
-
-    src = str(tmp_path / "events")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    S.run_to_memory(
-        S.stream_sessionize_timers(stream), "tws_timer_sessions", "append"
-    )
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table("tws_timer_sessions").collect()
-    }
-    gap, delay = 1800, 3600
-    rows = sorted(
-        (r.user_id, int(r.ts.timestamp())) for r in ev.select("user_id", "ts").collect()
-    )
-    wm = max(ep for _, ep in rows) - delay
-    sessions, cur = [], {}
-    for uid, ep in rows:
-        st = cur.get(uid)
-        if st and ep - st[2] > gap:
-            sessions.append((uid, st[1], st[2], st[3], False))
-            st = None
-        if st is None:
-            cur[uid] = [uid, ep, ep, 1]
-        else:
-            st[2], st[3] = ep, st[3] + 1
-    exp = {(u, s, e, n) for u, s, e, n, _ in sessions}
-    for uid, st in cur.items():
-        if (st[2] + gap) * 1000 <= wm * 1000:
-            exp.add((uid, st[1], st[2], st[3]))
-    assert got == exp
-
-
 def test_tumbling_drain_identical_under_rocksdb_state_store(spark, sf_dir):
     """The production state backend (RocksDBStateStoreProvider — the
     off-heap store a 100 TB streaming job runs, with changelog
@@ -1015,28 +817,3 @@ def test_tumbling_drain_identical_under_rocksdb_state_store(spark, sf_dir):
             spark.conf.set(key, prior)
         spark.conf.unset(chg)
     assert baseline and rocks == baseline
-
-
-def test_fold_session_epochs_multi_chunk_contract():
-    """ADVICE r4 (medium): per-Arrow-chunk sorting mis-sessionizes a
-    key whose micro-batch spans chunks with out-of-order times. The
-    extracted fold consumes globally sorted epochs; feeding it the
-    concatenation of chunks [100, 5000] and [200] (gap 1800) must
-    close [100..200] with BOTH events and open [5000..] — the
-    per-chunk form emitted [100,100] and counted 200 into the 5000
-    session."""
-    from fifa_data_pipeline_spark.streaming.stream_events import (
-        fold_session_epochs,
-    )
-
-    chunks = [[100, 5000], [200]]
-    epochs = sorted(e for c in chunks for e in c)
-    closed, state = fold_session_epochs(None, epochs, gap=1800)
-    assert closed == [(100, 200, 2)]
-    assert state == (5000, 5000, 1)
-    # state continuation across micro-batches
-    closed2, state2 = fold_session_epochs(state, [5100, 99999], 1800)
-    assert closed2 == [(5000, 5100, 2)]
-    assert state2 == (99999, 99999, 1)
-    # empty input is a no-op
-    assert fold_session_epochs(None, [], 1800) == ([], None)
