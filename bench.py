@@ -209,7 +209,7 @@ HEADLINE = [
     "q_mixture_weights",
     "q_budget_select",
     # q_udtf_topk stays OUT of the headline like the other Python-
-    # interop demos (q_udtf_sentences, q_zscore): the plan audit
+    # interop demos (q_zscore): the plan audit
     # rightly flags Python-eval nodes, and the bench headline is the
     # JVM-path surface (the UDTF is oracle-checked in the registry)
     # q_textrank (and q_pagerank) stay OUT of the headline: an

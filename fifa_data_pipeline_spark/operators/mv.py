@@ -52,13 +52,12 @@ def build_events_mv(events: DataFrame) -> DataFrame:
     )
 
 
-def rollup_from_mv(
-    mv: DataFrame, keys: list[str], derive_avg: bool = True
-) -> DataFrame:
-    """Answer a coarser-grain aggregate FROM the MV. ``keys`` must be
-    a subset of the MV's grouping keys (raises otherwise — the caller
-    must fall back to the base table; a silent wrong rewrite is the
-    one unforgivable MV bug)."""
+def rollup_from_mv(mv: DataFrame, keys: list[str]) -> DataFrame:
+    """Answer a coarser-grain aggregate FROM the MV, with
+    ``avg_value`` derived from the re-summed (sum, count) pair.
+    ``keys`` must be a subset of the MV's grouping keys (raises
+    otherwise — the caller must fall back to the base table; a silent
+    wrong rewrite is the one unforgivable MV bug)."""
     mv_keys = {"day", "event_type"}
     unknown = set(keys) - mv_keys
     if unknown:
@@ -72,8 +71,4 @@ def rollup_from_mv(
         F.min("min_value").alias("min_value"),
         F.max("max_value").alias("max_value"),
     )
-    if derive_avg:
-        out = out.withColumn(
-            "avg_value", F.col("sum_value") / F.col("cnt")
-        )
-    return out
+    return out.withColumn("avg_value", F.col("sum_value") / F.col("cnt"))

@@ -120,8 +120,8 @@ def latest_per_group_join(
     fact AND the agg output on the composite key — neither the agg's
     key-only exchange nor anything else is reusable. The window form
     shuffles the fact once on the key and sorts within partitions.
-    The literal reference idiom is preserved as
-    :func:`latest_per_group_agg_join` for parity documentation.
+    The literal reference idiom is :func:`latest_per_group_agg_join`,
+    which measured faster despite its extra exchanges (see there).
 
     NULL ``order_col`` rows are filtered BEFORE the window (ADVICE
     r1): max-agg + equality-join can never match a NULL, so it drops
@@ -143,9 +143,15 @@ def latest_per_group_agg_join(
 ) -> DataFrame:
     """The reference's literal "latest" idiom: max-agg then self-join
     back on (key, max) (A1+J1/J2, ``fifa_spark.py:34-66``). Same
-    result set as :func:`latest_per_group_join`; kept for the
-    operator inventory and as the shape the oracle SQL mirrors.
-    Prefer the window form in new plans — see the scale note there."""
+    result set as :func:`latest_per_group_join`, and the shape the
+    oracle SQL mirrors. It stays beside the one-shuffle window form
+    because it measured faster: q_latest_aggjoin against
+    q_join_latest, warm min-of-3 on ``local[4]``, four
+    order-alternated waves with a control, won 3 of 4 waves at sf0.1
+    (0.46–0.66 s against 0.50–0.62 s) and all 4 at sf1 (1.35–1.50 s
+    against 1.55–1.73 s). Its partial aggregate shrinks the fact to
+    one row per key before the join, while the window sorts every
+    row."""
     latest = (
         df.groupBy(group_key)
         .agg(F.max(order_col).alias("__latest"))
@@ -230,17 +236,14 @@ def _join_cond(left: DataFrame, right: DataFrame, on: Sequence[tuple[str, str]])
     return cond
 
 
-def range_join(
-    left: DataFrame, right: DataFrame, cond: Column, broadcast_right: bool = True
-) -> DataFrame:
+def range_join(left: DataFrame, right: DataFrame, cond: Column) -> DataFrame:
     """Non-equi (range/theta) join. With a tiny band/interval side the
     plan is BroadcastNestedLoopJoin — each left partition scans the
     broadcast bands, no shuffle of the fact side; that is the only
     range-join shape that survives 100 TB (a non-broadcast theta join
     is cartesian). For interval joins against a LARGE side, bucket
     both sides by coarse range first to recover an equi-join prefix."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, cond, "inner")
+    return left.join(F.broadcast(right), cond, "inner")
 
 
 def as_of_join(
@@ -882,98 +885,26 @@ def assign_dense_ids(
     order_cols: list[str],
     id_col: str = "row_id",
     num_partitions: int | None = None,
-    bounds: tuple[float, float] | None = None,
+    *,
+    bounds: tuple[float, float],
 ) -> DataFrame:
     """Dense, gap-free global row ids 1..N in ``order_cols`` order —
     WITHOUT the classic 100 TB trap of ``row_number() OVER (ORDER BY
     …)``, whose empty-partitionBy window collapses the whole table
     into ONE task.
 
-    Three distributed steps instead:
-
-    1. ``repartitionByRange`` + ``sortWithinPartitions`` on the order
-       key (one range shuffle; sampling-based bounds are
-       deterministic for a fixed input).
-    2. Partition-local index for free from
-       ``monotonically_increasing_id()`` — its layout IS
-       ``(partition_id << 33) | local_row_index`` on an ordered scan,
-       so no second shuffle and no per-partition Python.
-    3. Per-partition row counts (a #partitions-row aggregate) turned
-       into cumulative offsets by a tiny driver-side scan, broadcast
-       back, and added to the local index.
-
-    ``order_cols`` must be a unique key: range-partition bounds may
-    split ties across partitions, which would make ids of tied rows
-    depend on placement.
-
-    Lifecycle: the pin is
-    :func:`~...operators.util.materialize_once` (``localCheckpoint``
-    by default, never ``persist``), so it never enters the
-    CacheManager — no plan-substitution leakage into later queries,
-    no clearCache() bookkeeping — and its blocks are released by the
-    ContextCleaner once the returned frame goes out of scope
-    (``$SPARK_GRAFT_MATERIALIZE=table`` swaps in a short-lived table
-    for executor-loss durability). Unpinning before the final action
-    would recompute the layout and break id/offset agreement; the pin
-    makes that impossible by construction (both passes read the same
-    materialized rows).
-
-    Pass ``bounds`` = (min, max) of the FIRST order column to use
-    the data-derived bucket split instead (r8): global dense ids are
-    per-bucket row ranks plus per-bucket count offsets, i.e. exactly
-    :func:`grouped_row_ranks` with no group columns — one shuffle,
-    no checkpoint pin, no driver-side offset scan.
+    Global dense ids are per-bucket row ranks plus per-bucket count
+    offsets, i.e. exactly :func:`grouped_row_ranks` with no group
+    columns: ``bounds`` = (min, max) of the FIRST order column
+    (footer-stats cheap on a raw table,
+    :func:`~...sources.io.minmax_bounds`) derives the bucket split —
+    one shuffle, no checkpoint pin, no driver-side offset scan.
+    ``order_cols`` should be a unique key: ids stay gap-free under
+    ties, but which tied row gets which id is arbitrary.
     """
-    if bounds is not None:
-        return grouped_row_ranks(
-            df, [], order_cols, id_col,
-            num_partitions=num_partitions, bounds=bounds,
-        )
-    if num_partitions is None:
-        # scale with the cluster, not a constant: 2× the scheduler's
-        # parallelism keeps every core busy through the final stage
-        num_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
-    part = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
-    ).sortWithinPartitions(*order_cols)
-    # PIN the physical layout: the counts pass and the final join
-    # would otherwise evaluate the range shuffle twice, and AQE may
-    # coalesce its partitions DIFFERENTLY per evaluation (the two
-    # queries have different shapes) — shifting every (pid, local)
-    # pair between the offset map and the output. materialize_once
-    # pins one evaluation both passes share (lazy localCheckpoint by
-    # default — no CacheManager entry a persist() would leave behind;
-    # $SPARK_GRAFT_MATERIALIZE=table for executor-loss durability on
-    # a real cluster).
-    with_mid = materialize_once(
-        part.withColumn("__mid", F.monotonically_increasing_id()),
-        name="dense_ids_pin",
-    )
-    with_pid = with_mid.withColumn(
-        "__pid", F.shiftrightunsigned("__mid", 33).cast("long")
-    ).withColumn(
-        "__local", F.expr(f"__mid & {(1 << 33) - 1}").cast("long")
-    )
-    counts = (
-        with_pid.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy("__pid")
-        .collect()
-    )
-    offsets, acc = {}, 0
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["__n"]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "__pid long, __off long"
-        )
-    )
-    return (
-        with_pid.join(off_df, "__pid")
-        .withColumn(id_col, (F.col("__off") + F.col("__local") + 1))
-        .drop("__mid", "__pid", "__local", "__off")
+    return grouped_row_ranks(
+        df, [], order_cols, id_col,
+        num_partitions=num_partitions, bounds=bounds,
     )
 
 
@@ -989,8 +920,7 @@ def grouped_running_sums(
     single-task-per-group sort is the 100 TB trap when groups are few
     and large (a 3-value key funnels the whole table through 3 tasks).
 
-    Same decomposition as :func:`assign_dense_ids`, generalized from
-    row indices to weighted prefix sums:
+    Three distributed steps:
 
     1. ``repartitionByRange`` on (group, order) — one range shuffle;
        sampling-based bounds are deterministic for a fixed input —
@@ -1016,6 +946,15 @@ def grouped_running_sums(
     ``num_partitions`` defaults to 2× the scheduler's parallelism —
     it scales with the cluster automatically; the offsets frame stays
     metadata-sized either way.
+
+    Prefer :func:`grouped_running_sums_bucketed` whenever (min, max)
+    of the lead order column is cheap to know (a raw-table column:
+    footer stats). This sampled, pinned form serves order keys with no
+    such bounds: q_ltv_deciles ranks customers by a per-customer
+    aggregate (through :func:`parallel_ntile`), where a bounds probe
+    has to run the aggregate again. Routed through the bucketed form
+    with that probe it returned the same rows but ran slower at sf1
+    (warm 2.78 / 2.49 s → 3.30 / 2.97 s).
     """
     if num_partitions is None:
         num_partitions = 2 * df.sparkSession.sparkContext.defaultParallelism
@@ -1259,7 +1198,6 @@ def grouped_running_max_dense(
     order_col: str,
     max_cols: list[str],
     num_buckets: int | None = None,
-    share_input: bool = False,
     bounds: tuple | None = None,
 ) -> DataFrame:
     """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
@@ -1275,10 +1213,7 @@ def grouped_running_max_dense(
     the two consumers (local prefix maxes, per-bucket totals) agree by
     construction — no localCheckpoint pin, no range-sampling job, and
     the bucket+group hash exchange the window inserts is the ONLY fact
-    shuffle. Appends ``{col}_rmax``. ``share_input`` (default False —
-    this machinery runs at ROW grain, so the input is usually a bare
-    pruned scan and the spine IS the fact) follows the semantics
-    documented at :func:`grouped_running_sums_bucketed`.
+    shuffle. Appends ``{col}_rmax``.
 
     Exactness does not depend on density — any integer key works
     because bucket order aligns with key order; density only keeps
@@ -1324,40 +1259,16 @@ def grouped_running_max_dense(
         "*",
         *[F.max(c).over(wloc).alias(f"__loc_{c}") for c in max_cols],
     )
-    # Per-bucket totals aggregated from the WINDOW OUTPUT — same
-    # one-scan rule as :func:`grouped_running_sums_bucketed`:
-    # referencing __loc_* keeps this branch on the identical
-    # hash(bucket, group) exchange, so ReuseExchange serves it from
-    # shuffle files; a fresh groupBy over ``bucketed`` would re-plan
-    # a partial aggregate below its own exchange and recompute the
-    # whole input subtree.
-    if share_input:
-        # Plain MAX over the prefix column: the running-max prefix is
-        # monotone within a (bucket, group), so max(__loc_c) == the
-        # bucket max regardless of how ties on the order key resolve
-        # (r9 used max_by(struct(order_col)), whose tie resolution on
-        # equal structs — the whole NULL bucket, or duplicate integer
-        # keys — is undocumented and version-fragile; the r10 ADVICE
-        # fix). MAX ignores NULL *values* but the prefix of an
-        # all-NULL bucket is NULL anyway, so the semantics match the
-        # window's, and the aggregate still references the window
-        # output so exchange reuse is preserved at identical cost.
-        totals = local.groupBy("__bkt", *group_cols).agg(
-            *[
-                F.max(F.col(f"__loc_{c}")).alias(f"__t_{c}")
-                for c in max_cols
-            ]
-        )
-    else:
-        # This machinery runs at ROW grain (no spine): the totals
-        # re-sort under share_input=True is a full fact sort, while
-        # ``df`` is typically a bare pruned scan — recomputing the
-        # two-column aggregate is the cheaper side (share_input
-        # semantics documented at grouped_running_sums_bucketed;
-        # measured on q_late_events: 0.43 vs 0.58 s).
-        totals = bucketed.groupBy("__bkt", *group_cols).agg(
-            *[F.max(c).alias(f"__t_{c}") for c in max_cols]
-        )
+    # Per-bucket totals as a fresh aggregate over ``bucketed`` (the
+    # ``share_input=False`` side of the per-shape rule at
+    # :func:`grouped_running_sums_bucketed`): this machinery runs at
+    # ROW grain, so aggregating the window output would re-sort the
+    # whole fact, while ``df`` is typically a bare pruned scan —
+    # recomputing the two-column aggregate is the cheaper side
+    # (measured on q_late_events: 0.43 vs 0.58 s).
+    totals = bucketed.groupBy("__bkt", *group_cols).agg(
+        *[F.max(c).alias(f"__t_{c}") for c in max_cols]
+    )
     woff = (
         Window.partitionBy(*group_cols)
         .orderBy("__bkt")
@@ -1391,7 +1302,6 @@ def grouped_row_ranks(
     rank_col: str = "row_rank",
     num_partitions: int | None = None,
     bounds: tuple[float, float] | None = None,
-    share_input: bool = False,
 ) -> DataFrame:
     """Per-group 1-based ROW ranks in ``order_cols`` order (ascending;
     pre-negate a column for descending) computed partition-parallel —
@@ -1402,38 +1312,25 @@ def grouped_row_ranks(
     :func:`grouped_running_sums` with a constant-1 weight; pass
     ``bounds`` = (min, max) of the FIRST order column to route
     through :func:`grouped_running_sums_bucketed` (one shuffle, no
-    checkpoint pin — r8). ``share_input`` defaults False here: row
-    ranks run at ROW grain, so the "spine" IS the input and a
-    re-sort always loses to re-scanning a pruned projection (the
-    per-shape rule at :func:`grouped_running_sums_bucketed`); pass
-    True when ``df`` is itself an expensive derivation. Under
-    ``share_input=True`` the totals branch takes the LAST prefix row
-    per bucket via ``max_by`` on the order key, which is only exact
-    when that key is unique — row-grain inputs routinely carry ties,
-    so this wrapper appends a unique tiebreak column
-    (``monotonically_increasing_id``, consistent across both
-    consumers because they read the same reused exchange) before
-    routing; ranks among tied rows are arbitrary either way, and the
-    bucket totals become exact."""
+    checkpoint pin — r8). The bucket totals are a fresh aggregate
+    (``share_input=False``): row ranks run at ROW grain, so the
+    "spine" IS the input and a re-sort always loses to re-scanning a
+    pruned projection (the per-shape rule at
+    :func:`grouped_running_sums_bucketed`), and the totals stay exact
+    when the order key carries ties."""
     one = df.withColumn("__one", F.lit(1))
-    if share_input and bounds is not None:
-        one = one.withColumn("__tb", F.monotonically_increasing_id())
-        order_cols = [*order_cols, "__tb"]
     if bounds is not None:
         out = grouped_running_sums_bucketed(
             one, group_cols, order_cols, ["__one"],
             bounds=bounds, num_buckets=num_partitions,
-            share_input=share_input,
+            share_input=False,
         )
     else:
         out = grouped_running_sums(
             one, group_cols, order_cols, ["__one"],
             num_partitions=num_partitions,
         )
-    out = out.withColumnRenamed("__one_rsum", rank_col).drop("__one")
-    if share_input and bounds is not None:
-        out = out.drop("__tb")
-    return out
+    return out.withColumnRenamed("__one_rsum", rank_col).drop("__one")
 
 
 def ntile_bucket_expr(k: int, i: str = "__i", n: str = "__n") -> Column:
@@ -1497,34 +1394,29 @@ def grouped_tie_rank2(
     value_col: str,
     rank_col: str = "rank2",
     num_partitions: int | None = None,
-    bounds: tuple[float, float] | None = None,
+    *,
+    bounds: tuple[float, float],
 ) -> DataFrame:
     """Tie-averaged ranks within each group carried as INTEGER
     ``2·rank`` (a value preceded by ``less`` rows with ``cnt`` ties
     has average rank ``less + (cnt+1)/2``, so ``2·rank = 2·less +
     cnt + 1`` exactly), computed partition-parallel: per-(group,
     value) counts (hash aggregate — the only pass over the raw rows)
-    feed :func:`grouped_running_sums`, so no group ever sorts in one
-    task. Returns one row per (group, value) with ``rank_col``;
-    callers join it back to the fact on (group, value).
+    feed :func:`grouped_running_sums_bucketed`, so no group ever
+    sorts in one task. Returns one row per (group, value) with
+    ``rank_col``; callers join it back to the fact on (group, value).
 
-    Pass ``bounds`` = (min, max) of ``value_col`` (probed cheaply
-    from the raw fact) to route the prefix sum through
-    :func:`grouped_running_sums_bucketed` — one spine shuffle, no
-    checkpoint pin, no range-sampling job (r8)."""
+    ``bounds`` = (min, max) of ``value_col``, probed cheaply from the
+    raw fact (:func:`~...sources.io.minmax_bounds`), derives the
+    bucket split — one spine shuffle, no checkpoint pin, no
+    range-sampling job (r8)."""
     counts = df.groupBy(group_col, value_col).agg(
         F.count(F.lit(1)).alias("__cnt")
     )
-    if bounds is not None:
-        cum = grouped_running_sums_bucketed(
-            counts, [group_col], value_col, ["__cnt"],
-            bounds=bounds, num_buckets=num_partitions,
-        )
-    else:
-        cum = grouped_running_sums(
-            counts, [group_col], value_col, ["__cnt"],
-            num_partitions=num_partitions,
-        )
+    cum = grouped_running_sums_bucketed(
+        counts, [group_col], value_col, ["__cnt"],
+        bounds=bounds, num_buckets=num_partitions,
+    )
     return cum.select(
         group_col,
         value_col,
@@ -1542,10 +1434,10 @@ def grouped_topk(
     order_col: str,
     tiebreak_col: str,
     k: int,
-    descending: bool = True,
     salt: int = 16,
 ) -> DataFrame:
-    """Exact top-``k`` rows per group WITHOUT sorting any whole group
+    """Exact top-``k`` rows per group (``order_col`` descending,
+    ``tiebreak_col`` ascending) WITHOUT sorting any whole group
     in one task — the skew-safe form of ``row_number() OVER
     (PARTITION BY group ORDER BY …) <= k``, whose single window task
     per group is the 100 TB trap when one group holds a large share
@@ -1567,12 +1459,11 @@ def grouped_topk(
     contract as the window form needs for stable output). Returns
     the original columns plus ``rank`` (1-based).
     """
-    direction = F.desc if descending else F.asc
     salted = df.withColumn(
         "__salt", F.pmod(F.xxhash64(tiebreak_col), F.lit(salt))
     )
     w1 = Window.partitionBy(*group_cols, "__salt").orderBy(
-        direction(order_col), F.asc(tiebreak_col)
+        F.desc(order_col), F.asc(tiebreak_col)
     )
     cand = (
         salted.withColumn("__rn", F.row_number().over(w1))
@@ -1580,7 +1471,7 @@ def grouped_topk(
         .drop("__salt", "__rn")
     )
     w2 = Window.partitionBy(*group_cols).orderBy(
-        direction(order_col), F.asc(tiebreak_col)
+        F.desc(order_col), F.asc(tiebreak_col)
     )
     return (
         cand.withColumn("rank", F.row_number().over(w2))

@@ -1,12 +1,16 @@
-"""Python UDTF (user-defined table function) surface.
+"""Python UDTF (user-defined table function) surface, and the native
+sentence splitter.
 
 A UDTF is the one-to-many extension point: one input row → any number
 of output rows, with the output schema declared up front. Rules of
 engagement mirror ``pandas_ops``: built-in generators first
 (``explode``/``posexplode`` over an array expression cover the
-common cases JVM-side — the equality test pins this UDTF against
-exactly that native form); a UDTF earns its place when the per-row
-expansion needs real Python (a tokenizer library, a parser, a model).
+common cases JVM-side, as :func:`split_sentences_native` does); a
+UDTF earns its place when the per-row logic needs real Python (a
+tokenizer library, a parser, a model) or per-partition state
+(:class:`TopKPerPartition`). Row-wise splitting is not such a case:
+a Python UDTF splitter lost every A/B wave to the native form at sf0.1
+and sf1.
 
 Scale: UDTFs run per-partition in a Python worker (Arrow-batched in
 Spark 4) with no shuffle — embarrassingly parallel like any per-row
@@ -14,8 +18,6 @@ map; the Python-worker hop is the cost, same as any Python UDF.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,58 +31,15 @@ from pyspark.sql.functions import udtf
 SENT_SPLIT = r"[.!?]+\s+"
 
 
-@udtf(returnType="sent_idx int, sentence string")
-class SplitSentences:
-    """One row per text segment, 1-based index; empty/whitespace-only
-    fragments dropped. The boundary pattern arrives as a (constant)
-    second argument — UDTF instances are constructed per task, so
-    configuration travels through the call, not the constructor."""
-
-    def eval(self, text: str, pattern: str):  # noqa: D102 (fixed contract)
-        if text is None:
-            return
-        idx = 0
-        for frag in re.split(pattern, text):
-            frag = frag.strip()
-            if frag:
-                idx += 1
-                yield (idx, frag)
-
-
-def split_sentences(
-    spark: SparkSession,
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pattern: str = SENT_SPLIT,
-) -> DataFrame:
-    """Apply the segment-splitter UDTF laterally: (id, sent_idx,
-    sentence) — SQL ``LATERAL`` join against the registered table
-    function, the idiomatic invocation shape."""
-    spark.udtf.register("split_sentences_udtf", SplitSentences)
-    df.select(id_col, text_col).createOrReplaceTempView("__split_in")
-    # Spark SQL string literals process backslash escapes ('\s' -> 's'
-    # unless escapedStringLiterals is set) — double them, then double
-    # quotes, so the Python worker receives the pattern verbatim.
-    quoted = pattern.replace("\\", "\\\\").replace("'", "''")
-    return spark.sql(
-        f"""
-        SELECT i.{id_col}, s.sent_idx, s.sentence
-        FROM __split_in i, LATERAL split_sentences_udtf(i.{text_col}, '{quoted}') s
-        """
-    )
-
-
 def split_sentences_native(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     pattern: str = SENT_SPLIT,
 ) -> DataFrame:
-    """The JVM-native twin: trim/filter the fragment ARRAY with
-    higher-order functions, then one posexplode — same rows as the
-    UDTF with zero shuffle and no Python worker. This is what a
-    production pipeline should ship for THIS case; the pair exists to
-    prove the UDTF contract and to measure the Python-hop cost
-    honestly."""
+    """One row per text segment (id, 1-based ``sent_idx``, sentence):
+    split on ``pattern``, trim and drop empty fragments with
+    higher-order functions over the fragment ARRAY, then one
+    posexplode — zero shuffle and no Python worker. A NULL text
+    yields no rows."""
     arr = F.filter(
         F.transform(F.split(F.col(text_col), pattern), lambda x: F.trim(x)),
         lambda x: x != "",

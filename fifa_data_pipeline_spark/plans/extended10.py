@@ -21,10 +21,7 @@ from pyspark.sql import functions as F
 from fifa_data_pipeline_spark.operators import relational as R
 from fifa_data_pipeline_spark.operators import text as X
 from fifa_data_pipeline_spark.operators.util import exploded
-from fifa_data_pipeline_spark.sources.io import (
-    footer_minmax_int as _footer_minmax_int,
-)
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 #: Engine-portable epoch seconds (matches the Spark side's
 #: unix_timestamp().cast('bigint')).
@@ -190,11 +187,7 @@ def q_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # footer-stats bounds (r11): zero Spark jobs on the unfiltered
     # table; machinery needs only a superset range. Agg fallback.
-    bounds = _footer_minmax_int(
-        f"{sf_dir}/orders.parquet", "o_totalprice"
-    ) or tuple(
-        orders.agg(F.min("o_totalprice"), F.max("o_totalprice")).first()
-    )
+    bounds = minmax_bounds(orders, f"{sf_dir}/orders.parquet", "o_totalprice")
     # share_input=False + totals from ``counts``: near-unique price
     # spine — recomputing the pruned scan + hash aggregate beats
     # re-sorting the spine from shuffle files (the per-shape trade

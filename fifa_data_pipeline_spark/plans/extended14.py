@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.util import exploded, pin
 from fifa_data_pipeline_spark.operators.text import tokens
-from fifa_data_pipeline_spark.sources.io import (
-    footer_minmax_int as _footer_minmax_int,
-)
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 #: Seeded "regions": (region_id, center_x, center_y, radius) on the
 #: 0-999 integer grid — literals shared verbatim with the oracle.
@@ -258,8 +255,7 @@ def q_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle, no checkpoint pin.
     ranked = grouped_row_ranks(
         ev, ["event_type"], ["value", "event_id"], "__rk",
-        bounds=_footer_minmax_int(f"{sf_dir}/events.parquet", "value")
-        or tuple(ev.agg(F.min("value"), F.max("value")).first()),
+        bounds=minmax_bounds(ev, f"{sf_dir}/events.parquet", "value"),
     )
     ref = ranked.groupBy("__rk").agg(F.avg("value").alias("__ref"))
     return (

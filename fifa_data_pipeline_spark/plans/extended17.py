@@ -32,10 +32,7 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.text import tokens, token_count_expr
 from fifa_data_pipeline_spark.operators.util import exploded
-from fifa_data_pipeline_spark.sources.io import (
-    footer_minmax_int as _footer_minmax_int,
-)
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 #: Censoring horizon: a customer whose last order predates the study
 #: end by more than this many days is an observed churn EVENT; later
@@ -232,12 +229,10 @@ def q_weighted_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # footer-stats bounds (r11): zero Spark jobs on the unfiltered
     # table; machinery needs only a superset range. Agg fallback.
-    bounds = _footer_minmax_int(
-        f"{sf_dir}/documents.parquet", "n_chars"
-    ) or tuple(
-        read_table(spark, sf_dir, "documents")
-        .agg(F.min("n_chars"), F.max("n_chars"))
-        .first()
+    bounds = minmax_bounds(
+        read_table(spark, sf_dir, "documents"),
+        f"{sf_dir}/documents.parquet",
+        "n_chars",
     )
     # Pre-aggregate to the (lang, value) SPINE before the prefix-sum
     # machinery (r6): the discrete weighted quantile selects the first

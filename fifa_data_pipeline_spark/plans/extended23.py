@@ -1,8 +1,9 @@
 """Round-6: warehouse engineering + real-codec multimodal queries.
 
 - ``q_dense_ids`` — gap-free global row ids without the 1-task
-  global-window collapse (range shuffle + local indices + broadcast
-  offsets); oracle = ``row_number() OVER (ORDER BY …)``.
+  global-window collapse (per-bucket row ranks over footer key bounds
+  + broadcast per-bucket offsets); oracle = ``row_number() OVER
+  (ORDER BY …)``.
 - ``q_table_checksum`` — anti-entropy fingerprint (length-prefixed
   md5 fold, XOR-combined); DuckDB reproduces it bit-exactly.
 - ``q_mv_rollup`` — materialized-view rollup rewrite; oracle runs
@@ -60,10 +61,7 @@ from fifa_data_pipeline_spark.operators.relational import (
     table_checksum,
 )
 from fifa_data_pipeline_spark.operators.util import scratch_dir
-from fifa_data_pipeline_spark.sources.io import (
-    footer_minmax_int as _footer_minmax_int,
-)
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 
 def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,10 +103,11 @@ def q_keyset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-free global ids over orders in o_orderkey order via the
-    range-partition + local-index + offset-join scheme — equal to
-    ``row_number() OVER (ORDER BY o_orderkey)`` (the oracle) but
-    never collapsing the table into one task."""
+    """Gap-free global ids over orders in o_orderkey order via
+    per-bucket row ranks plus per-bucket count offsets
+    (:func:`relational.assign_dense_ids`) — equal to ``row_number()
+    OVER (ORDER BY o_orderkey)`` (the oracle) but never collapsing
+    the table into one task."""
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey")
     # orderkey bounds from parquet footer stats when present (r11 —
     # zero Spark jobs; superset range suffices), else the r8
@@ -117,9 +116,8 @@ def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_dense_ids(
         orders,
         ["o_orderkey"],
-        bounds=_footer_minmax_int(f"{sf_dir}/orders.parquet", "o_orderkey")
-        or tuple(
-            orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
+        bounds=minmax_bounds(
+            orders, f"{sf_dir}/orders.parquet", "o_orderkey"
         ),
     )
 

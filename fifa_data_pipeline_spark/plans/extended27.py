@@ -24,6 +24,7 @@ from fifa_data_pipeline_spark.operators.util import materialize_once, pin
 from fifa_data_pipeline_spark.sources.io import (
     footer_minmax_int as _footer_minmax_int,
     footer_uncompressed_bytes as _footer_bytes,
+    minmax_bounds,
     read_table,
 )
 
@@ -110,10 +111,11 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     type counted once, at its first document) → per-(source, doc)
     new-type counts joined to per-doc token counts → PARTITION-
     PARALLEL cumulative sums per source ordered by doc_id
-    (:func:`relational.grouped_running_sums`, rewritten r5: the
-    per-source window funneled every per-doc row of a source through
-    one sort task) → per-source integer-moment OLS (``text.ln_ols``
-    — run-order-deterministic, unlike float regr_* co-moments).
+    (:func:`relational.grouped_running_sums_bucketed` over footer
+    doc_id bounds, rewritten r5: the per-source window funneled every
+    per-doc row of a source through one sort task) → per-source
+    integer-moment OLS (``text.ln_ols`` — run-order-deterministic,
+    unlike float regr_* co-moments).
     Only per-DOC rows (not tokens) cross the prefix-sum stage; at
     corpus scale, additionally coarsen the curve first (bucket
     doc_id into fixed strides and cumulate bucket subtotals) so the
@@ -184,9 +186,7 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id bounds for the bucketed prefix machinery, from parquet
     # footer stats when present (r10 — zero Spark jobs; exact on the
     # raw unfiltered table), else the r8 aggregate probe.
-    id_bounds = _footer_minmax_int(
-        f"{sf_dir}/documents.parquet", "doc_id"
-    ) or tuple(docs.agg(F.min("doc_id"), F.max("doc_id")).first())
+    id_bounds = minmax_bounds(docs, f"{sf_dir}/documents.parquet", "doc_id")
     curve = (
         grouped_running_sums_bucketed(
             spine, ["source"], "doc_id", ["n_toks", "v_new"],
@@ -312,15 +312,16 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per value first).
 
     Plan shape: per-(pair, value) counts → partition-parallel ECDF
-    prefix sums (:func:`relational.grouped_running_sums` — range
-    partition + per-partition offsets, so a pair NEVER sorts its
-    whole value domain in one task) → per-pair max. Only DISTINCT
+    prefix sums (:func:`relational.grouped_running_sums_bucketed` —
+    value buckets over footer n_chars bounds + per-bucket offsets, so
+    a pair NEVER sorts its whole value domain in one task) → per-pair
+    max. Only DISTINCT
     values cross the prefix-sum stage, and each doc joins the
     bounded lang-pair grid (k·(k−1)/2 rows) as TWO broadcast
     equi-joins unioned (one per pair side) — hash joins, no
     nested-loop OR-condition — so at 100 TB the ranked spine is
     |pairs| × |distinct lengths|, metadata-sized, and its prefix
-    sums parallelize across range partitions."""
+    sums parallelize across value buckets."""
     from fifa_data_pipeline_spark.operators.relational import (
         grouped_running_sums_bucketed,
     )
@@ -340,8 +341,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe.
     cum = grouped_running_sums_bucketed(
         counts, ["lang_a", "lang_b"], "n_chars", ["ca", "cb"],
-        bounds=_footer_minmax_int(f"{sf_dir}/documents.parquet", "n_chars")
-        or tuple(docs.agg(F.min("n_chars"), F.max("n_chars")).first()),
+        bounds=minmax_bounds(docs, f"{sf_dir}/documents.parquet", "n_chars"),
         emit_totals=True,
     )
     return (
@@ -417,7 +417,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact. Same bounded pair-grid + per-(pair, value) count +
     partition-parallel prefix-sum shape as the KS query
     (:func:`_lang_pair_counts`,
-    :func:`relational.grouped_running_sums`)."""
+    :func:`relational.grouped_running_sums_bucketed`)."""
     from fifa_data_pipeline_spark.operators.relational import (
         grouped_running_sums_bucketed,
     )
@@ -430,11 +430,8 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_running_sums_bucketed(
             counts, ["lang_a", "lang_b"], "n_chars", ["ct"],
             # footer-stats bounds (r11): zero Spark jobs, agg fallback
-            bounds=_footer_minmax_int(
-                f"{sf_dir}/documents.parquet", "n_chars"
-            )
-            or tuple(
-                docs.agg(F.min("n_chars"), F.max("n_chars")).first()
+            bounds=minmax_bounds(
+                docs, f"{sf_dir}/documents.parquet", "n_chars"
             ),
         )
         .withColumn("less", F.col("ct_rsum") - F.col("ct"))
@@ -726,8 +723,8 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. Quantity 2·ranks from per-(group, quantity) counts via the
        partition-parallel prefix-sum machinery
-       (:func:`relational.grouped_tie_rank2` — range partition +
-       per-partition offsets, the ``assign_dense_ids`` technique);
+       (:func:`relational.grouped_tie_rank2` — value buckets over
+       footer l_quantity bounds + per-bucket offsets);
        the rank table is |distinct quantities|-sized → broadcast.
     2. ONE pass over the fact: broadcast-join rx, hash-aggregate to
        the per-(group, price) spine carrying ``cnt``, ``Σrx``,

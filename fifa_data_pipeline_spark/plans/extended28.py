@@ -6,9 +6,10 @@ connector surface; these extend the layers the build brief makes
 first-class. Three themes:
 
 1. **Exact answers without single-task sorts** — q_exact_quantiles
-   (discrete + interpolated), q_grouped_topk: the partition-parallel
-   prefix-sum machinery (``relational.grouped_running_sums``) built
-   for the r4 rank-window findings, generalized.
+   (discrete + interpolated) on the bucketed prefix-sum machinery
+   (``relational.grouped_running_sums_bucketed``, footer-bounded),
+   and q_grouped_topk's salted two-phase top-k: built for the r4
+   rank-window findings, generalized.
 2. **Experimentation & curation analytics** — Fellegi–Sunter record
    linkage (q_record_linkage), weight-of-evidence/IV (q_woe_iv),
    CUPED variance reduction (q_cuped), exact BFS hop distance over

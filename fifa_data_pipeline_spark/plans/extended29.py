@@ -8,8 +8,9 @@ first-class.
 1. **Hard-negative mining** (q_hard_negatives) — for every anchor
    embedding, the k most-similar vectors with a DIFFERENT label: the
    near-miss negatives contrastive objectives (InfoNCE, triplet) are
-   trained on. Block-partitioned exact scoring, label filter fused
-   BEFORE the rank (:func:`operators.vector.hard_negatives`).
+   trained on. Exact Arrow/BLAS scoring of an anchor panel, label
+   filter fused BEFORE the rank
+   (:func:`operators.vector.hard_negatives_pandas`).
 2. **Duplication inflation** (q_dup_inflation) — per source, the
    expected number of copies of a uniformly sampled document's
    content (Σc²/Σc over exact-dup cluster sizes c): the factor by
@@ -47,21 +48,19 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales as the block-partitioned |A|×|C| grid, which is the
     honest cost of exact mining — ANN-bucket the anchors first when
     |A| is corpus-sized). The label predicate is fused before the
-    rank. Two implementations share this semantics (equivalence-
-    tested): the block-partitioned HOF form
-    (:func:`operators.vector.hard_negatives` — corpus-sized anchor
-    sets, no collect) and the Arrow/BLAS panel form used here
+    rank. Scored by the Arrow/BLAS panel form
     (:func:`operators.vector.hard_negatives_pandas` — one matmul per
     batch + exact batch-local top-k prune, so the rank shuffle sees
     O(batches·anchors·k) rows, never the |A|×|C| grid). Measured at
-    sf1 (500k×40 grid, fresh-session min-of-3): HOF fold 1.15 s →
-    Arrow 0.88 s, vs DuckDB 0.32 s. The residual is Arrow transfer
-    of the 128 MB embedding column into Python (the matmul itself is
-    ~50 ms) against DuckDB's in-process C++ ``list_cosine_similarity``
-    kernel — Spark SQL has no native vector-similarity function to
-    stay JVM-side with; the HOF fold that does stay JVM-side loses
-    to the BLAS batch anyway (same verdict as quantize_int8, the
-    numeric fixed-width family's winner is the Arrow kernel)."""
+    sf1 (500k×40 grid, fresh-session min-of-3): a block-partitioned
+    HOF fold took 1.15 s → Arrow 0.88 s, vs DuckDB 0.32 s. The
+    residual is Arrow transfer of the 128 MB embedding column into
+    Python (the matmul itself is ~50 ms) against DuckDB's in-process
+    C++ ``list_cosine_similarity`` kernel — Spark SQL has no native
+    vector-similarity function to stay JVM-side with; the HOF fold
+    that does stay JVM-side loses to the BLAS batch anyway (same
+    verdict as quantize_int8, the numeric fixed-width family's winner
+    is the Arrow kernel)."""
     from fifa_data_pipeline_spark.operators.vector import (
         hard_negatives_pandas,
     )
@@ -256,9 +255,9 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the quality/token projection is scan-fused; the
     cumulative-token ordering runs through the partition-parallel
-    prefix machinery (:func:`relational.grouped_running_sums` — range
-    shuffle + per-partition offsets, so no source ever sorts its
-    whole document set in one task; the few-value ``source`` key is
+    prefix machinery (:func:`relational.grouped_running_sums_bucketed`
+    — quality-score buckets + per-bucket offsets, so no source ever
+    sorts its whole document set in one task; the few-value ``source`` key is
     exactly the 100 TB window-funnel trap this machinery removes);
     the final rollup is source-sized. Sources whose single best doc
     already exceeds the half budget select nothing and drop out —

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.sources.io import (
     footer_minmax_int as _footer_minmax_int,
+    minmax_bounds,
     read_table,
 )
 
@@ -129,11 +130,8 @@ def q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = grouped_row_ranks(
         orders, ["o_orderpriority"], ["o_totalprice", "o_orderkey"],
         "__i",
-        bounds=_footer_minmax_int(
-            f"{sf_dir}/orders.parquet", "o_totalprice"
-        )
-        or tuple(
-            orders.agg(F.min("o_totalprice"), F.max("o_totalprice")).first()
+        bounds=minmax_bounds(
+            orders, f"{sf_dir}/orders.parquet", "o_totalprice"
         ),
     )
     # Group sizes from the rank output (max rank = group size), not

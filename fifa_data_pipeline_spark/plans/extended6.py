@@ -1,16 +1,11 @@
-"""Sixth extended-surface batch: the UDTF extension point (lateral
-one-to-many table function) with its JVM-native twin, and iterative
-PageRank over a graph derived from the purchase data.
+"""Sixth extended-surface batch: the native sentence splitter, and
+iterative PageRank over a graph derived from the purchase data.
 
-q_udtf_sentences / q_sentences_native share one DuckDB oracle (the
-identical RE2-safe split pattern runs on all three engines).
-q_pagerank is rows-only — a FLOAT iterative fixpoint isn't
-engine-portable (summation order) — pinned instead by
-``test_extended6.py``'s power-iteration reference on a hand-built
-graph plus mass-conservation invariants on the real one. Its
-integer-exact twin ``q_pagerank_exact`` (plans/extended27.py,
-``graph.pagerank_micro``) IS fully value-hash oracle-able against an
-unrolled DuckDB recurrence.
+q_sentences_native's DuckDB oracle runs the identical RE2-safe split
+pattern. q_pagerank is hash-checked against an unrolled DuckDB
+recurrence (``extended27._pagerank_oracle_float``);
+``test_extended6.py`` also pins :func:`operators.graph.pagerank`
+against a power-iteration reference on a hand-built graph.
 """
 
 from __future__ import annotations
@@ -20,7 +15,6 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.graph import pagerank
 from fifa_data_pipeline_spark.operators.tablefuncs import (
-    split_sentences,
     split_sentences_native,
 )
 from fifa_data_pipeline_spark.sources.io import read_table
@@ -32,14 +26,8 @@ from fifa_data_pipeline_spark.sources.io import read_table
 _SEG = r"[.!?]+\s+|\sthe\s"
 
 
-def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment rows via the Python UDTF (LATERAL table function)."""
-    docs = read_table(spark, sf_dir, "documents")
-    return split_sentences(spark, docs, pattern=_SEG)
-
-
 def q_sentences_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same rows via the zero-shuffle native array pipeline."""
+    """Segment rows via the zero-shuffle native array pipeline."""
     docs = read_table(spark, sf_dir, "documents")
     return split_sentences_native(docs, pattern=_SEG)
 
@@ -285,7 +273,6 @@ def q_array_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "q_udtf_sentences": q_udtf_sentences,
     "q_sentences_native": q_sentences_native,
     "q_pagerank": q_pagerank,
     "q_rolling_range": q_rolling_range,
@@ -297,7 +284,8 @@ QUERIES = {
     "q_array_fold": q_array_fold,
 }
 
-_SENT_ORACLE = f"""
+ORACLES = {
+    "q_sentences_native": f"""
     WITH t AS (
       SELECT doc_id,
              list_filter(list_transform(
@@ -309,11 +297,7 @@ _SENT_ORACLE = f"""
            CAST(i AS INTEGER) AS sent_idx,
            frags[i] AS sentence
     FROM t, unnest(range(1, len(frags) + 1)) AS u(i)
-"""
-
-ORACLES = {
-    "q_udtf_sentences": _SENT_ORACLE,
-    "q_sentences_native": _SENT_ORACLE,
+""",
     "q_rolling_range": """
         WITH o AS (
           SELECT o_orderkey, o_custkey, o_totalprice,

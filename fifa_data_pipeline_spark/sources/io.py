@@ -237,6 +237,18 @@ def footer_minmax_int(path: str, col: str) -> tuple | None:
     return out
 
 
+def minmax_bounds(df: DataFrame, path: str, col: str) -> tuple:
+    """(MIN, MAX) of ``col`` for the bucketed prefix machinery's
+    ``bounds``: the footer statistics of the parquet table at ``path``
+    (:func:`footer_minmax_int` — zero Spark jobs), else one aggregate
+    over ``df``. ``df`` may be a filtered or projected read of that
+    table: the footer range is then a superset, which bucketing
+    accepts (coarser buckets, same result)."""
+    return footer_minmax_int(path, col) or tuple(
+        df.agg(F.min(col), F.max(col)).first()
+    )
+
+
 def footer_minmax_micros(path: str, col: str) -> tuple | None:
     """(MIN, MAX) of a timestamp column as EPOCH MICROSECONDS, from
     parquet footer statistics only (r11) — the zero-job bounds probe

@@ -1,11 +1,13 @@
 """Dead-code guard: every top-level ``def``, ``class`` and module
 constant in the package must be reached from code — the package,
 ``tools/``, ``bench.py``, ``perfbench/`` or ``__spark_entry__.py`` —
-outside its own definition. Only the AST counts: a name, an attribute,
-an import alias, or a string constant equal to the name (registry keys,
-``__all__``). Docstrings, comments and tests do not make a name live,
-except for the few names in ``TEST_REFERENCES``, which exist for tests
-and say why."""
+outside its own definition. Only the AST counts: a name, an attribute
+or an import alias. String constants do not count, so a registry key,
+an ``__all__`` entry or a query-name skip list that spells a name does
+not keep it alive (every registry key is also reached as a ``Name``).
+Docstrings, comments and tests do not make a name live either, except
+for the few names in ``TEST_REFERENCES``, which exist for tests and
+say why."""
 
 from __future__ import annotations
 
@@ -69,8 +71,6 @@ def _refs(tree: ast.AST) -> list[str]:
             out.append(node.attr)
         elif isinstance(node, ast.alias):
             out.append(node.name.rsplit(".", 1)[-1])
-        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-            out.append(node.value)
     return out
 
 

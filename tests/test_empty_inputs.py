@@ -72,7 +72,6 @@ def test_new_batch_ops_on_empty(spark):
     from fifa_data_pipeline_spark.operators.graph import pagerank
     from fifa_data_pipeline_spark.operators.relational import salted_join
     from fifa_data_pipeline_spark.operators.tablefuncs import (
-        split_sentences,
         split_sentences_native,
     )
 
@@ -85,7 +84,6 @@ def test_new_batch_ops_on_empty(spark):
     assert salted_join(left, right, ["k"]).count() == 0
 
     docs = _empty(spark, "doc_id long, text string")
-    assert split_sentences(spark, docs).count() == 0
     assert split_sentences_native(docs).count() == 0
 
     ev = _empty(spark, "user_id long, ts timestamp, value double")
@@ -160,7 +158,7 @@ def test_round4_statistics_ops_on_empty(spark):
 def test_round5_order_statistics_on_empty(spark):
     df = _empty(spark, "g string, v double, id bigint, w bigint")
     assert R.grouped_running_sums(df, ["g"], "v", ["w"]).count() == 0
-    assert R.grouped_tie_rank2(df, "g", "v").count() == 0
+    assert R.grouped_tie_rank2(df, "g", "v", bounds=(None, None)).count() == 0
     assert R.grouped_row_ranks(df, ["g"], ["v", "id"]).count() == 0
     assert R.parallel_ntile(df, ["g"], ["v", "id"], 4).count() == 0
     assert R.grouped_topk(df, ["g"], "v", "id", 5).count() == 0

@@ -4,6 +4,7 @@ sharded training export, PNG codec registry wiring."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pyspark.sql.functions as F
 
@@ -93,33 +94,11 @@ def test_keyset_cursor_tuple_semantics(spark, sf_dir):
         assert (r.o_orderdate, r.o_orderkey) > (cd, ck)
 
 
-def test_dense_ids_are_gapfree_and_windowless(spark, sf_dir):
-    from fifa_data_pipeline_spark.operators.relational import (
-        assign_dense_ids,
-    )
-
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey")
-    out = assign_dense_ids(orders, ["o_orderkey"], num_partitions=7)
-    rows = out.collect()
-    ids = sorted(r.row_id for r in rows)
-    assert ids == list(range(1, len(rows) + 1))
-    # ids follow the key order
-    by_key = sorted(rows, key=lambda r: r.o_orderkey)
-    assert [r.row_id for r in by_key] == ids
-    # the whole point: no global-sort window (1-task collapse); the
-    # range shuffle now lives BEHIND the lazy localCheckpoint pin, so
-    # the visible plan scans the pinned RDD instead of showing
-    # rangepartitioning directly
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "ExistingRDD" in plan
-
-
 def test_dense_ids_bucketed_path_matches(spark, sf_dir):
-    """With bounds supplied, dense ids ride the bucketed row-rank
-    machinery: same gap-free 1..N contract, no checkpointed RDD in
-    the plan, and the only Window partitions by the derived bucket
-    (never a global single-task sort)."""
+    """Dense ids ride the bucketed row-rank machinery: gap-free
+    1..N in key order, no checkpointed RDD in the plan, and the
+    window that computes the row count partitions by the derived
+    bucket (never a global single-task sort over the fact)."""
     from pyspark.sql import functions as F
 
     from fifa_data_pipeline_spark.operators.relational import (
@@ -138,6 +117,8 @@ def test_dense_ids_bucketed_path_matches(spark, sf_dir):
     assert [r.row_id for r in by_key] == ids
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan  # no checkpoint pin
+    # the row-count window partitions by the bucket alone
+    assert re.search(r"AS __loc___one#\d+L?\], \[__bkt#\d+L?\], ", plan)
 
 
 def test_table_checksum_order_insensitive_and_sensitive(spark):

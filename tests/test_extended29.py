@@ -10,10 +10,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from fifa_data_pipeline_spark.operators.vector import (
-    hard_negatives,
-    hard_negatives_pandas,
-)
+from fifa_data_pipeline_spark.operators.vector import hard_negatives_pandas
 from fifa_data_pipeline_spark.plans.extended29 import (
     q_dup_inflation,
     q_hard_negatives,
@@ -38,7 +35,7 @@ def test_hard_negatives_excludes_same_label(spark):
         (4, [-1.0, 0.0], 2),
     ]
     emb = _emb(spark, rows)
-    out = hard_negatives(emb, emb.filter(F.col("vec_id") == 0), k=2)
+    out = hard_negatives_pandas(emb, emb.filter(F.col("vec_id") == 0), k=2)
     got = {(r.vec_id, r.rank): r for r in out.collect()}
     assert set(got) == {(2, 1), (3, 2)}
     for r in got.values():
@@ -57,7 +54,7 @@ def test_hard_negatives_matches_bruteforce_ordering(spark):
     ]
     emb = _emb(spark, rows)
     anchors = emb.filter(F.col("vec_id") < 4)
-    out = hard_negatives(emb, anchors, k=5, n_blocks=4).collect()
+    out = hard_negatives_pandas(emb, anchors, k=5).collect()
     by_anchor: dict[int, list] = {}
     for r in sorted(out, key=lambda r: (r.qid, r.rank)):
         by_anchor.setdefault(r.qid, []).append(r)
@@ -79,32 +76,11 @@ def test_hard_negatives_matches_bruteforce_ordering(spark):
         assert sims == sorted(sims, reverse=True)
 
 
-def test_hard_negatives_pandas_equals_hof_form(spark):
-    """The Arrow/BLAS panel form and the block-partitioned HOF form
-    return the identical (qid, rank) -> (vec_id, sim) mapping — the
-    batch-local top-k prune is lossless and both share the 6-dp +
-    id tie-break ordering."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    vecs = rng.randn(60, 16).astype("float64")
-    rows = [
-        (i, [float(x) for x in vecs[i]], int(i % 4)) for i in range(60)
-    ]
-    emb = _emb(spark, rows)
-    anchors = emb.filter(F.col("vec_id") < 6)
-    hof = hard_negatives(emb, anchors, k=4, n_blocks=4).collect()
-    arrow = hard_negatives_pandas(emb, anchors, k=4).collect()
-    key = lambda r: (r.qid, r.rank)
-    val = lambda r: (r.vec_id, r.sim, r.anchor_label, r.neg_label)
-    assert {key(r): val(r) for r in hof} == {key(r): val(r) for r in arrow}
-
-
 def test_hard_negatives_pandas_drops_null_labels(spark):
-    """NULL-label corpus rows are negatives in NEITHER form: the HOF
-    form's SQL ``<>`` is NULL on them, and the Arrow form masks them
-    explicitly (numpy ``!=`` alone would treat None as a distinct
-    label and emit them — r8 advice fix)."""
+    """NULL-label corpus rows are never negatives, matching SQL
+    ``<>`` (NULL on them) in the DuckDB twin: the Arrow form masks
+    them explicitly, because numpy ``!=`` alone would treat None as a
+    distinct label and emit them."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -122,12 +98,8 @@ def test_hard_negatives_pandas_drops_null_labels(spark):
     ]
     emb = spark.createDataFrame(rows, schema)
     anchors = emb.filter(F.col("vec_id") == 0)
-    hof = hard_negatives(emb, anchors, k=3, n_blocks=2).collect()
-    arrow = hard_negatives_pandas(emb, anchors, k=3).collect()
-    assert {r.vec_id for r in hof} == {2, 3}
-    key = lambda r: (r.qid, r.rank)
-    val = lambda r: (r.vec_id, r.sim, r.anchor_label, r.neg_label)
-    assert {key(r): val(r) for r in hof} == {key(r): val(r) for r in arrow}
+    out = hard_negatives_pandas(emb, anchors, k=3).collect()
+    assert {r.vec_id for r in out} == {2, 3}
 
 
 def test_dup_inflation_exact_small_case(spark, tmp_path):

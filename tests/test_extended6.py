@@ -1,5 +1,5 @@
-"""UDTF contract and PageRank correctness (oracle parity for the
-sentence queries is covered by test_oracle_parity)."""
+"""Sentence splitting and PageRank correctness (oracle parity for
+q_sentences_native is covered by test_oracle_parity)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.graph import pagerank
 from fifa_data_pipeline_spark.operators.tablefuncs import (
-    split_sentences,
     split_sentences_native,
 )
 from fifa_data_pipeline_spark.plans import extended6 as X6
@@ -28,9 +27,9 @@ def _doc_df(spark):
     )
 
 
-def test_udtf_splits_punctuated_text(spark):
+def test_sentence_split_punctuated_text(spark):
     rows = sorted(
-        map(tuple, split_sentences(spark, _doc_df(spark)).collect())
+        map(tuple, split_sentences_native(_doc_df(spark)).collect())
     )
     # The punctuation run is part of the delimiter (consumed), like
     # any split-based segmenter; trailing delimiters leave no empty row.
@@ -43,13 +42,6 @@ def test_udtf_splits_punctuated_text(spark):
         (3, 1, "trailing"),
         # doc 4 (NULL) and doc 5 (only separators) yield no rows
     ]
-
-
-def test_udtf_matches_native_twin(spark):
-    df = _doc_df(spark)
-    got_udtf = sorted(map(tuple, split_sentences(spark, df).collect()))
-    got_native = sorted(map(tuple, split_sentences_native(df).collect()))
-    assert got_udtf == got_native
 
 
 def _numpy_pagerank(edges, d=0.85, n_iter=10):

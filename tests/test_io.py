@@ -203,3 +203,45 @@ def test_footer_probes_detect_in_place_rewrite(spark, tmp_path):
     # the explicit reset hook for rebuild tooling stays callable.
     io.clear_footer_caches()
     assert io.footer_minmax_int(d, "k") == (100, 1099)
+
+
+def _bounds_with_jobs(spark, df, path, col, group):
+    """``io.minmax_bounds`` under a fresh job group, with the Spark
+    job ids that group launched."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        got = io.minmax_bounds(df, path, col)
+    finally:
+        sc._jsc.clearJobGroup()
+    return got, set(sc.statusTracker().getJobIdsForGroup(group)) - before
+
+
+def test_minmax_bounds_uses_footer_stats_without_a_job(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "with_stats.parquet")
+    pq.write_table(pa.table({"k": [5, -3, 12, 7]}), path)
+    got, jobs = _bounds_with_jobs(
+        spark, spark.read.parquet(path), path, "k", "minmax-footer"
+    )
+    assert got == (-3, 12)
+    assert jobs == set()
+
+
+def test_minmax_bounds_probes_when_footer_has_no_stats(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "no_stats.parquet")
+    pq.write_table(
+        pa.table({"k": [5, -3, 12, 7]}), path, write_statistics=False
+    )
+    assert io.footer_minmax_int(path, "k") is None
+    got, jobs = _bounds_with_jobs(
+        spark, spark.read.parquet(path), path, "k", "minmax-probe"
+    )
+    assert got == (-3, 12)
+    assert jobs  # the aggregate ran

@@ -253,7 +253,9 @@ def test_dense_ids_match_rank_for_any_input(spark, keys):
     )
 
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    out = assign_dense_ids(df, ["k"], num_partitions=4).collect()
+    out = assign_dense_ids(
+        df, ["k"], num_partitions=4, bounds=(min(keys), max(keys))
+    ).collect()
     got = {r.k: r.row_id for r in out}
     expect = {k: i + 1 for i, k in enumerate(sorted(keys))}
     assert got == expect

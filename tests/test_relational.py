@@ -166,6 +166,7 @@ def test_grouped_tie_rank2_matches_rank_window(spark):
     from pyspark.sql import Window
 
     rows = [(i % 2, (i * i) % 7) for i in range(500)]
+    vals = [v for _, v in rows]
     df = spark.createDataFrame(rows, ["g", "v"])
     wr = Window.partitionBy("g").orderBy("v")
     wt = Window.partitionBy("g", "v")
@@ -179,7 +180,9 @@ def test_grouped_tie_rank2_matches_rank_window(spark):
     }
     got = {
         (r.g, r.v, r.rank2)
-        for r in R.grouped_tie_rank2(df, "g", "v").collect()
+        for r in R.grouped_tie_rank2(
+            df, "g", "v", bounds=(min(vals), max(vals))
+        ).collect()
     }
     assert got == want
 
@@ -576,13 +579,11 @@ def test_grouped_running_sums_bucketed_emit_totals(spark):
         assert len(got) == len(want), share
 
 
-def test_grouped_row_ranks_share_input_ties_exact(spark):
-    """share_input=True takes bucket totals from the LAST prefix row
-    via max_by on the order key; with duplicate (group, order) values
-    a bare key would pick an arbitrary tied row and undercount every
-    later bucket's offset (r9 ADVICE). The wrapper appends a unique
-    tiebreak, so per-group ranks must still be exactly 1..n even when
-    ties sit on bucket boundaries."""
+def test_grouped_row_ranks_ties_exact(spark):
+    """With duplicate (group, order) values the bucket totals must
+    still count every tied row, so per-group ranks are exactly 1..n
+    even when ties sit on bucket boundaries, and no internal column
+    leaks into the output."""
     from fifa_data_pipeline_spark.operators.relational import (
         grouped_row_ranks,
     )
@@ -591,10 +592,9 @@ def test_grouped_row_ranks_share_input_ties_exact(spark):
     rows = [(f"g{i % 3}", float(i % 10), i) for i in range(1200)]
     df = spark.createDataFrame(rows, ["g", "v", "payload"])
     out = grouped_row_ranks(
-        df, ["g"], ["v"], bounds=(0.0, 9.0), num_partitions=7,
-        share_input=True,
+        df, ["g"], ["v"], bounds=(0.0, 9.0), num_partitions=7
     )
-    assert "__tb" not in out.columns
+    assert set(out.columns) == {"g", "v", "payload", "row_rank"}
     got = {}
     for r in out.collect():
         got.setdefault(r["g"], []).append(r["row_rank"])
@@ -602,13 +602,11 @@ def test_grouped_row_ranks_share_input_ties_exact(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), g
 
 
-def test_grouped_running_max_dense_share_input_null_order(spark):
-    """share_input=True totals use max_by; ordering on the BARE order
-    column makes max_by skip NULL-key rows so the NULL bucket (−1)
-    never contributes to later buckets' offsets (r9 ADVICE). Ordering
-    on struct(order_col) is non-null, so the result must match the
-    window form with NULLS FIRST even when the NULL rows hold the
-    global max."""
+def test_grouped_running_max_dense_null_order(spark):
+    """NULL order keys form bucket −1, which sorts first; its rows
+    must contribute to every later bucket's offset, so the result
+    matches the window form with NULLS FIRST even when the NULL rows
+    hold the global max."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -631,7 +629,7 @@ def test_grouped_running_max_dense_share_input_null_order(spark):
     got = {
         (r["g"], r["i"]): r["v_rmax"]
         for r in grouped_running_max_dense(
-            df, ["g"], "i", ["v"], num_buckets=7, share_input=True
+            df, ["g"], "i", ["v"], num_buckets=7
         ).collect()
         if r["i"] is not None
     }

@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
@@ -39,7 +40,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = sys.argv[2:]
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from bench import HEADLINE
     from fifa_data_pipeline_spark.sources.io import TABLES

@@ -16,6 +16,7 @@ import datetime as dt
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -56,7 +57,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from fifa_data_pipeline_spark.session import get_spark
 

@@ -10,6 +10,9 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 #: query -> one-line reading guide (what to look for in the plan).
 PICKS = {
@@ -49,9 +52,10 @@ PICKS = {
     "PushedFilters",
     "q_tpch_q21": "both aggregates at the order grain; orders-F "
     "keys and supplier names broadcast; TakeOrderedAndProject tail",
-    "q_dense_ids": "range Exchange + InMemoryRelation pin + "
-    "broadcast offset join — NO Window operator anywhere (the "
-    "global row_number would collapse to one task)",
+    "q_dense_ids": "one hash Exchange on the value bucket (__bkt) "
+    "feeding the row-count Window + broadcast per-bucket offset "
+    "join — no checkpoint pin and no global single-task Window over "
+    "the fact",
     "q_mv_rollup": "two stacked HashAggregate pairs (day-grain MV, "
     "month rollup) — the rewrite's whole cost structure",
     "q_table_checksum": "single scan, md5 fold as a Project, one "
@@ -98,16 +102,18 @@ PICKS = {
     "kernel with exact batch-local top-k prune) into ONE Exchange "
     "for the global rank — candidate volume O(batches·anchors·k), "
     "never the |A|×|C| pair grid; no Cartesian, no BNLJ",
-    "q_budget_select": "range Exchange + per-partition offsets "
-    "(grouped_running_sums) — the few-value source key never sorts "
-    "its documents in one task; totals ride a broadcast join; final "
-    "rollup is source-sized",
+    "q_budget_select": "hash Exchange on (value bucket, source), "
+    "shared at run time by the prefix window and the totals branch "
+    "(ReuseExchange), + per-bucket offsets "
+    "(grouped_running_sums_bucketed) — the few-value source key never "
+    "sorts its documents in one task; totals ride a broadcast join; "
+    "final rollup is source-sized",
 }
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     import __spark_entry__ as entrymod
     from fifa_data_pipeline_spark.session import get_spark
 
@@ -135,7 +141,7 @@ def main() -> int:
         out.append(buf.getvalue().rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(PICKS)} plans)")
     return 0

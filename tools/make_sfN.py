@@ -17,13 +17,14 @@ Usage::
 
     python tools/make_sfN.py [out_dir] [copies]
 
-Defaults: /root/repo/.benchdata/sf1, 10 copies.
+Defaults: ``.benchdata/sf1`` under the repo root, 10 copies.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 
@@ -46,7 +47,9 @@ SINGLE_COPY = ["region", "nation"]
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.benchdata/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else str(
+        Path(__file__).resolve().parents[1] / ".benchdata" / "sf1"
+    )
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 #: Queries whose plan legitimately contains BroadcastNestedLoopJoin:
 #: non-equi joins against a BOUNDED broadcast side (range join,
@@ -92,7 +93,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from bench import HEADLINE
     from fifa_data_pipeline_spark.session import get_spark
