@@ -1,18 +1,23 @@
 """Relational operators (SURVEY.md §2.2-2.4).
 
-Every operator the reference exercises — projections, filters, casts,
-inner equi-joins, hash aggregations, distinct, and the "latest row
-per group" idiom — as pure functions over DataFrames. Each function
-declares a logical plan; Catalyst plans the physical side (partial +
-final HashAggregate, broadcast vs sort-merge join, pushdown).
+Operators that hide an algorithm or a contract — the "latest row per
+group" idiom, AS-OF and skew-salted joins, merge/upsert, the bounded
+prefix machinery, exact order statistics — as pure functions over
+DataFrames. A plain projection, filter, join, aggregate or set
+operation is written at its call site as the DataFrame method itself
+(``df.select``, ``df.filter``, ``left.join(right, cond, how)``,
+``groupBy().agg()``, ``rollup``, ``unpivot`` …), not through a
+rename here. Each function declares a logical plan; Catalyst plans
+the physical side (partial + final HashAggregate, broadcast vs
+sort-merge join, pushdown).
 
 Scale notes are attached per function; the common themes:
 
 - Aggregations are expressed as ``groupBy().agg()`` so Spark always
   plans a map-side partial aggregate before the shuffle.
-- Joins against genuinely-small dimensions take an optional broadcast
-  hint; fact-fact joins are left to AQE, which demotes sort-merge to
-  broadcast at runtime if the build side turns out small.
+- Fact-fact joins are left to AQE, which demotes sort-merge to
+  broadcast at runtime if the build side turns out small; callers
+  hint ``F.broadcast`` only on genuinely small dimensions.
 """
 
 from __future__ import annotations
@@ -26,83 +31,8 @@ from fifa_data_pipeline_spark.operators.util import materialize_once
 
 
 # ---------------------------------------------------------------------------
-# Projections / filters (P1-P4)
+# The latest-per-group idiom (A1+J1/J2) and the AS-OF join
 # ---------------------------------------------------------------------------
-
-def project(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Explicit select-list projection (P1/P2, reference
-    ``prefect/spark/fifa_spark.py:44-47,57-61``). Catalyst's
-    ColumnPruning pushes the narrow ReadSchema into the parquet scan.
-    """
-    return df.select(*cols)
-
-
-def filter_neq(df: DataFrame, col: str, value) -> DataFrame:
-    """Inequality filter (P3: ``WHERE league_id != 78``, reference
-    ``etl_kaggle_to_big_query.py:109``). Pushed to the parquet scan
-    as a ``Not(EqualTo)`` filter."""
-    return df.filter(F.col(col) != F.lit(value))
-
-
-def filter_notnull(df: DataFrame, col: str) -> DataFrame:
-    """Null-predicate filter (P4: ``WHERE player_id IS NOT NULL``,
-    reference ``etl_kaggle_to_big_query.py:161``)."""
-    return df.filter(F.col(col).isNotNull())
-
-
-# ---------------------------------------------------------------------------
-# Aggregations (A1-A3)
-# ---------------------------------------------------------------------------
-
-def group_max(df: DataFrame, key: str, value: str, alias: str) -> DataFrame:
-    """GROUP BY one key + MAX (A1: latest update per FIFA version,
-    reference ``fifa_spark.py:34-39``). Works identically for string
-    MAX (A2's canonical-name pick, ``fifa_spark.py:72-77``).
-
-    Scale: partial MAX runs map-side, so the shuffle carries one row
-    per (task, key) — cardinality of the key, not of the input.
-    """
-    return df.groupBy(key).agg(F.max(value).alias(alias))
-
-
-def distinct_rows(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """DISTINCT / dropDuplicates (A2's redundant ``SELECT DISTINCT``,
-    reference ``fifa_spark.py:74``). Planned as a hash aggregate with
-    map-side partial dedup."""
-    return df.select(*cols).distinct() if cols else df.distinct()
-
-
-def multi_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """GROUP BY k keys + mixed SUM/MAX/AVG aggregate list (A3: the
-    flagship ``team_view`` aggregate, reference ``fifa_spark.py:80-98``).
-    Catalyst plans partial+final HashAggregate automatically."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# Joins (J1-J4) and the latest-per-group idiom
-# ---------------------------------------------------------------------------
-
-def equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[tuple[str, str]],
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Inner equi-join on composite keys (J1-J4). ``on`` is a list of
-    (left_col, right_col) pairs. ``broadcast_right=True`` hints a
-    broadcast-hash join for genuinely-small dimensions (the versions
-    table in the reference is ≤ #game-versions rows); otherwise AQE
-    picks the strategy at runtime."""
-    cond = None
-    for lc, rc in on:
-        clause = left[lc] == right[rc]
-        cond = clause if cond is None else (cond & clause)
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, cond, "inner")
-
 
 def latest_per_group_join(
     df: DataFrame, group_key: str, order_col: str
@@ -188,64 +118,6 @@ def latest_per_group_window(
     )
 
 
-# ---------------------------------------------------------------------------
-# Ordering / top-k (§2.5 extension surface)
-# ---------------------------------------------------------------------------
-
-def topk(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
-    """ORDER BY + LIMIT k. Spark plans ``TakeOrderedAndProject`` — a
-    per-partition top-k followed by a k-row merge on the driver, so no
-    global sort materializes even at 100 TB."""
-    return df.orderBy(*order_by).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# Join variants beyond the reference (SURVEY.md §2.5 extension surface)
-# ---------------------------------------------------------------------------
-
-def semi_join(left: DataFrame, right: DataFrame, on: Sequence[tuple[str, str]]) -> DataFrame:
-    """LEFT SEMI: keep left rows with at least one match — the
-    EXISTS/IN idiom without duplicating or widening rows. Same
-    shuffle shape as inner join but the build side only stores keys."""
-    cond = _join_cond(left, right, on)
-    return left.join(right, cond, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: Sequence[tuple[str, str]]) -> DataFrame:
-    """LEFT ANTI: keep left rows with NO match (NOT EXISTS)."""
-    cond = _join_cond(left, right, on)
-    return left.join(right, cond, "left_anti")
-
-
-def outer_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[tuple[str, str]],
-    how: str = "left_outer",
-) -> DataFrame:
-    """LEFT/RIGHT/FULL OUTER equi-join."""
-    cond = _join_cond(left, right, on)
-    return left.join(right, cond, how)
-
-
-def _join_cond(left: DataFrame, right: DataFrame, on: Sequence[tuple[str, str]]):
-    cond = None
-    for lc, rc in on:
-        clause = left[lc] == right[rc]
-        cond = clause if cond is None else (cond & clause)
-    return cond
-
-
-def range_join(left: DataFrame, right: DataFrame, cond: Column) -> DataFrame:
-    """Non-equi (range/theta) join. With a tiny band/interval side the
-    plan is BroadcastNestedLoopJoin — each left partition scans the
-    broadcast bands, no shuffle of the fact side; that is the only
-    range-join shape that survives 100 TB (a non-broadcast theta join
-    is cartesian). For interval joins against a LARGE side, bucket
-    both sides by coarse range first to recover an equi-join prefix."""
-    return left.join(F.broadcast(right), cond, "inner")
-
-
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
@@ -302,37 +174,6 @@ def as_of_join(
 
 
 # ---------------------------------------------------------------------------
-# Set operations / multi-dimensional aggregates (§2.5)
-# ---------------------------------------------------------------------------
-
-def union_all(*dfs: DataFrame) -> DataFrame:
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def intersect_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersect(b)
-
-
-def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.subtract(b)
-
-
-def rollup_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """GROUP BY ROLLUP — hierarchical subtotals (NULL key = total).
-    Planned as an Expand + single hash aggregate: input replicated
-    once per grouping set, partial-agg'd map-side."""
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """GROUP BY CUBE — all key-subset subtotals."""
-    return df.cube(*keys).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
 # Skew helper (scale posture, SURVEY.md §7.3 M3)
 # ---------------------------------------------------------------------------
 
@@ -376,54 +217,8 @@ def salted_join(
 
 
 # ---------------------------------------------------------------------------
-# Pivot / unpivot / grouping sets / merge (§2.5 extended surface)
+# Merge / snapshot diff and the rest of the §2.5 extended surface
 # ---------------------------------------------------------------------------
-
-def pivot_agg(
-    df: DataFrame,
-    group_key: str,
-    pivot_col: str,
-    pivot_values: Sequence[str],
-    agg: Column,
-    prefix: str = "v_",
-) -> DataFrame:
-    """GROUP BY + PIVOT: one output column per pivot value.
-
-    ``pivot_values`` is EXPLICIT (never inferred): inference costs an
-    extra distinct-scan of the input, and at 100 TB an unbounded value
-    set would explode the schema. With fixed values the plan is a
-    single hash aggregate over conditional expressions — no extra
-    pass, no shuffle beyond the groupBy."""
-    out = df.groupBy(group_key).pivot(pivot_col, list(pivot_values)).agg(agg)
-    for v in pivot_values:
-        out = out.withColumnRenamed(str(v), f"{prefix}{v}")
-    return out
-
-
-def unpivot(
-    df: DataFrame,
-    ids: Sequence[str],
-    value_cols: Sequence[str],
-    var_name: str = "metric",
-    value_name: str = "value",
-) -> DataFrame:
-    """UNPIVOT/melt: wide → long. Planned as a single Expand node
-    (each input row emitted once per value column) — one pass, no
-    shuffle, no union of N scans."""
-    return df.unpivot(list(ids), list(value_cols), var_name, value_name)
-
-
-def grouping_sets_agg(
-    df: DataFrame,
-    sets: Sequence[Sequence[str]],
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """GROUP BY GROUPING SETS — arbitrary subtotal combinations
-    (rollup/cube are special cases). Same Expand + single hash-agg
-    physical shape as rollup_agg."""
-    return df.groupingSets([list(s) for s in sets], *keys).agg(*aggs)
-
 
 def merge_upsert(
     base: DataFrame, updates: DataFrame, key: str
@@ -1198,7 +993,8 @@ def grouped_running_max_dense(
     order_col: str,
     max_cols: list[str],
     num_buckets: int | None = None,
-    bounds: tuple | None = None,
+    *,
+    bounds: tuple,
 ) -> DataFrame:
     """Exact per-group RUNNING MAX of ``max_cols`` in ``order_col``
     order for a DENSE-ish integer ``order_col`` (an arrival sequence /
@@ -1218,23 +1014,16 @@ def grouped_running_max_dense(
     Exactness does not depend on density — any integer key works
     because bucket order aligns with key order; density only keeps
     the buckets BALANCED (a heavily clustered key could skew them).
-    The max(order_col) probe is a bounded driver scalar (parquet
-    footer-stats fast), the repo's documented convention for 1-row
-    frames."""
+    ``bounds`` = (min, max) of ``order_col``, probed cheaply from the
+    raw table (:func:`~...sources.io.minmax_bounds`); ``(None, None)``
+    (an empty input) puts every row in one bucket."""
     if num_buckets is None:
         num_buckets = 2 * df.sparkSession.sparkContext.defaultParallelism
-    # caller-supplied (min, max) of ``order_col`` — footer-stats
-    # cheap on a raw table (r11); aggregate probe fallback.
-    lo, hi = (
-        (int(bounds[0]), int(bounds[1]))
-        if bounds is not None and bounds[0] is not None
-        else df.agg(
-            F.min(order_col).cast("long"), F.max(order_col).cast("long")
-        ).first()
-    )
+    lo, hi = bounds
     if lo is None:
         width = 1
     else:
+        lo, hi = int(lo), int(hi)
         width = max((hi - lo) // num_buckets + 1, 1)
     # coalesce(-1) does two jobs: NULL order keys map to bucket -1
     # (sorts first, matching the window's NULLS FIRST), and the
@@ -1485,7 +1274,8 @@ def exact_group_quantiles(
     value_col: str,
     permille: Sequence[int] = (250, 500, 750, 900, 990),
     num_partitions: int | None = None,
-    bounds: tuple | None = None,
+    *,
+    bounds: tuple[float, float],
 ) -> DataFrame:
     """EXACT per-group quantiles at 100 TB — no ``approx_percentile``
     error bars and no ``Window.partitionBy(<few-value key>)``
@@ -1495,7 +1285,9 @@ def exact_group_quantiles(
     1. per-(group, value) counts — a hash aggregate, the only pass
        over raw rows;
     2. partition-parallel prefix sums over the distinct-value spine
-       (:func:`grouped_running_sums`);
+       (:func:`grouped_running_sums_bucketed`, split on ``bounds`` =
+       (min, max) of ``value_col`` from
+       :func:`~...sources.io.minmax_bounds`);
     3. the q-quantile is the smallest value whose cumulative count
        reaches rank ``max(1, ceil(q·n))`` — DuckDB's
        ``quantile_disc`` convention, carried as INTEGER per-mille
@@ -1510,18 +1302,12 @@ def exact_group_quantiles(
     counts = df.groupBy(group_col, value_col).agg(
         F.count(F.lit(1)).alias("__cnt")
     )
-    # Bounds probed on the RAW fact, or passed by the caller from
-    # parquet footer stats (r11 — zero Spark jobs; a superset range
-    # is fine, the machinery only buckets on it); the bucketed spine
-    # machinery shuffles the distinct-value spine once with no
-    # checkpoint pin (r8 — the generic grouped_running_sums pays a
-    # range shuffle, a localCheckpoint materialization, AND a second
-    # full hash shuffle on a spine that is nearly fact-sized for
-    # high-cardinality value columns).
-    if bounds is None:
-        bounds = tuple(
-            df.agg(F.min(value_col), F.max(value_col)).first()
-        )
+    # A superset range is fine, the machinery only buckets on it;
+    # the bucketed spine machinery shuffles the distinct-value spine
+    # once with no checkpoint pin (r8 — the generic
+    # grouped_running_sums pays a range shuffle, a localCheckpoint
+    # materialization, AND a second full hash shuffle on a spine that
+    # is nearly fact-sized for high-cardinality value columns).
     # share_input=False + totals re-aggregated from ``counts``: the
     # quantile spine is near-fact-sized for high-cardinality value
     # columns, so re-sorting it from shuffle files costs more than
@@ -1583,7 +1369,8 @@ def exact_group_quantiles_cont(
     value_col: str,
     permille: Sequence[int] = (250, 500, 750, 900, 990),
     num_partitions: int | None = None,
-    bounds: tuple | None = None,
+    *,
+    bounds: tuple[float, float],
 ) -> DataFrame:
     """CONTINUOUS (interpolated, type-7 / ``percentile_cont``)
     per-group quantiles, exact at any scale — the companion of
@@ -1611,13 +1398,7 @@ def exact_group_quantiles_cont(
         F.count(F.lit(1)).alias("__cnt")
     )
     # Same bucketed-spine machinery as the discrete form (r8): one
-    # spine shuffle, no checkpoint; bounds probed on the raw fact or
-    # passed by the caller from parquet footer stats (r11 — zero
-    # Spark jobs; superset range suffices).
-    if bounds is None:
-        bounds = tuple(
-            df.agg(F.min(value_col), F.max(value_col)).first()
-        )
+    # spine shuffle, no checkpoint; ``bounds`` as there.
     # share_input=False + totals re-aggregated from ``counts``: the
     # quantile spine is near-fact-sized for high-cardinality value
     # columns, so re-sorting it from shuffle files costs more than

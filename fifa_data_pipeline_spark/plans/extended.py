@@ -19,17 +19,17 @@ from fifa_data_pipeline_spark.sources.io import read_table
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
-    return R.semi_join(customer, orders, [("c_custkey", "o_custkey")]).select(
-        "c_custkey", "c_name"
-    )
+    return customer.join(
+        orders, customer["c_custkey"] == orders["o_custkey"], "left_semi"
+    ).select("c_custkey", "c_name")
 
 
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
-    return R.anti_join(customer, orders, [("c_custkey", "o_custkey")]).select(
-        "c_custkey", "c_name"
-    )
+    return customer.join(
+        orders, customer["c_custkey"] == orders["o_custkey"], "left_anti"
+    ).select("c_custkey", "c_name")
 
 
 def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +38,9 @@ def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     introduces)."""
     nation = read_table(spark, sf_dir, "nation")
     customer = read_table(spark, sf_dir, "customer")
-    j = R.outer_join(nation, customer, [("n_nationkey", "c_nationkey")], "left_outer")
+    j = nation.join(
+        customer, nation["n_nationkey"] == customer["c_nationkey"], "left_outer"
+    )
     return j.groupBy("n_nationkey", "n_name").agg(
         F.count("c_custkey").alias("n_cust")
     )
@@ -94,9 +96,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop — the shape that survives scale, see SCALE.md)."""
     orders = read_table(spark, sf_dir, "orders")
     bands = spark.createDataFrame(PRICE_BANDS, ["band", "lo", "hi"])
-    j = R.range_join(
-        orders,
-        bands,
+    j = orders.join(
+        F.broadcast(bands),
         (orders["o_totalprice"] >= bands["lo"]) & (orders["o_totalprice"] < bands["hi"]),
     )
     return j.groupBy("band").agg(
@@ -111,14 +112,14 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "A").select("l_orderkey", "l_returnflag")
     r = li.filter(F.col("l_returnflag") == "R").select("l_orderkey", "l_returnflag")
-    return R.union_all(a, r)
+    return a.unionByName(r)
 
 
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    return R.intersect_distinct(f, o)
+    return f.intersect(o)
 
 
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,7 +127,7 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return R.except_distinct(customer, orders)
+    return customer.subtract(orders)
 
 
 # --- rollup / cube --------------------------------------------------------
@@ -144,12 +145,12 @@ def _rc_aggs() -> list:
 
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    return R.rollup_agg(li, ["l_returnflag", "l_linestatus"], _rc_aggs())
+    return li.rollup("l_returnflag", "l_linestatus").agg(*_rc_aggs())
 
 
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    return R.cube_agg(li, ["l_returnflag", "l_linestatus"], _rc_aggs())
+    return li.cube("l_returnflag", "l_linestatus").agg(*_rc_aggs())
 
 
 # --- scalar functions -----------------------------------------------------

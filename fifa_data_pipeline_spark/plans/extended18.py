@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.retrieval import bm25_topk
 from fifa_data_pipeline_spark.plans.extended15 import BM25_TERMS
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 #: Watermark delay for the lateness audit (seconds).
 LATE_DELAY_S = 1800
@@ -142,10 +142,6 @@ def q_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_running_max_dense,
     )
 
-    from fifa_data_pipeline_spark.sources.io import (
-        footer_minmax_int as _footer_minmax_int,
-    )
-
     events = read_table(spark, sf_dir, "events")
     ep = F.unix_timestamp("ts").cast("bigint")
     marked = grouped_running_max_dense(
@@ -155,9 +151,7 @@ def q_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_type"],
         "event_id",
         ["ep"],
-        # event_id bounds from footer stats (r11): zero Spark jobs,
-        # aggregate-probe fallback inside the operator.
-        bounds=_footer_minmax_int(f"{sf_dir}/events.parquet", "event_id"),
+        bounds=minmax_bounds(events, f"{sf_dir}/events.parquet", "event_id"),
     ).select(
         "event_type",
         "ep",

@@ -25,23 +25,22 @@ from fifa_data_pipeline_spark.sources.io import read_table
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue pivoted to one column per lineitem status."""
     li = read_table(spark, sf_dir, "lineitem")
-    return R.pivot_agg(
-        li,
-        "l_returnflag",
-        "l_linestatus",
-        ["F", "O"],
-        F.round(F.sum("l_extendedprice"), 3),
-        prefix="rev_",
+    return (
+        li.groupBy("l_returnflag")
+        .pivot("l_linestatus", ["F", "O"])
+        .agg(F.round(F.sum("l_extendedprice"), 3))
+        .withColumnsRenamed({"F": "rev_F", "O": "rev_O"})
     )
 
 
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem measures wide → long (single Expand pass)."""
     li = read_table(spark, sf_dir, "lineitem")
-    return R.unpivot(
-        li,
+    return li.unpivot(
         ["l_orderkey", "l_linenumber"],
         ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
+        "metric",
+        "value",
     ).withColumn("value", F.round("value", 6))
 
 
@@ -50,16 +49,15 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary subtotal combinations + GROUPING() markers."""
     li = read_table(spark, sf_dir, "lineitem")
-    return R.grouping_sets_agg(
-        li,
+    return li.groupingSets(
         [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.grouping("l_returnflag").cast("int").alias("g_rf"),
-            F.grouping("l_linestatus").cast("int").alias("g_ls"),
-        ],
+        "l_returnflag",
+        "l_linestatus",
+    ).agg(
+        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.grouping("l_returnflag").cast("int").alias("g_rf"),
+        F.grouping("l_linestatus").cast("int").alias("g_ls"),
     )
 
 

@@ -25,10 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fifa_data_pipeline_spark.sources.io import (
-    footer_minmax_int as _footer_minmax_int,
-)
-from fifa_data_pipeline_spark.sources.io import read_table
+from fifa_data_pipeline_spark.sources.io import minmax_bounds, read_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -48,12 +45,10 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = read_table(spark, sf_dir, "lineitem")
-    # footer-stats bounds (r11): zero Spark jobs on the unfiltered
-    # table; the operator falls back to its own aggregate probe.
     return exact_group_quantiles(
         li, "l_returnflag", "l_extendedprice",
-        bounds=_footer_minmax_int(
-            f"{sf_dir}/lineitem.parquet", "l_extendedprice"
+        bounds=minmax_bounds(
+            li, f"{sf_dir}/lineitem.parquet", "l_extendedprice"
         ),
     )
 
@@ -599,12 +594,10 @@ def q_exact_quantiles_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = read_table(spark, sf_dir, "lineitem")
-    # footer-stats bounds (r11): zero Spark jobs, agg-probe fallback
-    # inside the operator when stats are absent.
     return exact_group_quantiles_cont(
         li, "l_returnflag", "l_extendedprice",
-        bounds=_footer_minmax_int(
-            f"{sf_dir}/lineitem.parquet", "l_extendedprice"
+        bounds=minmax_bounds(
+            li, f"{sf_dir}/lineitem.parquet", "l_extendedprice"
         ),
     )
 

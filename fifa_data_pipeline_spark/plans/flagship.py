@@ -36,12 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.functions.scalar import avg_int, concat_label
-from fifa_data_pipeline_spark.operators.relational import (
-    equi_join,
-    group_max,
-    latest_per_group_join,
-    multi_agg,
-)
+from fifa_data_pipeline_spark.operators.relational import latest_per_group_join
 from fifa_data_pipeline_spark.sources.io import read_table
 
 
@@ -88,27 +83,33 @@ def flagship_from(
     # reference order) would force the widest intermediate — every
     # lineitem row — through an extra custkey shuffle. Inner joins
     # commute, so results are identical; only bytes-moved changes.
-    orders_cust = equi_join(latest_orders, cust_dim, [("o_custkey", "c_custkey")])
+    orders_cust = latest_orders.join(
+        cust_dim, latest_orders["o_custkey"] == cust_dim["c_custkey"]
+    )
     # nation is tiny → broadcast hint (like the reference's versions
     # dim); customer dim left to AQE.
-    orders_cust = equi_join(
-        orders_cust,
-        nation.select("n_nationkey", "n_name"),
-        [("c_nationkey", "n_nationkey")],
-        broadcast_right=True,
+    nation_dim = nation.select("n_nationkey", "n_name")
+    orders_cust = orders_cust.join(
+        F.broadcast(nation_dim),
+        orders_cust["c_nationkey"] == nation_dim["n_nationkey"],
     )
     # J3: the single unavoidable big shuffle — lineitem by orderkey.
-    joined = equi_join(lineitem, orders_cust, [("l_orderkey", "o_orderkey")])
+    joined = lineitem.join(
+        orders_cust, lineitem["l_orderkey"] == orders_cust["o_orderkey"]
+    )
 
     # A3 + P6 + P7: 4-key multi-aggregate with concat label and
     # truncating int-cast averages. Double SUM/AVG outputs are rounded
     # so the order-insensitive oracle hash is stable (FIXTURES.md).
-    out = multi_agg(
+    return (
         joined.withColumn(
             "nation_segment", concat_label("n_name", "c_mktsegment")
-        ),
-        ["o_orderpriority", "cust_name", "n_name", "c_mktsegment", "nation_segment"],
-        [
+        )
+        .groupBy(
+            "o_orderpriority", "cust_name", "n_name", "c_mktsegment",
+            "nation_segment",
+        )
+        .agg(
             F.round(F.sum("l_extendedprice"), 6).alias("total_value"),
             F.round(F.sum("l_quantity"), 6).alias("total_qty"),
             F.max("l_extendedprice").alias("best_price"),
@@ -116,9 +117,8 @@ def flagship_from(
             avg_int("l_quantity").alias("avg_qty_int"),
             F.round(F.avg("o_totalprice"), 4).alias("avg_order_value"),
             F.count(F.lit(1)).alias("n_lines"),
-        ],
+        )
     )
-    return out
 
 
 def flagship_sql(spark: SparkSession, sf_dir: str) -> DataFrame:

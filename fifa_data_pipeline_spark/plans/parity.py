@@ -34,9 +34,8 @@ from fifa_data_pipeline_spark.sources.io import read_table
 def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit select-list projection (P1/P2). The narrow ReadSchema
     reaches the parquet scan via Catalyst column pruning."""
-    return R.project(
-        read_table(spark, sf_dir, "customer"),
-        ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"],
+    return read_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
 
 
@@ -45,15 +44,15 @@ def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_filter_neq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``!=`` filter (P3 ≈ ``WHERE league_id != 78``); pushed down to
     the scan."""
-    return R.filter_neq(read_table(spark, sf_dir, "nation"), "n_regionkey", 2)
+    return read_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") != 2)
 
 
 # --- P4: null-predicate filter -------------------------------------------
 
 def q_filter_notnull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IS NOT NULL filter (P4 ≈ ``WHERE player_id IS NOT NULL``)."""
-    df = R.filter_notnull(read_table(spark, sf_dir, "orders"), "o_custkey")
-    return df.select(
+    df = read_table(spark, sf_dir, "orders")
+    return df.filter(F.col("o_custkey").isNotNull()).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
     )
 
@@ -94,15 +93,19 @@ def q_agg_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate_d", F.col("o_orderdate").cast("date")
     )
-    return R.group_max(orders, "o_custkey", "o_orderdate_d", "latest_date")
+    return orders.groupBy("o_custkey").agg(
+        F.max("o_orderdate_d").alias("latest_date")
+    )
 
 
 # --- A2: group-by max over a string --------------------------------------
 
 def q_agg_maxstr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY key + MAX(string) (A2: canonical name per id)."""
-    return R.group_max(
-        read_table(spark, sf_dir, "customer"), "c_nationkey", "c_name", "name"
+    return (
+        read_table(spark, sf_dir, "customer")
+        .groupBy("c_nationkey")
+        .agg(F.max("c_name").alias("name"))
     )
 
 
@@ -111,8 +114,10 @@ def q_agg_maxstr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT over a 2-col projection (the ``SELECT DISTINCT`` at
     reference ``fifa_spark.py:74``)."""
-    return R.distinct_rows(
-        read_table(spark, sf_dir, "lineitem"), ["l_returnflag", "l_linestatus"]
+    return (
+        read_table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_linestatus")
+        .distinct()
     )
 
 
@@ -167,17 +172,13 @@ def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY 2 keys + SUM/MAX/AVG mix with truncating int-cast AVG
     (A3+P6)."""
     li = read_table(spark, sf_dir, "lineitem")
-    return R.multi_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 3).alias("sum_price"),
-            F.max("l_discount").alias("max_discount"),
-            F.max("l_tax").alias("max_tax"),
-            avg_int("l_quantity").alias("avg_qty_int"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ],
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
+        F.round(F.sum("l_extendedprice"), 3).alias("sum_price"),
+        F.max("l_discount").alias("max_discount"),
+        F.max("l_tax").alias("max_tax"),
+        avg_int("l_quantity").alias("avg_qty_int"),
+        F.count(F.lit(1)).alias("n_rows"),
     )
 
 
@@ -195,16 +196,12 @@ def q_join_fact_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than lineitem, so the wide fact crosses exactly one shuffle
     # (orderkey) instead of also re-shuffling on custkey. Inner joins
     # commute — identical results, fewer bytes moved.
-    j = R.equi_join(orders, customer, [("o_custkey", "c_custkey")])
-    j = R.equi_join(j, nation, [("c_nationkey", "n_nationkey")], broadcast_right=True)
-    j = R.equi_join(li, j, [("l_orderkey", "o_orderkey")])
-    return R.multi_agg(
-        j,
-        ["n_name"],
-        [
-            F.round(F.sum("l_extendedprice"), 3).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        ],
+    j = orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
+    j = j.join(F.broadcast(nation), j["c_nationkey"] == nation["n_nationkey"])
+    j = li.join(j, li["l_orderkey"] == j["o_orderkey"])
+    return j.groupBy("n_name").agg(
+        F.round(F.sum("l_extendedprice"), 3).alias("revenue"),
+        F.count(F.lit(1)).alias("n_lines"),
     )
 
 
@@ -214,10 +211,10 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY ... LIMIT k (TakeOrderedAndProject — no global sort).
     Deterministic tie-break on the key column."""
     orders = read_table(spark, sf_dir, "orders")
-    return R.topk(
-        orders.select("o_orderkey", "o_totalprice"),
-        [F.desc("o_totalprice"), F.asc("o_orderkey")],
-        10,
+    return (
+        orders.select("o_orderkey", "o_totalprice")
+        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .limit(10)
     )
 
 

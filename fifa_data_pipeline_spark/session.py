@@ -28,6 +28,22 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
 
+def max_partition_bytes() -> str:
+    """The split-size lever (``spark.sql.files.maxPartitionBytes``),
+    overridable from the environment; default 8m, which keeps
+    genuinely multi-row-group small files parallel across cores.
+
+    NOTE the local testdata files are each ONE row group, which byte
+    splits cannot parallelize (a row group is read whole by the split
+    holding its midpoint) — a controlled A/B at sf0.1 shows 8m vs 128m
+    makes no measurable difference on this data (SCALE.md); scan
+    parallelism there comes from layout + spread(). On a real cluster
+    with many-file inputs, set it to 128m — at 100 TB the default
+    split count is already ≫ cores and smaller splits only add
+    scheduling overhead."""
+    return os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
+
+
 def get_spark(
     app_name: str = "fifa-data-pipeline-spark",
     master: str | None = None,
@@ -84,21 +100,7 @@ def get_spark(
         .config("spark.sql.cteRecursionRowLimit", "100000000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Split-size lever (the "size maxPartitionBytes" knob): 8m
-        # keeps genuinely multi-row-group small files parallel across
-        # cores. NOTE the local testdata files are each ONE row group,
-        # which byte splits cannot parallelize (a row group is read
-        # whole by the split holding its midpoint) — a controlled A/B
-        # at sf0.1 shows 8m vs 128m makes no measurable difference on
-        # this data (SCALE.md); scan parallelism there comes from
-        # layout + spread(). On a real cluster with many-file inputs,
-        # set SPARK_GRAFT_MAX_PARTITION_BYTES=128m — at 100 TB the
-        # default split count is already ≫ cores and smaller splits
-        # only add scheduling overhead.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes())
         # Parquet TIMESTAMP(NANOS) (events.ts) is otherwise rejected;
         # read as int64 nanos and rebuild µs timestamps in io.read_table
         # (truncation ns→µs matches DuckDB's read of the same file).

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fifa_data_pipeline_spark.session import max_partition_bytes
+
 #: Tables in the driver testdata (TESTDATA.md).
 TABLES = [
     "region",
@@ -63,8 +65,6 @@ def _engine_confs(spark: SparkSession) -> None:
         cores = spark.sparkContext.defaultParallelism
     except Exception:  # Spark Connect: no SparkContext; leave as-is
         return
-    import os
-
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
         spark.conf.set("spark.sql.shuffle.partitions", str(cores))
     if (
@@ -72,10 +72,7 @@ def _engine_confs(spark: SparkSession) -> None:
         .rstrip("b")
         == "134217728"
     ):
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-        )
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max_partition_bytes())
 
 
 #: Per-session cache of analyzed table scans (a DataFrame is an

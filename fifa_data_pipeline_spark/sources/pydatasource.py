@@ -1,6 +1,6 @@
-"""Custom connectors via the Python Data Source API (Spark ≥4.0,
-SPARK-44076): the pure-Python path for building sources/sinks the
-engine doesn't ship — schema declaration, partition planning, and
+"""A custom connector via the Python Data Source API (Spark ≥4.0,
+SPARK-44076): the pure-Python path for building sources the engine
+doesn't ship — schema declaration, partition planning, and
 per-partition row generation, with no JVM code.
 
 The reference's only custom ingestion is a Python download step
@@ -8,220 +8,26 @@ outside the engine (SURVEY.md §2.1 S1); this is the in-engine
 equivalent surface: a format registered on the session and read with
 ``spark.read.format(...)`` like any built-in source.
 
-Two generations of connectors live here:
-
-1. **API-surface demos** (round 4): ``synth_events`` (batch,
-   partition-planning contract), ``synth_events_stream`` (offset
-   ownership + replayable ``readBetweenOffsets``), and
-   ``jsonl_sink`` (manifest-commit writer — the rename-free commit
-   discipline object stores need). Test-verified.
-2. **Oracle-checked feed** (round 5): ``synthetic_events`` — every
-   row a pure INTEGER function of the row id, so the DuckDB twin
-   regenerates identical rows from ``range(n)`` and both the batch
-   scan and the multi-micro-batch streaming drain are value-HASH
-   checked end to end (``q_python_datasource`` /
-   ``q_stream_python_source``), plus ``jsonl_shards`` (two-phase
-   rename commit + ``_SUCCESS`` row-total manifest).
+The one format, ``synthetic_events``, is an oracle-checked feed:
+every row is a pure INTEGER function of the row id, so the DuckDB
+twin regenerates identical rows from ``range(n)``. Its batch reader
+(``OracledFeedReader``, one input partition per row range) and its
+stream reader (``OracledFeedStreamReader``, row-index offsets whose
+committed ranges replay bit-identically) are both value-HASH checked
+end to end (``q_python_datasource`` / ``q_stream_python_source``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 #: Knuth multiplicative hash constant — deterministic pseudo-values.
 _MIX = 2654435761
-
-
-class SyntheticEventsDataSource(DataSource):
-    """``spark.read.format("synth_events")`` — options:
-    ``partitions`` (default 4), ``rowsPerPartition`` (default 100),
-    ``seed`` (default 42)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synth_events"
-
-    def schema(self) -> str:
-        return "event_id bigint, part int, value double"
-
-    def reader(self, schema) -> "SyntheticEventsReader":
-        return SyntheticEventsReader(self.options)
-
-
-class SyntheticEventsReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.n_parts = int(options.get("partitions", "4"))
-        self.rows_per = int(options.get("rowsperpartition", "100"))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # One InputPartition per task: this IS the source's
-        # parallelism contract to the scheduler.
-        return [InputPartition(i) for i in range(self.n_parts)]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        i = partition.value
-        for r in range(self.rows_per):
-            gid = i * self.rows_per + r
-            h = (gid * _MIX + self.seed) % (2**32)
-            yield (gid, i, h / 2**32)
-
-
-# ---------------------------------------------------------------------------
-# Streaming Python data source (SimpleDataSourceStreamReader)
-# ---------------------------------------------------------------------------
-
-class SyntheticEventsStreamSource(DataSource):
-    """``spark.readStream.format("synth_events_stream")`` — the
-    STREAMING half of the Python Data Source API: the reader owns its
-    offset (a monotonically increasing batch index), the engine owns
-    exactly-once bookkeeping (offsets land in the checkpoint log;
-    ``readBetweenOffsets`` replays a committed range after restart).
-    Options: ``rowsPerBatch`` (default 10), ``maxBatches`` (default 3
-    — after which ``read`` stops advancing the offset, so an
-    ``availableNow`` drain terminates), ``seed``.
-
-    A real connector (queue consumer, HTTP cursor feed) follows this
-    shape verbatim: offsets must be replayable — the DETERMINISM of
-    read-between-offsets, not the checkpoint, is what makes the
-    pipeline exactly-once end to end."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synth_events_stream"
-
-    def schema(self) -> str:
-        return "event_id bigint, batch int, value double"
-
-    def simpleStreamReader(self, schema) -> "SyntheticStreamReader":
-        return SyntheticStreamReader(self.options)
-
-
-class SyntheticStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, options: dict) -> None:
-        self.rows_per = int(options.get("rowsperbatch", "10"))
-        self.max_batches = int(options.get("maxbatches", "3"))
-        self.seed = int(options.get("seed", "42"))
-
-    def initialOffset(self) -> dict:
-        return {"idx": 0}
-
-    def _rows(self, idx: int) -> list[tuple]:
-        out = []
-        for r in range(self.rows_per):
-            gid = idx * self.rows_per + r
-            h = (gid * _MIX + self.seed) % (2**32)
-            out.append((gid, idx, h / 2**32))
-        return out
-
-    def read(self, start: dict):
-        idx = start["idx"]
-        if idx >= self.max_batches:
-            return iter([]), start  # no progress -> availableNow ends
-        return iter(self._rows(idx)), {"idx": idx + 1}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows: list[tuple] = []
-        for idx in range(start["idx"], end["idx"]):
-            rows.extend(self._rows(idx))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing external to acknowledge for a synthetic feed
-
-
-# ---------------------------------------------------------------------------
-# Batch WRITER (the third leg of the API: reader / stream reader / writer)
-# ---------------------------------------------------------------------------
-
-class JsonlSinkDataSource(DataSource):
-    """Pure-Python sink: JSONL files with a manifest-commit protocol.
-
-    Each task streams its partition to a uniquely-named
-    ``part-<partition>-<uuid>.jsonl`` and reports the file back as
-    its commit message; only when EVERY task succeeded does the
-    driver write ``_MANIFEST.json`` naming the committed files —
-    readers that honor the manifest never see a torn write, and
-    ``abort()`` removes the orphans of a failed job. This is the
-    same rename-free commit discipline object stores need (no
-    atomic directory rename at scale), in ~40 lines of Python.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonl_sink"
-
-    def writer(self, schema, overwrite: bool) -> "JsonlWriter":
-        return JsonlWriter(self.options, schema)
-
-
-class JsonlWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema) -> None:
-        self._path = options["path"]
-        self._fields = [f.name for f in schema.fields]
-
-    def write(self, rows: Iterator) -> "JsonlCommit":
-        import json
-        import os
-        import uuid
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self._path, exist_ok=True)
-        fname = f"part-{pid:05d}-{uuid.uuid4().hex}.jsonl"
-        full = os.path.join(self._path, fname)
-        n = 0
-        with open(full, "w") as fh:
-            for row in rows:
-                fh.write(
-                    json.dumps(dict(zip(self._fields, row)), default=str)
-                )
-                fh.write("\n")
-                n += 1
-        return JsonlCommit(fname, n)
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-
-        manifest = {
-            "files": sorted(m.file for m in messages),
-            "rows": sum(m.rows for m in messages),
-        }
-        tmp = os.path.join(self._path, "_MANIFEST.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._path, "_MANIFEST.json"))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            try:
-                os.remove(os.path.join(self._path, m.file))
-            except FileNotFoundError:
-                pass
-
-
-class JsonlCommit(WriterCommitMessage):
-    def __init__(self, file: str, rows: int) -> None:
-        self.file = file
-        self.rows = rows
-
-
-# ---------------------------------------------------------------------------
-# Round-5 generation: the ORACLE-CHECKED deterministic feed
-# ---------------------------------------------------------------------------
 
 SYNTH_SCHEMA = (
     "event_id BIGINT, user_id BIGINT, event_type STRING, "
@@ -322,98 +128,6 @@ class OracledFeedDataSource(DataSource):
         return OracledFeedStreamReader(self.options)
 
 
-class _ShardCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, n_rows: int):
-        self.tmp_path, self.n_rows = tmp_path, n_rows
-
-
-class JsonlShardWriter(DataSourceWriter):
-    """Two-phase-commit JSONL shard sink (rename variant of
-    ``jsonl_sink``'s manifest protocol): each task writes its rows to
-    a UUID-named ``.tmp`` file and reports it in a commit message;
-    the DRIVER's ``commit`` renames every temp shard to its final
-    ``part-NNNNN.jsonl`` name and writes a ``_SUCCESS`` manifest with
-    the row total — readers either see the complete committed output
-    or (after ``abort`` unlinks the temps) none of it."""
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_shards writer requires a path")
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> _ShardCommit:
-        import json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f".{uuid.uuid4().hex}.tmp")
-        n = 0
-        with open(tmp, "w") as fh:
-            for row in iterator:
-                fh.write(json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _ShardCommit(tmp, n)
-
-    def commit(self, messages) -> None:
-        import glob
-        import json
-        import os
-
-        # A prior committed write may have left more part files than this
-        # job produced (re-run with fewer partitions, or overwrite mode):
-        # renaming only the low-indexed shards would leave stale
-        # higher-index shards beside a _SUCCESS that counts only the new
-        # rows, breaking the all-or-nothing contract. Clear committed
-        # output first in overwrite mode; refuse to mix otherwise.
-        existing = glob.glob(os.path.join(self.path, "part-*.jsonl"))
-        success = os.path.join(self.path, "_SUCCESS")
-        if existing or os.path.exists(success):
-            if not self.overwrite:
-                raise FileExistsError(
-                    f"jsonl_shards: {self.path} already holds committed "
-                    "shards; use mode('overwrite') to replace them"
-                )
-            if os.path.exists(success):
-                os.unlink(success)
-            for stale in existing:
-                os.unlink(stale)
-        total = 0
-        for idx, m in enumerate(sorted(
-            (m for m in messages if m is not None),
-            key=lambda m: m.tmp_path,
-        )):
-            final = os.path.join(self.path, f"part-{idx:05d}.jsonl")
-            os.replace(m.tmp_path, final)
-            total += m.n_rows
-        with open(success, "w") as fh:
-            json.dump({"rows": total}, fh)
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.unlink(m.tmp_path)
-
-
-class JsonlShardsDataSource(DataSource):
-    """Write-side twin of the oracled feed: ``df.write.format(
-    "jsonl_shards").option("path", ...)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonl_shards"
-
-    def writer(self, schema, overwrite: bool) -> JsonlShardWriter:
-        return JsonlShardWriter(self.options, overwrite)
-
-
 def register(spark) -> None:
-    """Register every connector on a session (idempotent)."""
-    spark.dataSource.register(SyntheticEventsDataSource)
-    spark.dataSource.register(SyntheticEventsStreamSource)
-    spark.dataSource.register(JsonlSinkDataSource)
+    """Register the feed on a session (idempotent)."""
     spark.dataSource.register(OracledFeedDataSource)
-    spark.dataSource.register(JsonlShardsDataSource)

@@ -26,8 +26,9 @@ PNG/WAV members are already compressed formats).
 ``path`` must be a filesystem every EXECUTOR can write (shared FS,
 fuse-mounted bucket, or local mode) — tasks write shards directly.
 For plain object stores, route the same tar bytes through a
-committing sink instead (the JSONL Python Data Source in
-``pydatasource.py`` shows the manifest-commit pattern to copy).
+committing sink instead: tasks write uniquely named temporaries and
+the driver publishes them (a manifest, or renames) only after every
+task succeeded — a Python Data Source writer's ``commit``/``abort``.
 """
 
 from __future__ import annotations

@@ -1,11 +1,9 @@
-"""Unit tests for extended operators — as-of join edges, set ops,
-rollup markers."""
+"""Unit tests for extended operators — as-of join edges, semi/anti
+partition, rollup markers, range-join plan shape."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators import relational as R
 
@@ -38,40 +36,29 @@ def test_as_of_join_no_cross_key_leakage(spark):
 
 
 def test_semi_anti_partition(spark, sf_dir):
+    from fifa_data_pipeline_spark.plans.extended import q_join_anti, q_join_semi
+
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    semi = R.semi_join(customer, orders, [("c_custkey", "o_custkey")])
-    anti = R.anti_join(customer, orders, [("c_custkey", "o_custkey")])
+    semi = q_join_semi(spark, sf_dir)
+    anti = q_join_anti(spark, sf_dir)
     assert semi.count() + anti.count() == customer.count()
 
 
-def test_set_ops(spark):
-    a = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
-    b = spark.createDataFrame([(2,), (3,), (4,)], ["k"])
-    assert {r.k for r in R.intersect_distinct(a, b).collect()} == {2, 3}
-    assert {r.k for r in R.except_distinct(a, b).collect()} == {1}
-    assert R.union_all(a, b).count() == 6
-
-
 def test_rollup_has_grand_total(spark, sf_dir):
+    from fifa_data_pipeline_spark.plans.extended import q_rollup
+
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = R.rollup_agg(
-        li,
-        ["l_returnflag"],
-        [F.grouping("l_returnflag").cast("int").alias("g"), F.count(F.lit(1)).alias("n")],
-    ).collect()
-    total = [r for r in out if r.g == 1]
-    assert len(total) == 1 and total[0].n == li.count()
+    out = q_rollup(spark, sf_dir).collect()
+    total = [r for r in out if r.g_flag == 1 and r.g_status == 1]
+    assert len(total) == 1 and total[0].n_rows == li.count()
 
 
 def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
+    from fifa_data_pipeline_spark.plans.extended import q_range_join
+
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    bands = spark.createDataFrame(
-        [("lo", 0.0, 100_000.0), ("hi", 100_000.0, 1e12)], ["band", "lo", "hi"]
-    )
-    j = R.range_join(
-        orders, bands, (orders["o_totalprice"] >= bands["lo"]) & (orders["o_totalprice"] < bands["hi"])
-    )
+    j = q_range_join(spark, sf_dir)
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
-    assert j.count() == orders.count()  # bands partition the price space
+    # the bands partition the price space: every order lands in one
+    assert sum(r.n_orders for r in j.collect()) == orders.count()

@@ -1,5 +1,5 @@
-"""Unit tests for the second extended batch: pivot/unpivot, grouping
-sets, merge/upsert, systematic sampling, rolling hash."""
+"""Unit tests for the second extended batch: unpivot plan shape,
+merge/upsert, systematic sampling, rolling hash."""
 
 from __future__ import annotations
 
@@ -9,40 +9,17 @@ from fifa_data_pipeline_spark.operators import relational as R
 from fifa_data_pipeline_spark.operators import text as X
 
 
-def test_pivot_agg_values_and_columns(spark):
-    df = spark.createDataFrame(
-        [("a", "x", 1.0), ("a", "y", 2.0), ("a", "x", 3.0), ("b", "y", 5.0)],
-        ["k", "p", "v"],
-    )
-    out = R.pivot_agg(df, "k", "p", ["x", "y"], F.sum("v"), prefix="s_")
-    got = {r.k: (r.s_x, r.s_y) for r in out.collect()}
-    assert got == {"a": (4.0, 2.0), "b": (None, 5.0)}
+def test_unpivot_single_expand_no_shuffle(spark, sf_dir):
+    from fifa_data_pipeline_spark.plans.extended2 import q_unpivot
 
-
-def test_unpivot_single_expand_no_shuffle(spark):
-    df = spark.createDataFrame([(1, 10.0, 20.0)], ["id", "m1", "m2"])
-    out = R.unpivot(df, ["id"], ["m1", "m2"])
-    rows = {(r.metric, r.value) for r in out.collect()}
-    assert rows == {("m1", 10.0), ("m2", 20.0)}
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    out = q_unpivot(spark, sf_dir)
+    assert {r.metric for r in out.select("metric").distinct().collect()} == {
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+    }
+    assert out.count() == 4 * li.count()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan and "Exchange" not in plan
-
-
-def test_grouping_sets_matches_manual_union(spark):
-    df = spark.createDataFrame(
-        [("a", "x", 1), ("a", "y", 2), ("b", "x", 4)], ["g1", "g2", "v"]
-    )
-    out = R.grouping_sets_agg(
-        df,
-        [["g1", "g2"], ["g2"]],
-        ["g1", "g2"],
-        [F.sum("v").alias("s")],
-    )
-    got = {(r.g1, r.g2): r.s for r in out.collect()}
-    assert got == {
-        ("a", "x"): 1, ("a", "y"): 2, ("b", "x"): 4,
-        (None, "x"): 5, (None, "y"): 2,
-    }
 
 
 def test_merge_upsert_update_insert_passthrough(spark):

@@ -369,7 +369,10 @@ def test_exact_group_quantiles_matches_python_model(spark, rows):
     df = spark.createDataFrame(data, "g int, v double")
     got = {
         (r.g, r.quantile_pm): (r.q_value, r.n_rows)
-        for r in exact_group_quantiles(df, "g", "v").collect()
+        for r in exact_group_quantiles(
+            df, "g", "v",
+            bounds=(min(v for _, v in data), max(v for _, v in data)),
+        ).collect()
     }
     by_g: dict[int, list[float]] = {}
     for g, v in data:

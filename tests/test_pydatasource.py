@@ -1,10 +1,12 @@
 """Python DataSource API connector tests: partitioned reads,
-determinism across partition counts, and option plumbing."""
+determinism across partition counts, option plumbing, and stream
+drains that resume and replay exactly."""
 
 from __future__ import annotations
 
 from fifa_data_pipeline_spark.sources.pydatasource import (
     SYNTH_SCHEMA,
+    OracledFeedStreamReader,
     register,
     synth_row,
 )
@@ -80,63 +82,6 @@ def test_stream_reader_multi_batch_drain(spark):
     assert got == want
 
 
-def test_jsonl_shard_writer_two_phase_commit(spark, tmp_path):
-    """Writer round-trip: shards land under final names with a
-    _SUCCESS manifest carrying the row total; temp files are gone;
-    Spark's json reader recovers the exact rows."""
-    import json
-    import os
-
-    register(spark)
-    df = _read(spark, n=300, n_users=5, partitions=4)
-    out = str(tmp_path / "shards")
-    df.write.format("jsonl_shards").option("path", out).mode(
-        "append"
-    ).save()
-    files = sorted(os.listdir(out))
-    assert "_SUCCESS" in files
-    parts = [f for f in files if f.startswith("part-")]
-    assert len(parts) == 4
-    assert not [f for f in files if f.endswith(".tmp")]
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["rows"] == 300
-    back = spark.read.json(os.path.join(out, "part-*.jsonl"))
-    assert back.count() == 300
-    got = {
-        (r.event_id, r.user_id, r.event_type, r.amount_cents)
-        for r in back.collect()
-    }
-    assert got == {synth_row(i, 5) for i in range(300)}
-
-
-def test_jsonl_shard_writer_abort_leaves_no_output(spark, tmp_path):
-    """A failing task must ABORT the job: temps unlinked, no
-    _SUCCESS, no committed shards — readers see none of it."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    register(spark)
-    out = str(tmp_path / "aborted")
-    df = _read(spark, n=100, partitions=4).select(
-        "event_id",
-        F.when(F.col("event_id") < 99, F.col("amount_cents"))
-        .otherwise(
-            F.assert_true(F.lit(False), F.lit("boom")).cast("bigint")
-        )
-        .alias("amount_cents"),
-    )
-    with pytest.raises(Exception):
-        df.write.format("jsonl_shards").option("path", out).mode(
-            "append"
-        ).save()
-    if os.path.isdir(out):
-        files = os.listdir(out)
-        assert "_SUCCESS" not in files
-        assert not [f for f in files if f.startswith("part-")]
-
-
 def test_stream_reader_checkpoint_resume_no_dupes(spark, tmp_path):
     """Exactly-once across restarts, deterministically: run 1 drains
     a 500-row feed to a parquet sink over a persistent checkpoint;
@@ -187,48 +132,14 @@ def test_stream_reader_checkpoint_resume_no_dupes(spark, tmp_path):
     assert len(rows) == 1000  # no dupes from the restart
     got = {tuple(r) for r in rows}
     assert got == {synth_row(i, 7) for i in range(1000)}
+    # replay determinism: a committed offset range regenerates
+    # bit-identically — the contract exactly-once recovery rests on
+    reader = OracledFeedStreamReader(
+        {"n": 1000, "n_users": 7, "batch_rows": 200}
+    )
+    for lo, hi in ((0, 200), (200, 400), (300, 1000)):
+        replay = list(reader.readBetweenOffsets({"i": lo}, {"i": hi}))
+        assert replay == [synth_row(i, 7) for i in range(lo, hi)]
 
 
-def test_jsonl_shard_writer_overwrite_clears_stale_shards(spark, tmp_path):
-    """Re-writing the same path with FEWER partitions in overwrite
-    mode must not leave stale higher-index shards beside a _SUCCESS
-    that counts only the new rows (ADVICE r5): the second commit
-    clears committed output first, so readers see exactly the new
-    job's rows."""
-    import json
-    import os
 
-    register(spark)
-    out = str(tmp_path / "shards")
-    _read(spark, n=400, n_users=5, partitions=8).write.format(
-        "jsonl_shards"
-    ).option("path", out).mode("append").save()
-    assert len([f for f in os.listdir(out) if f.startswith("part-")]) == 8
-    _read(spark, n=100, n_users=5, partitions=2).write.format(
-        "jsonl_shards"
-    ).option("path", out).mode("overwrite").save()
-    parts = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(parts) == 2
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["rows"] == 100
-    back = spark.read.json(os.path.join(out, "part-*.jsonl"))
-    assert back.count() == 100
-
-
-def test_jsonl_shard_writer_append_to_committed_path_refuses(
-    spark, tmp_path
-):
-    """Append mode over an already-committed directory would mix two
-    jobs' shards under one manifest — refuse loudly instead."""
-    import pytest
-
-    register(spark)
-    out = str(tmp_path / "shards")
-    df = _read(spark, n=50, partitions=2)
-    df.write.format("jsonl_shards").option("path", out).mode(
-        "append"
-    ).save()
-    with pytest.raises(Exception, match="[Cc]ommitted|FileExists"):
-        df.write.format("jsonl_shards").option("path", out).mode(
-            "append"
-        ).save()

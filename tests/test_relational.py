@@ -82,27 +82,24 @@ def test_latest_per_group_window_single_row(spark):
     assert rows == {(1, 200), (2, 400)}  # tie broken by id desc
 
 
-def test_filter_and_project(spark, sf_dir):
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = R.filter_neq(nation, "n_regionkey", 2)
-    assert all(r.n_regionkey != 2 for r in out.collect())
-    proj = R.project(nation, ["n_name"])
-    assert proj.columns == ["n_name"]
-
-
 def test_topk_is_take_ordered(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = R.topk(orders, [F.desc("o_totalprice")], 5)
+    """q_topk's ORDER BY + LIMIT plans as TakeOrderedAndProject — a
+    per-partition top-k and a k-row merge, no global sort."""
+    from fifa_data_pipeline_spark.plans.parity import q_topk
+
+    out = q_topk(spark, sf_dir)
     vals = [r.o_totalprice for r in out.collect()]
-    assert vals == sorted(vals, reverse=True) and len(vals) == 5
+    assert vals == sorted(vals, reverse=True) and len(vals) == 10
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
 
 def test_equi_join_broadcast_hint(spark, sf_dir):
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = R.equi_join(cust, nation, [("c_nationkey", "n_nationkey")], broadcast_right=True)
+    """q_join_fact_dim's ``F.broadcast`` hint on the nation dim plans
+    a broadcast-hash join."""
+    from fifa_data_pipeline_spark.plans.parity import q_join_fact_dim
+
+    out = q_join_fact_dim(spark, sf_dir)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
@@ -235,9 +232,12 @@ def test_exact_group_quantiles_vs_sorted_reference(spark):
 
     rows = [(g, float((i * i) % 17)) for g in range(3) for i in range(g * 50 + 30)]
     df = spark.createDataFrame(rows, ["g", "v"])
+    vs = [v for _, v in rows]
     got = {
         (r.g, r.quantile_pm): (r.q_value, r.n_rows)
-        for r in R.exact_group_quantiles(df, "g", "v").collect()
+        for r in R.exact_group_quantiles(
+            df, "g", "v", bounds=(min(vs), max(vs))
+        ).collect()
     }
     by_g = {}
     for g, v in rows:
@@ -351,9 +351,12 @@ def test_exact_group_quantiles_cont_vs_duckdb_native(spark):
     rows = [(g, float((i * i) % 17)) for g in range(2) for i in range(g * 40 + 21)]
     rows.append((9, 42.0))  # n=1 group
     df = spark.createDataFrame(rows, ["g", "v"])
+    vs = [v for _, v in rows]
     got = {
         (r.g, r.quantile_pm): r.q_value
-        for r in R.exact_group_quantiles_cont(df, "g", "v").collect()
+        for r in R.exact_group_quantiles_cont(
+            df, "g", "v", bounds=(min(vs), max(vs))
+        ).collect()
     }
     by_g = {}
     for g, v in rows:
@@ -533,7 +536,8 @@ def test_grouped_running_max_dense_matches_window_form(spark):
     got = {
         (r["g"], r["i"]): r["v_rmax"]
         for r in grouped_running_max_dense(
-            df, ["g"], "i", ["v"], num_buckets=7
+            df, ["g"], "i", ["v"], num_buckets=7,
+            bounds=(10_000, 10_000 + 3 * 1999),
         ).collect()
     }
     w = (
@@ -626,10 +630,11 @@ def test_grouped_running_max_dense_null_order(spark):
     # Tied (NULL) rows have order-dependent per-row prefixes in BOTH
     # forms; the deterministic contract is that every NON-null row
     # sees the whole NULL bucket as prefix — compare those only.
+    ids = [r[0] for r in rows if r[0] is not None]
     got = {
         (r["g"], r["i"]): r["v_rmax"]
         for r in grouped_running_max_dense(
-            df, ["g"], "i", ["v"], num_buckets=7
+            df, ["g"], "i", ["v"], num_buckets=7, bounds=(min(ids), max(ids))
         ).collect()
         if r["i"] is not None
     }
@@ -654,7 +659,9 @@ def test_grouped_running_max_dense_empty_frame(spark):
     )
 
     df = spark.createDataFrame([], "i long, g string, v double")
-    assert grouped_running_max_dense(df, ["g"], "i", ["v"]).count() == 0
+    assert grouped_running_max_dense(
+        df, ["g"], "i", ["v"], bounds=(None, None)
+    ).count() == 0
 
 
 def test_materialize_once_modes_agree_and_table_mode_is_durable(

@@ -72,115 +72,6 @@ def test_bloom_filter_not_injected_when_dim_broadcasts(spark, sf_dir):
     assert "might_contain" not in plan
 
 
-def test_python_datasource_partitioned_deterministic(spark):
-    """Custom Python Data Source (Spark >=4.0): partition planning is
-    honored by the scheduler, rows are deterministic across reads."""
-    from fifa_data_pipeline_spark.sources.pydatasource import register
-
-    register(spark)
-    df = (
-        spark.read.format("synth_events")
-        .option("partitions", "3")
-        .option("rowsPerPartition", "50")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3
-    rows = df.collect()
-    assert len(rows) == 150
-    assert {r.part for r in rows} == {0, 1, 2}
-    assert all(0.0 <= r.value < 1.0 for r in rows)
-    again = (
-        spark.read.format("synth_events")
-        .option("partitions", "3")
-        .option("rowsPerPartition", "50")
-        .load()
-        .collect()
-    )
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    # pushdown-style column pruning still applies (Project above scan)
-    assert df.select("event_id").distinct().count() == 150
-
-
-def test_python_streaming_datasource_exactly_once_shape(spark, tmp_path):
-    """Streaming Python data source: an availableNow drain consumes
-    exactly maxBatches deterministic batches, and readBetweenOffsets
-    replays any committed range bit-identically (the replayability
-    contract exactly-once recovery rests on)."""
-    from fifa_data_pipeline_spark.sources import pydatasource
-
-    pydatasource.register(spark)
-    out = str(tmp_path / "out")
-    # three availableNow drains over ONE checkpoint: each restart
-    # resumes from the committed offset and advances one batch — the
-    # restart-recovery path of the offset contract
-    for _ in range(3):
-        stream = (
-            spark.readStream.format("synth_events_stream")
-            .option("rowsPerBatch", "5")
-            .option("maxBatches", "3")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    rows = sorted(
-        spark.read.parquet(out).collect(), key=lambda r: r.event_id
-    )
-    assert len(rows) == 15
-    assert [r.event_id for r in rows] == list(range(15))
-    assert {r.batch for r in rows} == {0, 1, 2}
-    # replay determinism: offsets [1,3) regenerate rows 5..14 exactly
-    reader = pydatasource.SyntheticStreamReader(
-        {"rowsperbatch": "5", "maxbatches": "3"}
-    )
-    replay = list(reader.readBetweenOffsets({"idx": 1}, {"idx": 3}))
-    assert [t[0] for t in replay] == list(range(5, 15))
-    got = {(r.event_id, r.batch, round(r.value, 12)) for r in rows[5:]}
-    ref = {(t[0], t[1], round(t[2], 12)) for t in replay}
-    assert got == ref
-
-
-def test_python_datasource_writer_manifest_commit(spark, sf_dir, tmp_path):
-    """The Python Data Source WRITER leg: per-task JSONL files + a
-    driver-side manifest commit; the manifest row count equals the
-    input and every listed file exists."""
-    import json
-    import os
-
-    from fifa_data_pipeline_spark.sources.pydatasource import (
-        JsonlSinkDataSource,
-    )
-
-    spark.dataSource.register(JsonlSinkDataSource)
-    out = str(tmp_path / "jsonl_out")
-    df = (
-        spark.read.parquet(f"{sf_dir}/nation.parquet")
-        .select("n_nationkey", "n_name")
-        .repartition(4)
-    )
-    df.write.format("jsonl_sink").mode("append").option("path", out).save()
-
-    with open(os.path.join(out, "_MANIFEST.json")) as fh:
-        manifest = json.load(fh)
-    assert manifest["rows"] == df.count()
-    rows = []
-    for f in manifest["files"]:
-        p = os.path.join(out, f)
-        assert os.path.exists(p)
-        with open(p) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert len(rows) == manifest["rows"]
-    assert {r["n_name"] for r in rows} == {
-        r.n_name for r in df.collect()
-    }
-
-
 def test_dynamic_partition_pruning_from_dim_filter(spark, sf_dir, tmp_path):
     """Join-driven partition pruning: the fact is partitioned on the
     join key and carries NO static filter — the dim side's filter

@@ -10,6 +10,10 @@ are checkable without running Spark. Usage::
 ``$SPARK_GRAFT_PLANS_ROUND`` picks the output round dir (default
 ``r12``, the current optimization round).
 
+A query that is not in the registry, or whose plan fails to build or
+explain, writes no file; the others are still written, and the run
+then exits 1 with the failing names on stderr.
+
 ``tag`` is ``before`` / ``after``. Plan SHAPE is sf-independent for
 these queries (same reasoning as tools/plan_audit.py), so the default
 sf_dir is the bench SF itself to keep PushedFilters/statistics
@@ -46,9 +50,11 @@ def main() -> int:
 
     spark = get_spark("explain-dump")
     queries = entrymod.queries()
+    failed = []
     for name in names:
         if name not in queries:
-            print(f"skip {name}: not in registry", file=sys.stderr)
+            print(f"FAILED {name}: not in registry", file=sys.stderr)
+            failed.append(name)
             continue
         try:
             df = queries[name](spark, sf_dir)
@@ -56,11 +62,16 @@ def main() -> int:
             with redirect_stdout(buf):
                 df.explain("formatted")
             text = buf.getvalue()
-        except Exception as e:  # noqa: BLE001 — record, keep going
-            text = f"EXPLAIN FAILED: {e!r}\n"
+        except Exception as e:  # noqa: BLE001 — report, keep going
+            print(f"FAILED {name}: {e!r}", file=sys.stderr)
+            failed.append(name)
+            continue
         (out_dir / f"{name}_{tag}.txt").write_text(text)
         print(f"wrote {name}_{tag}.txt ({len(text)} bytes)")
     spark.stop()
+    if failed:
+        print(f"{len(failed)} failed: {' '.join(failed)}", file=sys.stderr)
+        return 1
     return 0
 
 
