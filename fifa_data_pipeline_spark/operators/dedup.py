@@ -204,6 +204,8 @@ def jaccard_verify_pairs(
     and asymptotically the difference at 100 TB. The checkpoint is
     per-invocation (honest cost, no cross-run caching); the trade is
     one materialized tiny table + broken lineage below it."""
+    # on the scan: on the semi-join, spread()'s probe would run jobs
+    df = spread(df)
     if prune_candidates:
         pairs = pairs.transform(pin("dedup", eager=True))
         ids = (
@@ -212,7 +214,7 @@ def jaccard_verify_pairs(
             .distinct()
         )
         df = df.join(F.broadcast(ids), id_col, "semi")
-    sets = spread(df).select(
+    sets = df.select(
         F.col(id_col), shingles(text_col, k).alias("__set")
     )
     a = sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa"))
@@ -463,36 +465,32 @@ def connected_components(
     long chains included — and monotonically shrinks the edge set
     toward one star per component. Each round is two grouped-min +
     join passes over the current edge set (shuffle key = node id),
-    with a per-round ``localCheckpoint`` and an O(1)-row convergence
-    probe (count + order-free hash fold of the canonical edge set).
+    with a per-round ``localCheckpoint`` and one ``collect``: (count,
+    order-free hash fold) of the round's input and output edge sets.
     Raises ``RuntimeError`` if the edge set has not stopped changing
     after ``CC_MAX_ROUNDS`` rounds, rather than return partial
     labels."""
-    # canonical undirected edges (lo, hi), self-loops dropped
-    e = (
-        pairs.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .transform(pin("dedup"))
-    )
-
-    def _sig(edges: DataFrame) -> tuple:
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(lo, hi))").alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
     def _canon(edges: DataFrame) -> DataFrame:
+        # canonical undirected edges (lo, hi), self-loops dropped
         return edges.select(
             F.least("lo", "hi").alias("lo"),
             F.greatest("lo", "hi").alias("hi"),
         ).filter(F.col("lo") != F.col("hi")).distinct()
 
-    sig = _sig(e)
+    def _same(before: DataFrame, after: DataFrame) -> bool:
+        # an empty side has no group: None, equal only to another empty
+        sig = dict(
+            before.select(F.lit(0).alias("side"), "lo", "hi")
+            .union(after.select(F.lit(1), "lo", "hi"))
+            .groupBy("side")
+            .agg(F.expr("struct(count(1), bit_xor(xxhash64(lo, hi)))"))
+            .collect()
+        )
+        return sig.get(0) == sig.get(1)
+
+    e = _canon(
+        pairs.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
+    ).transform(pin("dedup"))
     for _ in range(CC_MAX_ROUNDS):
         # large-star: for every node u (symmetric view), attach each
         # STRICTLY LARGER neighbor to m(u) = min(neighborhood ∪ u)
@@ -517,11 +515,9 @@ def connected_components(
             .select(F.col("v").alias("lo"), F.col("m").alias("hi"))
             .union(m_s.select(F.col("u").alias("lo"), F.col("m").alias("hi")))
         )
-        e = _canon(small).transform(pin("dedup"))
-        new_sig = _sig(e)
-        if new_sig == sig:
+        before, e = e, _canon(small).transform(pin("dedup"))
+        if _same(before, e):
             break
-        sig = new_sig
     else:
         raise RuntimeError(
             f"connected_components did not converge within "
@@ -657,37 +653,37 @@ def all_pairs_jaccard(
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """EXACT all-pairs k-shingle Jaccard join as a brute-force n²
-    cross join — for BOUNDED input only (every caller filters to a
-    small id range first; at that size the prefix join's extra
-    stages cost more than the n² they save). Callers with unbounded
-    input use :func:`jaccard_prefix_join`, the lossless AllPairs
-    prefix-filter join that yields the IDENTICAL pair set (pinned by
-    ``test_all_pairs_jaccard_paths_agree``).
+    """EXACT all-pairs k-shingle Jaccard join as an inverted-index
+    self-join (Vernica et al., SIGMOD 2010): the (doc, shingle)
+    postings equi-join on the shingle and ``count(*)`` per pair is
+    |A∩B|; sets are distinct, so |A∪B| = |A| + |B| − |A∩B|. Pairs
+    sharing no shingle never form (nor do two NULL-text documents).
+    Cost is Σ df(t)² over shared shingles, n² if one shingle is in
+    every document: for BOUNDED input only (callers filter to a small
+    id range). Unbounded callers use :func:`jaccard_prefix_join`, with
+    the IDENTICAL pair set (``test_all_pairs_jaccard_paths_agree``).
+    Measured on q_dedup_keep_best at sf0.01 (2,074 posting pairs; 4
+    vCPU, warm, median of 7, driver JVM plus client CPU): 1.45 CPU-s;
+    the string-set cross join it replaced 2.57, with a length bound
+    and a ``let1``-bound ``array_intersect`` 1.76; the prefix join 2.66.
 
     Returns ``(id_a, id_b, jaccard)`` with id_a < id_b, jaccard
     rounded to 6 places (engine-portable comparison)."""
-    # materialize the shingle arrays before the cross join: projection
-    # collapse would otherwise rebuild each doc's shingles once per
-    # PAIR (n× redundant work); the checkpoint is the bounded input
-    sets = df.select(
-        F.col(id_col), shingles(text_col, k).alias("__set")
-    ).transform(pin("dedup"))
-    a = sets.select(
-        F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")
+    # pinned once: both posting sides read the shingle sets
+    sets = (
+        df.select(F.col(id_col), shingles(text_col, k).alias("__set"))
+        .select(id_col, F.size("__set").alias("__n"), "__set")
+        .transform(pin("dedup"))
     )
-    b = sets.select(
-        F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")
-    )
-    jac = F.round(
-        F.size(F.array_intersect("__sa", "__sb"))
-        / F.size(F.array_union("__sa", "__sb")),
-        6,
-    )
+    post = exploded(sets, F.col("__set"), "__t", keep=[id_col, "__n"])
+    a = post.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"), "__t")
+    b = post.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"), "__t")
+    i = F.count(F.lit(1))
     return (
-        a.crossJoin(b)
+        a.join(b, "__t")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", jac)
+        .groupBy("id_a", "id_b", "__na", "__nb")
+        .agg(F.round(i / (F.col("__na") + F.col("__nb") - i), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

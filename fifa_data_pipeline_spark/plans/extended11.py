@@ -205,8 +205,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     not its first). One window over the component key computes both
     the winner and the member count."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # bounded input → brute-force all_pairs_jaccard (measured faster
-    # here than the prefix join, which unbounded corpora use)
+    # bounded input: all_pairs_jaccard, not the unbounded prefix join
     pairs = D.all_pairs_jaccard(
         docs, "doc_id", "text", k=3, threshold=0.5
     ).select("id_a", "id_b")

@@ -92,17 +92,20 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = events.groupBy(
         F.col("event_type"), daypart.alias("daypart")
     ).agg(F.count(F.lit(1)).alias("o"))
-    rows = obs.groupBy("event_type").agg(F.sum("o").alias("row_n"))
-    cols = obs.groupBy("daypart").agg(F.sum("o").alias("col_n"))
-    tot = obs.agg(
-        F.sum("o").alias("n"),
-        F.count_distinct("event_type").alias("r"),
-        F.count_distinct("daypart").alias("c"),
+    # n, r, c off whole-table windows over the marginals: count_distinct
+    # over obs would add an Expand whose order varies by session
+    whole = Window.partitionBy()
+    rows = obs.groupBy("event_type").agg(F.sum("o").alias("row_n")).select(
+        "*",
+        F.sum("row_n").over(whole).alias("n"),
+        F.count("event_type").over(whole).alias("r"),
+    )
+    cols = obs.groupBy("daypart").agg(F.sum("o").alias("col_n")).select(
+        "*", F.count("daypart").over(whole).alias("c")
     )
     cells = (
         obs.join(F.broadcast(rows), "event_type")
         .join(F.broadcast(cols), "daypart")
-        .crossJoin(F.broadcast(tot))
         .withColumn(
             "e", F.col("row_n") * F.col("col_n") / F.col("n")
         )

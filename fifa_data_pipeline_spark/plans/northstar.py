@@ -78,8 +78,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs 3-gram Jaccard ≥ 0.5 over a bounded id range —
     the oracle-checkable exact counterpart of the LSH pipeline."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # bounded input → brute-force all_pairs_jaccard; unbounded
-    # corpora use the lossless prefix join (q_jaccard_prefix)
+    # bounded input: all_pairs_jaccard, not the unbounded prefix join
     return D.all_pairs_jaccard(docs, "doc_id", "text", k=3, threshold=0.5)
 
 

@@ -338,7 +338,8 @@ def spread(df: DataFrame, multiple: int = 1) -> DataFrame:
     A small parquet table arrives as one split, which would serialize
     e.g. MinHash signature computation onto one core; at production
     scale inputs already have >= cores splits and this is a no-op
-    (the guard keeps it from ever REDUCING parallelism)."""
+    (the guard keeps it from ever REDUCING parallelism). On a derived
+    plan (a join or aggregate) its partition probe runs jobs."""
     target = df.sparkSession.sparkContext.defaultParallelism * multiple
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

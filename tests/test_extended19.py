@@ -59,3 +59,11 @@ def test_top_movers_rank_and_pct(spark, sf_dir):
     for _, sub in got.groupby("wk"):
         s = sub.sort_values("mover_rank")["pct_change"].abs().to_numpy()
         assert (np.diff(s) <= 1e-9).all()
+
+
+def test_chi_square_plan_has_no_expand(spark, sf_dir):
+    """The marginal counts come from the marginal aggregates, not from
+    count_distinct, whose rewrite adds an Expand whose group order
+    depends on what the session built before."""
+    plan = X19.q_chi_square(spark, sf_dir)._jdf.queryExecution()
+    assert "Expand" not in plan.optimizedPlan().toString()

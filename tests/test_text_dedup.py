@@ -178,6 +178,54 @@ def test_all_pairs_jaccard_paths_agree(spark, sf_dir):
     assert rows_b  # non-vacuous: the fixture has near-dup pairs
 
 
+def _shingle_set(text, k=3):
+    """Pure-Python model of ``text.shingles``: distinct word k-grams,
+    or the whole trimmed text for documents shorter than k tokens."""
+    if text is None:
+        return set()
+    toks = text.split()
+    if len(toks) < k:
+        return {text.strip()}
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def test_all_pairs_jaccard_matches_python_model(spark):
+    """all_pairs_jaccard equals a pure-Python Jaccard over the same
+    shingle sets: a pair at exactly the 0.5 threshold, heavy overlap,
+    trigrams repeated inside one document, short documents (one
+    full-text shingle), and two NULL-text documents, which share no
+    shingle and so form no pair."""
+    rows = [
+        (1, "a b c d e"),  # with 2: |A∩B| = 2, |A| = |B| = 3 → 0.5
+        (2, "a b c d x"),
+        (3, "p q r s t u v w"),
+        (4, "p q r s t u v"),
+        (5, "p q r s t u v w z"),
+        (6, "x y z x y z x y z"),  # 7 trigrams, 3 distinct
+        (7, "x y z x y z"),
+        (8, "x y z x"),
+        (9, None),
+        (10, None),
+        (11, "hi there"),
+        (12, " hi there "),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(map(tuple, D.all_pairs_jaccard(df).collect()))
+    sets = {i: _shingle_set(t) for i, t in rows}
+    want = []
+    for a in sets:
+        for b in sets:
+            if a < b and sets[a] & sets[b]:
+                jac = round(
+                    len(sets[a] & sets[b]) / len(sets[a] | sets[b]), 6
+                )
+                if jac >= 0.5:
+                    want.append((a, b, jac))
+    assert got == sorted(want)
+    assert (1, 2, 0.5) in got and (11, 12, 1.0) in got
+    assert not [p for p in got if {9, 10} & set(p[:2])]
+
+
 def test_repeated_ngram_spans_finds_cross_doc_span(spark):
     """Two docs share an exact 4-token run; a third is unique. Only
     the shared positions are reported, with correct 1-based offsets."""
