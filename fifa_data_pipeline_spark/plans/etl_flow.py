@@ -5,8 +5,8 @@
 | reference stage | here |
 |---|---|
 | Kaggle download + GCS upload (S1/S2, ``:21-62``) | `land_csvs` exports the source tables to a CSV landing zone (the engine ingests landed files; the HTTP fetch itself is out-of-engine by design, SURVEY §2.1) |
-| external tables, inferred schema (S3/S4, ``:65-78,114-127``) | `read_csv_inferred` + temp views |
-| CTAS materialize: typed + filtered + partitioned + clustered (S5/S6, ``:81-111,130-163``) | cast projection + quality filter + `write_clustered` |
+| external tables, inferred schema (S3/S4, ``:65-78,114-127``) | `read_csv_typed` with the CTAS column types pinned + temp views |
+| CTAS materialize: typed + filtered + partitioned + clustered (S5/S6, ``:81-111,130-163``) | quality filter + `write_clustered` |
 | Dataproc Spark job: the analytics query (``fifa_spark.py``) | `flagship_from` over the MATERIALIZED tables |
 | BigQuery sink (S8, ``fifa_spark.py:102-104``) | `write_table` parquet |
 
@@ -16,11 +16,12 @@ reference (which logs and ignores the Dataproc return code,
 ``:204``), failures propagate.
 
 Scale: the landing/external stages are per-row streams (no shuffle);
-materialization shuffles once per table on the partition column
-(`write_clustered`); the flagship's plan is unchanged from
-`plans/flagship.py` (3 exchanges). The CSV hop exists for reference
-parity — a production pipeline at 100 TB lands parquet and skips
-straight to materialize.
+the scan pins the CTAS types, so each landed file is read once, with
+no inference pass. Materialization shuffles once per table on the
+partition column (`write_clustered`); the flagship's plan is unchanged
+from `plans/flagship.py` (3 exchanges). The CSV hop exists for
+reference parity — a production pipeline at 100 TB lands parquet and
+skips straight to materialize.
 """
 
 from __future__ import annotations
@@ -33,15 +34,15 @@ from pyspark.sql import functions as F
 from fifa_data_pipeline_spark.operators.util import scratch_dir
 from fifa_data_pipeline_spark.plans.flagship import flagship_from
 from fifa_data_pipeline_spark.sources.io import (
-    read_csv_inferred,
+    read_csv_typed,
     read_table,
     write_clustered,
     write_csv,
     write_table,
 )
 
-#: (table, cast-projection, quality filter, partition col, cluster cols)
-#: — the analogue of the reference's two CTAS statements
+#: (table, column types in file order, quality filter, partition col,
+#: cluster cols) — the analogue of the reference's two CTAS statements
 #: (16/19-column cast lists + WHERE, ``etl_kaggle_to_big_query.py:86-163``).
 _MATERIALIZE = {
     "orders": (
@@ -104,17 +105,15 @@ def land_csvs(spark: SparkSession, sf_dir: str, landing_dir: str) -> None:
 
 
 def materialize(spark: SparkSession, landing_dir: str, warehouse_dir: str) -> None:
-    """S3-S6: schema-on-read external scan of each landed CSV, then
-    the typed/filtered/partitioned/clustered CREATE-OR-REPLACE
+    """S3-S6: external scan of each landed CSV with the CTAS types,
+    then the filtered/partitioned/clustered CREATE-OR-REPLACE
     materialization."""
-    for name, (casts, quality, part_col, cluster_cols) in _MATERIALIZE.items():
-        ext = read_csv_inferred(spark, os.path.join(landing_dir, name))
+    for name, (types, quality, part_col, cluster_cols) in _MATERIALIZE.items():
+        schema = ", ".join(f"{c} {t}" for c, t in types.items())
+        ext = read_csv_typed(spark, os.path.join(landing_dir, name), schema)
         ext.createOrReplaceTempView(f"ext_{name}")  # S3/S4 register
-        typed = ext.select(
-            *[F.col(c).cast(t).alias(c) for c, t in casts.items()]
-        ).filter(F.expr(quality))
         write_clustered(
-            typed,
+            ext.filter(F.expr(quality)),
             os.path.join(warehouse_dir, name),
             partition_by=[part_col],
             cluster_by=cluster_cols,

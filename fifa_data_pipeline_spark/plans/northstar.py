@@ -636,13 +636,8 @@ ORACLES["q_knn_join"] = ORACLES["q_knn_exact"]
 # LSH-family oracles
 # ---------------------------------------------------------------------------
 # MinHash: the verify stage is exact Jaccard and LSH recall is 1.0 at
-# oracle scale (measured), so the output equals brute-force all-pairs.
-
-_JACCARD = (
-    "ROUND(len(list_intersect(a.s, b.s)) / "
-    "len(list_distinct(list_concat(a.s, b.s))), 6)"
-)
-
+# oracle scale (measured), so the output equals exact all-pairs Jaccard,
+# here a shingle-posting self-join (on sets, |A∪B| = na + nb - |A∩B|).
 _SHINGLES_CTE = f"""
         WITH t AS (
           SELECT doc_id, {_TOKS} AS toks FROM documents
@@ -651,10 +646,13 @@ _SHINGLES_CTE = f"""
             [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
              for i in range(1, len(toks) - 1)]) AS s
           FROM t
+        ), post AS (
+          SELECT doc_id, len(s) AS n, unnest(s) AS sh FROM g
         ), pairs AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_JACCARD} AS jaccard
-          FROM g a, g b
-          WHERE a.doc_id < b.doc_id AND {_JACCARD} >= 0.6
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                 ROUND(count(*) / (a.n + b.n - count(*)), 6) AS jaccard
+          FROM post a JOIN post b ON a.sh = b.sh AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id, a.n, b.n HAVING jaccard >= 0.6
         )
 """
 

@@ -1,6 +1,6 @@
 from fifa_data_pipeline_spark.sources.io import (
     TABLES,
-    read_csv_inferred,
+    read_csv_typed,
     read_table,
     register_views,
     write_clustered,
@@ -9,7 +9,7 @@ from fifa_data_pipeline_spark.sources.io import (
 
 __all__ = [
     "TABLES",
-    "read_csv_inferred",
+    "read_csv_typed",
     "read_table",
     "register_views",
     "write_clustered",

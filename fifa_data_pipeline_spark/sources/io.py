@@ -2,10 +2,11 @@
 
 The reference's source surface is: CSV external tables with inferred
 schema (S3/S4, reference ``prefect/flows/etl_kaggle_to_big_query.py:65-78,
-114-127``), CTAS materialization into typed + partitioned + clustered
-tables (S5/S6, ``:81-111,130-163``), table scans registered as temp
-views (S7/S9, ``prefect/spark/fifa_spark.py:24-32``), and a table sink
-(S8, ``fifa_spark.py:102-104``). Here each becomes a thin wrapper over
+114-127``; read here with the types the CTAS declares), CTAS
+materialization into typed + partitioned + clustered tables (S5/S6,
+``:81-111,130-163``), table scans registered as temp views (S7/S9,
+``prefect/spark/fifa_spark.py:24-32``), and a table sink (S8,
+``fifa_spark.py:102-104``). Here each becomes a thin wrapper over
 ``spark.read`` / ``DataFrameWriter`` so Catalyst sees a plain
 declarative scan/write and can push filters and prune columns/
 partitions on its own.
@@ -346,23 +347,19 @@ def spread(df: DataFrame, multiple: int = 1) -> DataFrame:
     return df
 
 
-def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-on-read CSV scan (S3/S4: BigQuery external table with
-    inferred schema, reference ``etl_kaggle_to_big_query.py:70-78``).
-
-    Scale note: ``inferSchema`` runs an extra pass over the data; at
-    real scale, sample-infer once, then pin the schema with
-    ``spark.read.schema(st).csv(path)`` — see ``infer_then_pin``.
-    """
-    return spark.read.option("header", True).option("inferSchema", True).csv(path)
-
-
-def infer_then_pin(spark: SparkSession, sample_path: str, full_path: str) -> DataFrame:
-    """Infer a schema from a small sample, then scan the full data with
-    the pinned schema (single pass — the 100 TB-safe variant of S3/S4).
-    """
-    schema = read_csv_inferred(spark, sample_path).schema
-    return spark.read.option("header", True).schema(schema).csv(full_path)
+def read_csv_typed(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """CSV scan with a DDL ``schema`` that lists every column in file
+    order (S3/S4 read with the CTAS's types, reference
+    ``etl_kaggle_to_big_query.py:70-78``): one pass, no inference. A
+    header that is not that column list, or a value that does not
+    parse as its column's type, fails the read."""
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
+        .option("enforceSchema", False)
+        .option("mode", "FAILFAST")
+        .csv(path)
+    )
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -35,7 +35,6 @@ TEST_REFERENCES = {
     "fs_link": "per-pair Fellegi-Sunter reference in test_linkage",
     "repeated_ngram_spans": "raw-gram reference for _dup_span_positions "
     "(test_hashed_span_positions_match_raw_gram_path)",
-    "infer_then_pin": "COVERAGE.md maps reference operators S3/S4 to it",
     "sweep_materialized": "the only cleanup for scratch tables written "
     "under SPARK_GRAFT_MATERIALIZE=table",
     "clear_footer_caches": "test seam that resets the footer caches",

@@ -1,4 +1,4 @@
-"""Source/sink tests (SURVEY.md §2.1): CSV schema-on-read, CTAS-style
+"""Source/sink tests (SURVEY.md §2.1): typed CSV scan, CTAS-style
 partitioned+clustered write, plain parquet sink, view registration."""
 
 from __future__ import annotations
@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fifa_data_pipeline_spark.sources import io
+
+NATION_DDL = "n_nationkey int, n_name string, n_regionkey int"
 
 
 def test_read_table_and_register_views(spark, sf_dir):
@@ -18,21 +20,27 @@ def test_read_table_and_register_views(spark, sf_dir):
     assert out.count() == 5
 
 
-def test_csv_inferred_roundtrip(spark, sf_dir, tmp_path):
+def test_csv_typed_roundtrip(spark, sf_dir, tmp_path):
     nation = io.read_table(spark, sf_dir, "nation")
     csv_path = str(tmp_path / "nation_csv")
     nation.write.option("header", True).mode("overwrite").csv(csv_path)
-    back = io.read_csv_inferred(spark, csv_path)
+    back = io.read_csv_typed(spark, csv_path, NATION_DDL)
     assert {f.name for f in back.schema.fields} == set(nation.columns)
     assert isinstance(back.schema["n_nationkey"].dataType, T.IntegerType)
     assert back.count() == 25
 
 
-def test_infer_then_pin(spark, sf_dir, tmp_path):
+def test_csv_typed_pins_declared_types(spark, sf_dir, tmp_path):
+    # the declared schema wins over what the values look like: a key
+    # column declared bigint stays bigint, a numeric one read as string
     nation = io.read_table(spark, sf_dir, "nation")
     csv_path = str(tmp_path / "nation_csv2")
     nation.write.option("header", True).mode("overwrite").csv(csv_path)
-    df = io.infer_then_pin(spark, csv_path, csv_path)
+    df = io.read_csv_typed(
+        spark, csv_path, "n_nationkey bigint, n_name string, n_regionkey string"
+    )
+    assert isinstance(df.schema["n_nationkey"].dataType, T.LongType)
+    assert isinstance(df.schema["n_regionkey"].dataType, T.StringType)
     assert df.count() == 25
 
 
@@ -66,7 +74,7 @@ def test_csv_export_roundtrip(spark, sf_dir, tmp_path):
     nation = io.read_table(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_csv")
     io.write_csv(nation, path)
-    back = io.read_csv_inferred(spark, path)
+    back = io.read_csv_typed(spark, path, NATION_DDL)
     assert back.count() == 25
     assert {r.n_name for r in back.collect()} == {r.n_name for r in nation.collect()}
 
