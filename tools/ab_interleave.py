@@ -19,7 +19,9 @@ Usage::
 only to the NEW side — that turns the tool into an order-balanced
 CONFIG A/B on a single tree (pass the same dir to --base/--new).
 Prints one JSON line: per-query base/new minima and ratios, plus
-geomean.
+geomean, and next to them each side's codegen compiles per query: one
+``[cold, run 2, run 3]`` list per wave (``bench_subset``'s
+``compiles``; ``null`` for a tree whose ``bench_subset`` predates it).
 """
 
 from __future__ import annotations
@@ -33,6 +35,8 @@ import sys
 
 
 def run_subset(tree: str, sf: str, names: list[str], env: dict) -> dict:
+    """One ``bench_subset`` session: its JSON record (``queries``,
+    ``compiles``, ...). Raises if the session crashed."""
     cmd = [sys.executable, os.path.join(tree, "tools", "bench_subset.py"), sf, *names]
     proc = subprocess.run(
         cmd, cwd=tree, capture_output=True, text=True,
@@ -48,7 +52,7 @@ def run_subset(tree: str, sf: str, names: list[str], env: dict) -> dict:
         print(proc.stdout[-2000:], file=sys.stderr)
         print(proc.stderr[-2000:], file=sys.stderr)
         raise RuntimeError(f"bench_subset produced no JSON in {tree}")
-    return json.loads(line[-1])["queries"]
+    return json.loads(line[-1])
 
 
 def main() -> int:
@@ -67,19 +71,25 @@ def main() -> int:
 
     base_min: dict[str, float] = {}
     new_min: dict[str, float] = {}
+    base_compiles: dict[str, list] = {q: [] for q in args.queries}
+    new_compiles: dict[str, list] = {q: [] for q in args.queries}
     sides = [
-        ("base", args.base, env_both, base_min),
-        ("new", args.new, env_new, new_min),
+        ("base", args.base, env_both, base_min, base_compiles),
+        ("new", args.new, env_new, new_min, new_compiles),
     ]
     for wave in range(args.waves):
         order = sides if wave % 2 == 0 else sides[::-1]
-        for label, tree, env, acc in order:
-            got = run_subset(tree, args.sf, args.queries, env)
+        for label, tree, env, acc, comp in order:
+            rec = run_subset(tree, args.sf, args.queries, env)
+            got = rec["queries"]
             for q, s in got.items():
                 acc[q] = min(acc.get(q, float("inf")), s)
+            for q in args.queries:
+                comp[q].append(rec.get("compiles", {}).get(q))
             print(
                 f"wave {wave} {label}: "
-                + " ".join(f"{q}={got[q]}" for q in args.queries),
+                + " ".join(f"{q}={got[q]} (compiles {comp[q][-1]})"
+                           for q in args.queries),
                 file=sys.stderr,
             )
     ratios = {
@@ -102,6 +112,8 @@ def main() -> int:
                 "waves": args.waves,
                 "base_min": base_min,
                 "new_min": new_min,
+                "base_compiles": base_compiles,
+                "new_compiles": new_compiles,
                 "speedup_base_over_new": ratios,
                 "geomean_speedup": geo,
             }

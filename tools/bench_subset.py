@@ -4,7 +4,11 @@ arbitrary query list and SF dir. Usage::
 
     python tools/bench_subset.py <sf_dir> <query> [query ...]
 
-Prints one JSON line {"sf_dir": ..., "queries": {name: sec}}.
+Prints one JSON line {"sf_dir": ..., "queries": {name: sec},
+"cold": {name: sec}, "compiles": {name: [n1, n2, n3]}}: the min and
+the first of the three runs, and the whole-stage-codegen classes each
+run compiled (Spark's ``CodegenMetrics`` compile count), cold run
+first.
 Used for quiet-session A/Bs and the sf10 scale probe (r9) without
 dragging the whole 172-query HEADLINE suite through a large SF.
 """
@@ -28,18 +32,23 @@ def main() -> int:
 
     spark = get_spark("bench-subset")
     queries = entrymod.queries()
+    jvm = spark.sparkContext._jvm
+    compile_timer = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
 
-    def run(name: str) -> float:
+    def run(name: str) -> tuple[float, int]:
+        """Seconds and codegen compiles of one build + noop write."""
+        c0 = compile_timer.getCount()
         t0 = time.perf_counter()
         df = queries[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        secs = time.perf_counter() - t0
+        return secs, compile_timer.getCount() - c0
 
     run("q_flagship")  # JVM/codegen/footer warmup, as in bench.py
 
     import gc as _gc
-
-    jvm = spark.sparkContext._jvm
 
     def _gc_both() -> None:
         _gc.collect()
@@ -47,6 +56,7 @@ def main() -> int:
 
     out: dict[str, float] = {}
     cold: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
     for name in names:
         # GC both heaps between EVERY run: at sf10 a single query's
         # shuffle/broadcast residue inflates its own subsequent runs
@@ -57,9 +67,13 @@ def main() -> int:
         for _ in range(3):
             runs.append(run(name))
             _gc_both()
-        cold[name] = round(runs[0], 4)
-        out[name] = round(min(runs), 4)
-    print(json.dumps({"sf_dir": sf_dir, "queries": out, "cold": cold}))
+        secs = [s for s, _ in runs]
+        cold[name] = round(secs[0], 4)
+        out[name] = round(min(secs), 4)
+        compiles[name] = [c for _, c in runs]
+    print(json.dumps(
+        {"sf_dir": sf_dir, "queries": out, "cold": cold, "compiles": compiles}
+    ))
     spark.stop()
     return 0
 
