@@ -28,7 +28,7 @@ another; route them to exact dedup by fingerprint instead).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from fifa_data_pipeline_spark.operators.text import (
@@ -442,8 +442,8 @@ def fuzzy_name_pairs(
 # ---------------------------------------------------------------------------
 
 # Round cap of :func:`connected_components`. Star contraction needs
-# O(log n) rounds on any topology (a 1000-node chain takes 11, a
-# 5000-node one 14), so the cap sits far above what dedup graphs need.
+# O(log n) rounds on any topology (a 1000-node chain takes 10, a
+# 5000-node one 13), so the cap sits far above what dedup graphs need.
 CC_MAX_ROUNDS = 30
 
 
@@ -463,75 +463,65 @@ def connected_components(
 
     Star contraction converges in O(log n) rounds on any topology —
     long chains included — and monotonically shrinks the edge set
-    toward one star per component. Each round is two grouped-min +
-    join passes over the current edge set (shuffle key = node id),
-    with a per-round ``localCheckpoint`` and one ``collect``: (count,
-    order-free hash fold) of the round's input and output edge sets.
-    Raises ``RuntimeError`` if the edge set has not stopped changing
-    after ``CC_MAX_ROUNDS`` rounds, rather than return partial
-    labels."""
-    def _canon(edges: DataFrame) -> DataFrame:
-        # canonical undirected edges (lo, hi), self-loops dropped
-        return edges.select(
-            F.least("lo", "hi").alias("lo"),
-            F.greatest("lo", "hi").alias("hi"),
-        ).filter(F.col("lo") != F.col("hi")).distinct()
+    toward one star per component, centered at its minimum. The loop
+    keeps the symmetric view ``(u, v)`` of the distinct edges with
+    ``m = min(neighborhood(u) ∪ u)``, computed by a window over ``u``
+    behind the ONE shuffle that also removes duplicates. Each round
+    is one Spark action, its eager pin, of two shuffles: the
+    small-star window over ``hi``, then that ``u`` shuffle.
+    The pinned frame carries an ``Observation`` counting the rows of
+    nodes that break the star shape (``u`` has a smaller neighbor and
+    a second one), so the pin's own job tells the loop to stop when
+    the edges ARE the stars: the labels are then ``m``, with no
+    confirming round (the input edges are pinned the same way). Raises
+    ``RuntimeError`` if the edges are not stars after ``CC_MAX_ROUNDS``
+    rounds, rather than return partial labels."""
+    w = Window.partitionBy("u")
 
-    def _same(before: DataFrame, after: DataFrame) -> bool:
-        # an empty side has no group: None, equal only to another empty
-        sig = dict(
-            before.select(F.lit(0).alias("side"), "lo", "hi")
-            .union(after.select(F.lit(1), "lo", "hi"))
-            .groupBy("side")
-            .agg(F.expr("struct(count(1), bit_xor(xxhash64(lo, hi)))"))
-            .collect()
+    def _pinned(edges: DataFrame) -> tuple[DataFrame, int]:
+        obs = Observation()
+        sym = (
+            edges.union(edges.select("hi", "lo")).toDF("u", "v")
+            .filter("u != v")
+            .repartition("u")  # serves both the distinct and the window
+            .distinct()
+            .select(
+                "u", "v",
+                F.least(F.min("v").over(w), "u").alias("m"),
+                F.max("v").over(w).alias("top"),
+            )
+            .observe(obs, F.expr("count_if(m < u AND top > m) AS bad"))
+            .select("u", "v", "m")
         )
-        return sig.get(0) == sig.get(1)
+        return sym.transform(pin("dedup", eager=True)), obs.get["bad"]
 
-    e = _canon(
+    s, bad = _pinned(
         pairs.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
-    ).transform(pin("dedup"))
+    )
     for _ in range(CC_MAX_ROUNDS):
-        # large-star: for every node u (symmetric view), attach each
-        # STRICTLY LARGER neighbor to m(u) = min(neighborhood ∪ u)
-        sym = e.select(
-            F.col("lo").alias("u"), F.col("hi").alias("v")
-        ).union(e.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
-        m_u = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.join(m_u, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("lo"), F.col("m").alias("hi"))
-        )
-        e1 = _canon(large).transform(pin("dedup"))
-        # small-star: orient edges large→small; for every node u,
-        # attach u and all its SMALLER neighbors to the minimum
-        ori = e1.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        m_s = ori.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            ori.join(m_s, "u")
-            .select(F.col("v").alias("lo"), F.col("m").alias("hi"))
-            .union(m_s.select(F.col("u").alias("lo"), F.col("m").alias("hi")))
-        )
-        before, e = e, _canon(small).transform(pin("dedup"))
-        if _same(before, e):
+        if not bad:
             break
-    else:
+        # large-star: attach each STRICTLY LARGER neighbor v of u to m
+        large = s.filter("v > u").select(
+            F.col("m").alias("lo"), F.col("v").alias("hi")
+        )
+        # small-star: attach hi and all its SMALLER neighbors lo to their
+        # minimum (computed before the generator, which cannot hold a
+        # window); duplicate edges change no minimum
+        small = large.select(
+            "lo", "hi", F.min("lo").over(Window.partitionBy("hi")).alias("m")
+        ).select(
+            F.col("m").alias("lo"), F.explode(F.array("lo", "hi")).alias("hi")
+        )
+        s, bad = _pinned(small)
+    if bad:
         raise RuntimeError(
             f"connected_components did not converge within "
             f"CC_MAX_ROUNDS={CC_MAX_ROUNDS} rounds"
         )
-    # converged: one star per component, centered at its minimum. Both
-    # star steps keep every node on some edge, so the edges cover all
-    # nodes of the input pairs.
-    return (
-        e.select(F.col("hi").alias("node"), F.col("lo").alias("label"))
-        .union(e.select(F.col("lo").alias("node"), F.col("lo").alias("label")))
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
+    # stars centered at their minimum: a leaf's m is its center, a
+    # center's m is itself
+    return s.groupBy(F.col("u").alias("node")).agg(F.min("m").alias("label"))
 
 
 def incremental_dedup(

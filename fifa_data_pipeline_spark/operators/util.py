@@ -111,11 +111,14 @@ def materialize_once(
 
     ``mode``:
 
-    - ``'local'`` (default): lazy ``localCheckpoint`` — free of
-      CacheManager plan-substitution leakage (the r5 persist()
-      incident), blocks released by the ContextCleaner when the
-      frame goes out of scope. Executor-LOCAL blocks: right for the
-      single-JVM bench box, NOT durable to executor loss.
+    - ``'local'`` (default): ``localCheckpoint``, NOT lazy under AQE
+      even with ``eager=False``: the call runs every shuffle stage of
+      the plan (a pinned one-shuffle ``distinct`` runs one job), and
+      ``eager`` adds the final stage. Free of CacheManager
+      plan-substitution leakage (the r5 persist() incident), blocks
+      released by the ContextCleaner when the frame goes out of scope.
+      Executor-LOCAL blocks: right for the single-JVM bench box, NOT
+      durable to executor loss.
     - ``'table'``: write the frame to a short-lived parquet table
       under the warehouse dir and read it back — survives executor
       loss, the cluster-scale choice. Both nondeterministic layout
@@ -186,7 +189,9 @@ def pin(
     checkpoint-per-round cluster posture. Streaming ``foreachBatch``
     pins deliberately stay on raw ``localCheckpoint``: micro-batch
     replay already provides fault tolerance there, so a durable
-    scratch write per batch would be pure overhead."""
+    scratch write per batch would be pure overhead. Either mode runs
+    the plan's shuffle stages inside the call (see
+    :func:`materialize_once`), so a pin is a driver round trip."""
 
     def _pin(df: DataFrame) -> DataFrame:
         return materialize_once(df, mode=mode, eager=eager, name=name)

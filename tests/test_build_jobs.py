@@ -1,6 +1,7 @@
 """Build-job regression net: the Spark jobs a query launches while its
-DataFrame is being BUILT (eager pins, convergence ``collect``s,
-partition probes) must equal the count pinned in
+DataFrame is being BUILT (eager pins, including the connected-
+components round pins whose ``Observation`` tells the loop when to
+stop, and partition probes) must equal the count pinned in
 ``tools/build_job_pins.json``. A new eager round trip fails here; a
 deliberate one, or a win that removes one, updates the pin.
 

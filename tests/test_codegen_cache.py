@@ -2,7 +2,7 @@
 reuse the classes its first run compiled. At Spark's default cache of
 100 entries the repeat of q_dedup_keep_best or q_etl_flow re-compiled
 25-44 classes; ``session.get_spark`` sizes the cache for the session,
-so a repeat compiles (nearly) nothing. The count is read from Spark's
+so a repeat compiles nothing. The count is read from Spark's
 ``CodegenMetrics`` compile timer."""
 
 from __future__ import annotations
@@ -12,10 +12,11 @@ import pytest
 import __spark_entry__ as entrymod
 
 QUERIES = entrymod.queries()
-#: compiles a repeat may still need: AQE can plan a join differently
-#: when its stages finish in another order (measured: 0, 2 or 4 on
-#: q_dedup_keep_best, always 0 on q_etl_flow)
-REPEAT_RESIDUAL = 8
+#: compiles a repeat may still need (measured: 0 on every repeat of
+#: both queries). A nonzero count means a plan that differs from run
+#: to run, such as a join whose strategy AQE picks from the order its
+#: stages finish (2-4 classes on a repeat)
+REPEAT_RESIDUAL = 0
 
 
 def _compiles(spark, name: str, sf_dir: str) -> int:

@@ -529,6 +529,46 @@ def test_connected_components_raises_at_round_cap(spark, monkeypatch):
         D.connected_components(df)
 
 
+#: duplicate pairs, both orientations and self-loops (node 20 is only
+#: in one, so it gets no label)
+MESSY_PAIRS = [
+    (3, 1), (1, 3), (1, 3), (3, 5), (5, 3), (5, 5), (7, 5), (7, 7),
+    (9, 8), (8, 9), (8, 9), (12, 11), (20, 20),
+]
+
+
+@pytest.mark.parametrize("mode", ["local", "table"])
+def test_star_components_messy_pairs(spark, monkeypatch, mode):
+    # 'table' pins write and read back: the round's Observation must
+    # fire on the write path too
+    from fifa_data_pipeline_spark.operators.util import MATERIALIZE_MODE_ENV
+
+    monkeypatch.setenv(MATERIALIZE_MODE_ENV, mode)
+    df = spark.createDataFrame(MESSY_PAIRS, "id_a long, id_b long")
+    got = {(r.node, r.label) for r in D.connected_components(df).collect()}
+    assert got == _propagated_labels([(a, b) for a, b in MESSY_PAIRS if a != b])
+
+
+def test_star_round_is_one_action(spark):
+    """Round shape guard: the 49-edge chain is a star after 6 rounds.
+    The observed input pin runs 2 jobs (its one shuffle, then the
+    pin) and each round's pin 3 (its two shuffles, then the pin); a
+    per-round ``collect``, a second pin or a confirming round adds
+    jobs and fails here."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    group = "cc_round_shape"
+    sc.setJobGroup(group, group)
+    try:
+        D.connected_components(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 + 6 * 3
+
+
 def test_token_counts_size_adaptive_branches_equal(spark):
     """The r10 size-adaptive switch: the Arrow/RE2 kernel branch
     (input_bytes=None → scale default) and the JVM expression branch
